@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Jobs
+
 /** Distributed connected components by iterative min-label propagation —
   * the clustering step that turns near-duplicate PAIRS (MinHash/SimHash
   * output) into dedup GROUPS with one canonical representative each.
@@ -230,12 +232,7 @@ object ConnectedComponents {
     }
 
     val sc = edges.sparkSession.sparkContext
-    def jobLabel[T](desc: String)(f: => T): T = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(desc)
-      try f finally sc.setJobDescription(prev)
-    }
-    var cur = jobLabel("star-cc: canon")(canon(edges).localCheckpoint())
+    var cur = Jobs.labeled(sc, "star-cc: canon")(canon(edges).localCheckpoint())
     var curCount = cur.count()
     var iter = 0
     var converged = curCount == 0
@@ -248,7 +245,7 @@ object ConnectedComponents {
       // closing canon dedups — so the fused round computes exactly the
       // canonical set the unfused one did, one distinct cheaper.
       val curDirected = cur.select(col("lo").as("src"), col("hi").as("dst"))
-      val next = jobLabel(s"star-cc: round ${iter + 1}")(
+      val next = Jobs.labeled(sc, s"star-cc: round ${iter + 1}")(
         canon(phase(phase(curDirected, large = true), large = false))
           .localCheckpoint())
       val nextCount = next.count()

@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.TextAnalysis
 
@@ -22,60 +20,36 @@ import graft.textops.TextAnalysis
   * (each page's links arrive once — the crawl contract; a re-crawled
   * page is a new version and re-counts). State is (host × distinct
   * anchors)-keyed — bounded by the anchor vocabulary, not by pages.
+  * Both forms are [[FoldSession]]s over one sum-folded part.
   */
 object StreamAnchorText {
+  import FoldSession.{Part, sumBy}
+
+  private val CountSchema =
+    StructType.fromDDL("host STRING, anchor STRING, n_links BIGINT, n_pages BIGINT")
+
+  private def counts(idCol: String, htmlCol: String) =
+    Part(TextAnalysis.anchorTextPanel(_, idCol, htmlCol),
+      sumBy("host", "anchor")("n_links", "n_pages"), schema = CountSchema)
 
   /** In-memory session: one localCheckpointed count frame. */
   final class AnchorTextSession(spark: SparkSession, idCol: String,
-      htmlCol: String) {
-    @volatile private var counts: DataFrame = null
+      htmlCol: String)
+      extends FoldSession.InMemory("anchor text", counts(idCol, htmlCol)) {
 
-    def currentPanel: DataFrame = {
-      require(counts != null, "panel requested before any ingest")
-      counts
-    }
+    def currentPanel: DataFrame = required("panel")
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = TextAnalysis.anchorTextPanel(batch, idCol, htmlCol)
-      counts = (if (counts == null) delta else mergeCounts(counts, delta))
-        .localCheckpoint()
-    }
-
-    def start(pages: DataFrame): StreamingQuery =
-      pages.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private[streaming] def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("host"), col("anchor")).agg(
-      sum(col("n_links")).as("n_links"), sum(col("n_pages")).as("n_pages"))
-
-  private val CountSchema = StructType(Seq(
-    StructField("host", StringType), StructField("anchor", StringType),
-    StructField("n_links", LongType), StructField("n_pages", LongType)))
 
   /** Durable session: per-batch deltas in one sum-foldable ledger. */
   final class DurableAnchorTextSession(spark: SparkSession, path: String,
-      idCol: String, htmlCol: String, compactEvery: Int = 0) {
+      idCol: String, htmlCol: String, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "anchor text", path, compactEvery,
+        counts(idCol, htmlCol)) {
 
-    def currentPanel: DataFrame =
-      DurableLedger.load(spark, path, CountSchema)
-        .groupBy(col("host"), col("anchor")).agg(
-          sum(col("n_links")).as("n_links"), sum(col("n_pages")).as("n_pages"))
+    def currentPanel: DataFrame = state()
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        TextAnalysis.anchorTextPanel(batch, idCol, htmlCol), path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, CountSchema, compactEvery)
-    }
-
-    def start(pages: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = pages.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

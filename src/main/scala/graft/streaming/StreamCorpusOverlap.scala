@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.NearDup
 
@@ -26,10 +26,9 @@ import graft.textops.NearDup
   * driver (its own bottom-k via TakeOrdered after a
   * map-side-combined distinct); the session state is k longs. Merge is
   * union+sort+take — associative, commutative, idempotent, so replays
-  * and out-of-order deliveries cannot corrupt it. Persisting the
-  * k-long state through a [[DurableLedger]] batch directory (commit
-  * the full sketch, newest batch wins) is a one-liner for deployments
-  * that must survive restarts.
+  * and out-of-order deliveries cannot corrupt it.
+  * [[DurableOverlapSession]] persists it as a [[FoldSession]] ledger
+  * for deployments that must survive restarts.
   */
 object StreamCorpusOverlap {
 
@@ -91,9 +90,12 @@ object StreamCorpusOverlap {
   }
 
   /** Maintains the ingested corpus's sketch; compare against any
-    * reference sketch at a batch boundary with [[overlapWith]].
+    * reference sketch at a batch boundary with [[overlapWith]]. The
+    * state is a driver `Vector`, so the session only borrows
+    * [[FoldSession]]'s `start`.
     */
-  final class OverlapSession(textCol: String, k: Int, shingleWords: Int = 3) {
+  final class OverlapSession(textCol: String, k: Int, shingleWords: Int = 3)
+      extends FoldSession {
     @volatile private var state: Vector[Long] = Vector.empty
 
     /** The corpus-so-far's bottom-k sketch (sorted ascending). */
@@ -103,57 +105,44 @@ object StreamCorpusOverlap {
     def ingest(batch: DataFrame): Unit =
       state = merge(state, sketch(batch, textCol, k, shingleWords), k)
 
+    protected def step(batch: DataFrame, batchId: Long): Unit = ingest(batch)
+
     /** Overlap statistics vs a reference sketch (same k), exactly the
       * batch operator's row for (corpus-so-far, reference).
       */
     def overlapWith(reference: Vector[Long]): OverlapEstimate =
       estimate(state, reference, k)
+  }
 
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+  private def sketchRows(spark: SparkSession, textCol: String, k: Int,
+      shingleWords: Int)(batch: DataFrame): DataFrame = {
+    import spark.implicits._
+    sketch(batch, textCol, k, shingleWords).toDF("h")
   }
 
   /** [[OverlapSession]] with the sketch in a [[DurableLedger]] parquet
     * table — survives process restarts. Each batch commits its OWN
     * bottom-k contribution (a deterministic function of the batch
-    * alone, so replays rewrite identical rows), and the current sketch
-    * is the re-min of every committed directory — exact because merge
-    * is associative and idempotent, which also means
-    * [[DurableLedger.compact]] folds these directories freely
-    * (`compactEvery > 0` auto-folds at the end of each ingest).
+    * alone), and the current sketch is the re-min of every committed
+    * directory — exact because merge is associative and idempotent,
+    * which also means [[DurableLedger.compact]] folds these directories
+    * freely (`compactEvery > 0` auto-folds at the end of each ingest).
     */
-  final class DurableOverlapSession(spark: org.apache.spark.sql.SparkSession,
+  final class DurableOverlapSession(spark: SparkSession,
       path: String, textCol: String, k: Int, shingleWords: Int = 3,
-      compactEvery: Int = 0) {
-    import org.apache.spark.sql.types._
-    private val schema = StructType(Seq(StructField("h", LongType)))
+      compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "corpus overlap", path, compactEvery,
+        FoldSession.Part(sketchRows(spark, textCol, k, shingleWords),
+          _.distinct().orderBy(col("h").asc).limit(k),
+          schema = StructType.fromDDL("h BIGINT"))) {
 
     /** The committed corpus sketch: re-min over every batch directory. */
     def currentSketch: Vector[Long] =
-      DurableLedger.load(spark, path, schema)
-        .distinct().orderBy(col("h").asc).limit(k)
-        .collect().map(_.getLong(0)).toVector
+      state().collect().map(_.getLong(0)).toVector
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      import spark.implicits._
-      DurableLedger.commit(
-        sketch(batch, textCol, k, shingleWords).toDF("h"), path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, schema, compactEvery)
-      ()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
 
     def overlapWith(reference: Vector[Long]): OverlapEstimate =
       estimate(currentSketch, reference, k)
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained approximate distinct counts per stratum —
   * the "distinct URLs / domains / shingles per source" corpus stat a
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructTy
   * sketch per stratum; sketches merge by register-max — associative,
   * commutative, and idempotent at the register level, so at-least-once
   * delivery never INFLATES an estimate the way additive counters do
-  * (the durable ledger also overwrites by batch id for exactly-once
-  * hygiene). One honest caveat the spec pins instead of hiding: a
+  * (the durable ledger's first-writer-wins commit adds exactly-once
+  * hygiene on top). One honest caveat the spec pins instead of hiding: a
   * DataSketches sketch below ~k distinct values sits in an EXACT
   * (list/set) mode, and a union promotes it to estimating HLL mode —
   * so a merged estimate need not equal the single-shot estimate
@@ -29,10 +28,12 @@ import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructTy
   * [[DurableDistinctCountSession]] commits `(stratum, sketch)` rows
   * per batch; read folds with `hll_union_agg` over the concatenated
   * directories, so [[DurableLedger]] compaction adds no new sketches
-  * to the fold and a replayed batch overwrites its own directory.
-  * Accuracy is spec-pinned against exact distinct counts.
+  * to the fold and a replayed batch id is a no-op. Both sessions are
+  * [[FoldSession]]s. Accuracy is spec-pinned against exact distinct
+  * counts.
   */
 object StreamDistinctCount {
+  import FoldSession.Part
 
   /** Per-stratum `(stratum, sketch, estimate)` for one frame — the
     * batch operator (one map-side-combined aggregate; the shuffle
@@ -44,78 +45,50 @@ object StreamDistinctCount {
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
       .withColumn("estimate", hll_sketch_estimate(col("sketch")))
 
+  private def sketches(stratumCol: String, valueCol: String, lgK: Int) =
+    Part(distinctSketches(_, stratumCol, valueCol, lgK).select(col("stratum"), col("sketch")),
+      _.groupBy(col("stratum")).agg(hll_union_agg(col("sketch")).as("sketch")),
+      schema = StructType.fromDDL("stratum STRING, sketch BINARY"))
+
+  private def estimatesOf(sketches: DataFrame): DataFrame =
+    sketches.select(col("stratum"), hll_sketch_estimate(col("sketch")).as("estimate"))
+
   /** In-memory session: per-stratum sketch state folded by
     * `hll_union_agg` each ingest.
     */
   final class DistinctCountSession(spark: SparkSession,
-      stratumCol: String, valueCol: String, lgK: Int = 12) {
-    @volatile private var state: Option[DataFrame] = None
+      stratumCol: String, valueCol: String, lgK: Int = 12)
+      extends FoldSession.InMemory("distinct count", sketches(stratumCol, valueCol, lgK)) {
 
     /** Current `(stratum, sketch)` state. */
-    def sketches: Option[DataFrame] = state
+    def sketches: Option[DataFrame] = Option(state())
 
     /** Current `(stratum, estimate)` — as of the last ingest. */
-    def estimates: Option[DataFrame] = state.map(_.select(col("stratum"),
-      hll_sketch_estimate(col("sketch")).as("estimate")))
+    def estimates: Option[DataFrame] = sketches.map(estimatesOf)
 
     def ingest(batch: DataFrame): DataFrame = {
-      val delta = distinctSketches(batch, stratumCol, valueCol, lgK)
-        .select(col("stratum"), col("sketch"))
-      val merged = state match {
-        case None => delta
-        case Some(s) => s.union(delta).groupBy(col("stratum"))
-          .agg(hll_union_agg(col("sketch")).as("sketch"))
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      pinned.select(col("stratum"), hll_sketch_estimate(col("sketch")).as("estimate"))
+      step(batch, 0L)
+      estimatesOf(state())
     }
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
   /** Durable session: per-batch `(stratum, sketch)` rows in a
     * [[DurableLedger]]; read-time `hll_union_agg` fold.
     */
   final class DurableDistinctCountSession(spark: SparkSession, ledgerPath: String,
-      stratumCol: String, valueCol: String, lgK: Int = 12, compactEvery: Int = 0) {
-
-    private val schema = StructType(Seq(
-      StructField("stratum", StringType),
-      StructField("sketch", BinaryType)))
+      stratumCol: String, valueCol: String, lgK: Int = 12, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "distinct count", ledgerPath, compactEvery,
+        sketches(stratumCol, valueCol, lgK)) {
 
     /** Committed per-batch sketch rows (pre-fold). */
-    def committed: DataFrame = DurableLedger.load(spark, ledgerPath, schema)
+    def committed: DataFrame = ledger()
 
     /** `(stratum, estimate)` over everything committed. */
-    def estimates: DataFrame =
-      committed.groupBy(col("stratum"))
-        .agg(hll_union_agg(col("sketch")).as("sketch"))
-        .select(col("stratum"), hll_sketch_estimate(col("sketch")).as("estimate"))
+    def estimates: DataFrame = estimatesOf(state())
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      val delta = distinctSketches(batch, stratumCol, valueCol, lgK)
-        .select(col("stratum"), col("sketch"))
-      DurableLedger.commit(delta, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, schema, compactEvery)
+      step(batch, batchId)
       estimates
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

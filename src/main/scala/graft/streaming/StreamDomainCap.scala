@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -24,12 +23,15 @@ import graft.textops.CurationOps
   * replayed batch reproduces identical rows, which collapse in the
   * (domain, id) dedup — same as the other document sessions.
   *
-  * [[DurableDomainCapSession]] commits each batch's pruned top-k to a
-  * [[DurableLedger]]; read folds by concat → distinct → rank, so
+  * Both sessions are one-part [[FoldSession]]s. [[DomainCapSession]]
+  * folds each raw batch into its state (concat → distinct → rank).
+  * [[DurableDomainCapSession]]'s delta is the batch's pruned top-k,
+  * committed to a [[DurableLedger]]; read folds by concat → distinct → rank, so
   * compaction never changes the retained set. Durable rows are
   * `(doc_id, domain, quality)` — the budget decision needs no text.
   */
 object StreamDomainCap {
+  import FoldSession.Part
 
   /** Rank-prune to each domain's top-k by the batch operator's exact
     * order.
@@ -45,76 +47,54 @@ object StreamDomainCap {
 
   /** In-memory session over arbitrary-schema frames. */
   final class DomainCapSession(spark: SparkSession,
-      idCol: String, domainCol: String, qualityCol: String, k: Int) {
-    @volatile private var state: Option[DataFrame] = None
+      idCol: String, domainCol: String, qualityCol: String, k: Int)
+      extends FoldSession.InMemory("domain cap",
+        Part(identity,
+          df => pruneTopK(df.dropDuplicates(domainCol, idCol), idCol, domainCol, qualityCol, k))) {
+
+    /** Seeds an empty state of the batch's schema, so the first batch
+      * is folded (deduplicated and pruned) like every later one.
+      */
+    override protected def step(batch: DataFrame, batchId: Long): Unit = {
+      if (state() == null) seed(0, batch.limit(0))
+      super.step(batch, batchId)
+    }
 
     /** Retained rows WITHOUT ranks. */
-    def retainedRows: Option[DataFrame] = state
+    def retainedRows: Option[DataFrame] = Option(state())
 
     /** The retained set with the batch operator's `rk` column. */
     def currentRetention: Option[DataFrame] =
-      state.map(s => CurationOps.domainCapRetention(s, idCol, domainCol, qualityCol, k))
+      retainedRows.map(CurationOps.domainCapRetention(_, idCol, domainCol, qualityCol, k))
 
     def ingest(batch: DataFrame): DataFrame = {
-      val merged = state match {
-        case None => pruneTopK(batch, idCol, domainCol, qualityCol, k)
-        case Some(s) =>
-          pruneTopK(s.union(batch.select(s.columns.map(col).toSeq: _*))
-              .dropDuplicates(domainCol, idCol),
-            idCol, domainCol, qualityCol, k)
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      CurationOps.domainCapRetention(pinned, idCol, domainCol, qualityCol, k)
+      step(batch, 0L)
+      CurationOps.domainCapRetention(state(), idCol, domainCol, qualityCol, k)
     }
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
   /** Durable session over `(doc_id, domain, quality)` rows. */
   final class DurableDomainCapSession(spark: SparkSession, ledgerPath: String,
-      k: Int, compactEvery: Int = 0) {
-
-    private val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("domain", StringType),
-      StructField("quality", LongType)))
+      k: Int, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "domain cap", ledgerPath, compactEvery,
+        Part(batch => pruneTopK(
+            batch.select(col("doc_id").cast("long").as("doc_id"),
+              col("domain").cast("string").as("domain"),
+              col("quality").cast("long").as("quality")),
+            "doc_id", "domain", "quality", k),
+          _.dropDuplicates("domain", "doc_id"),
+          schema = StructType.fromDDL("doc_id BIGINT, domain STRING, quality BIGINT"))) {
 
     /** Committed candidate rows (concat of per-batch top-k's). */
-    def candidates: DataFrame = DurableLedger.load(spark, ledgerPath, schema)
+    def candidates: DataFrame = ledger()
 
     /** The retained set with ranks. */
     def currentRetention: DataFrame =
-      CurationOps.domainCapRetention(
-        candidates.dropDuplicates("domain", "doc_id"),
-        "doc_id", "domain", "quality", k)
+      CurationOps.domainCapRetention(state(), "doc_id", "domain", "quality", k)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      val pruned = pruneTopK(
-        batch.select(col("doc_id").cast("long").as("doc_id"),
-          col("domain").cast("string").as("domain"),
-          col("quality").cast("long").as("quality")),
-        "doc_id", "domain", "quality", k)
-      DurableLedger.commit(pruned, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, schema, compactEvery)
+      step(batch, batchId)
       currentRetention
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -22,13 +21,16 @@ import graft.textops.CurationOps
   * EXACTLY, chi-square doubles included: same integer count inputs,
   * same fixed per-row op nest, no cross-row float accumulation.
   *
-  * The durable twin keeps the reference side's counts in a `ref/`
-  * ledger (seeded once at first construction) and the streaming side's
-  * per-batch deltas in `new/` — counts are additive/not idempotent, so
-  * replay safety comes from the ledger's overwrite-by-batch-id; both
-  * ledgers compact freely (sum-fold preserving).
+  * The streaming side is a one-part [[FoldSession]]; the reference
+  * side is fixed. The durable twin keeps the reference side's counts in
+  * a `ref/` ledger (seeded once at first construction) and the
+  * streaming side's per-batch deltas in `new/`. Counts are additive,
+  * not idempotent: a replayed batch id is a no-op under the ledger's
+  * first-writer-wins commit. `new/` compacts freely (sum-fold
+  * preserving); `ref/` holds one batch.
   */
 object StreamDrift {
+  import FoldSession.{Part, sumBy}
 
   private def refCountsOf(ref: DataFrame, textCol: String): DataFrame =
     CurationOps.unigramCounts(ref, textCol)
@@ -40,45 +42,33 @@ object StreamDrift {
       .groupBy(col("w"))
       .agg(sum(col("na")).as("na"), sum(col("nb")).as("nb"))
 
+  private val RefSchema = StructType.fromDDL("w STRING, na BIGINT")
+
+  /** The streaming side's word counts. */
+  private def newCounts(textCol: String) =
+    Part(CurationOps.unigramCounts(_, textCol).select(col("w"), col("nu").as("nb")),
+      sumBy("w")("nb"), "new", StructType.fromDDL("w STRING, nb BIGINT"))
+
   /** In-memory session: the reference corpus's counts are fixed at
     * construction; each ingested batch folds its word counts into the
     * streaming side.
     */
   final class DriftSession(spark: SparkSession, ref: DataFrame,
-      textCol: String, minTotal: Long = 10, k: Int = 30) {
+      textCol: String, minTotal: Long = 10, k: Int = 30)
+      extends FoldSession.InMemory("drift", newCounts(textCol)) {
     private val refCnt = refCountsOf(ref, textCol).localCheckpoint()
-    @volatile private var newCnt: DataFrame = null
 
     /** Current `(reference, streaming)` count state (`null` streaming
       * side before any ingest). */
-    def currentCounts: (DataFrame, DataFrame) = (refCnt, newCnt)
+    def currentCounts: (DataFrame, DataFrame) = (refCnt, state())
 
     /** The drift table as of the last ingest. */
-    def currentDrift: DataFrame = {
-      require(newCnt != null, "drift requested before any ingest")
-      CurationOps.corpusDriftFromCounts(mergedCounts(refCnt, newCnt),
+    def currentDrift: DataFrame =
+      CurationOps.corpusDriftFromCounts(mergedCounts(refCnt, required("drift")),
         minTotal, k)
-    }
 
-    def ingest(batch: DataFrame): Unit = {
-      val d = CurationOps.unigramCounts(batch, textCol)
-        .select(col("w"), col("nu").as("nb"))
-      newCnt = (if (newCnt == null) d
-                else newCnt.unionByName(d).groupBy(col("w"))
-                  .agg(sum(col("nb")).as("nb")))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private val RefSchema = StructType(Seq(
-    StructField("w", StringType), StructField("na", LongType)))
-  private val NewSchema = StructType(Seq(
-    StructField("w", StringType), StructField("nb", LongType)))
 
   /** Durable session over `path` (`ref/` + `new/` ledgers). The
     * reference side is seeded ONCE — a restart over an already-seeded
@@ -88,21 +78,14 @@ object StreamDrift {
     */
   final class DurableDriftSession(spark: SparkSession, path: String,
       ref: => DataFrame, textCol: String, minTotal: Long = 10, k: Int = 30,
-      compactEvery: Int = 0) {
-
-    private val refPath = s"$path/ref"
-    private val newPath = s"$path/new"
-
-    if (DurableLedger.batches(refPath).isEmpty)
-      DurableLedger.commit(refCountsOf(ref, textCol), refPath, 0L)
+      compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "drift", path, compactEvery, newCounts(textCol)) {
+    seedFixed("ref", refCountsOf(ref, textCol))
 
     def currentRefCounts: DataFrame =
-      DurableLedger.load(spark, refPath, RefSchema)
-        .groupBy(col("w")).agg(sum(col("na")).as("na"))
+      sumBy("w")("na")(DurableLedger.load(spark, s"$path/ref", RefSchema))
 
-    def currentNewCounts: DataFrame =
-      DurableLedger.load(spark, newPath, NewSchema)
-        .groupBy(col("w")).agg(sum(col("nb")).as("nb"))
+    def currentNewCounts: DataFrame = state()
 
     def currentDrift: DataFrame =
       CurationOps.corpusDriftFromCounts(
@@ -110,23 +93,7 @@ object StreamDrift {
           currentNewCounts.localCheckpoint()),
         minTotal, k)
 
-    /** Commit one batch's OWN word-count deltas (replay-safe:
-      * redelivery overwrites the batch directory with identical rows).
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.unigramCounts(batch, textCol)
-          .select(col("w"), col("nu").as("nb")),
-        newPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, newPath, NewSchema, compactEvery)
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    /** Commit one batch's OWN word-count deltas. */
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

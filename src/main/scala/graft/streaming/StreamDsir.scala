@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.Dsir
 
@@ -19,29 +18,22 @@ import graft.textops.Dsir
   * union, and therefore so do the fitted weights and every score.
   *
   * The durable twin commits each batch's DELTA panel under its batch
-  * id ([[DurableLedger]] OCC — replay publishes identical rows), and
-  * the folded panel is one ≤-buckets-row sum over the ledger.
+  * id ([[FoldSession]]; a replayed id is a first-writer-wins no-op),
+  * and the folded panel is one ≤-buckets-row sum over the ledger.
   */
 object StreamDsir {
+  import FoldSession.{Part, sumBy}
 
-  private def mergeTwo(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("bucket"))
-      .agg(sum(col("t_count")).as("t_count"),
-        sum(col("r_count")).as("r_count"))
+  private val fold = sumBy("bucket")("t_count", "r_count")
 
   /** In-memory session over a fixed bucket count. */
-  final class DsirSession(textCol: String, isTarget: Column, buckets: Int) {
-    @volatile private var panel: DataFrame = null
+  final class DsirSession(textCol: String, isTarget: Column, buckets: Int)
+      extends FoldSession.InMemory("dsir",
+        Part(Dsir.bucketPanel(_, textCol, isTarget, buckets), fold)) {
 
-    def currentPanel: DataFrame = {
-      require(panel != null, "panel requested before any ingest")
-      panel
-    }
+    def currentPanel: DataFrame = required("panel")
 
-    def ingest(docs: DataFrame): Unit = {
-      val p = Dsir.bucketPanel(docs, textCol, isTarget, buckets)
-      panel = (if (panel == null) p else mergeTwo(panel, p)).localCheckpoint()
-    }
+    def ingest(docs: DataFrame): Unit = step(docs, 0L)
 
     /** The weight table fitted on everything ingested so far. */
     def currentWeights: Array[Long] = Dsir.logRatiosE6(currentPanel, buckets)
@@ -49,16 +41,9 @@ object StreamDsir {
     /** Score an arbitrary frame under the current fit. */
     def score(docs: DataFrame, idCol: String): DataFrame =
       Dsir.score(docs, idCol, textCol, currentWeights)
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
   }
 
-  private val PanelSchema = StructType(Seq(
-    StructField("bucket", LongType), StructField("t_count", LongType),
-    StructField("r_count", LongType)))
+  private val PanelSchema = StructType.fromDDL("bucket BIGINT, t_count BIGINT, r_count BIGINT")
 
   /** Durable twin: fixed `(text, is_target)` input columns; each batch
     * commits its delta panel, restart is reopening the path. Commits
@@ -66,15 +51,13 @@ object StreamDsir {
     * prunes directories whose bucket range provably misses.
     */
   final class DurableDsirSession(spark: SparkSession, path: String,
-      buckets: Int, compactEvery: Int = 0) {
+      buckets: Int, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "dsir", path, compactEvery,
+        Part(docs => Dsir.bucketPanel(docs.select(col("text"), col("is_target")),
+            "text", col("is_target") === 1, buckets),
+          fold, schema = PanelSchema, statsCols = Seq("bucket"))) {
 
-    private def fold(ledger: DataFrame): DataFrame =
-      ledger.groupBy(col("bucket"))
-        .agg(sum(col("t_count")).as("t_count"),
-          sum(col("r_count")).as("r_count"))
-
-    def currentPanel: DataFrame =
-      fold(DurableLedger.load(spark, path, PanelSchema))
+    def currentPanel: DataFrame = state()
 
     /** The panel restricted to buckets in `[lo, hi]` — the diagnostic
       * read ("which features drive this score band?") that pays for
@@ -89,14 +72,7 @@ object StreamDsir {
           Seq(DurableLedger.Bound("bucket", Some(lo), Some(hi))))
         .filter(col("bucket") >= lo && col("bucket") <= hi))
 
-    def ingest(docs: DataFrame, batchId: Long): Unit = {
-      val delta = Dsir.bucketPanel(
-        docs.select(col("text"), col("is_target")),
-        "text", col("is_target") === 1, buckets)
-      DurableLedger.commit(delta, path, batchId, statsCols = Seq("bucket"))
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, PanelSchema, compactEvery)
-    }
+    def ingest(docs: DataFrame, batchId: Long): Unit = step(docs, batchId)
 
     /** Out-of-band compaction (the maintenance turn when
       * `compactEvery` is off). Returns folded directory count.
@@ -107,14 +83,5 @@ object StreamDsir {
 
     def score(docs: DataFrame, idCol: String, textCol: String): DataFrame =
       Dsir.score(docs, idCol, textCol, currentWeights)
-
-    def start(docs: DataFrame,
-        checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingest(batch, batchId)
-      }.start()
-    }
   }
 }

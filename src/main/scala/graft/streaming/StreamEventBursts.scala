@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 
 import graft.temporal.Temporal
 
@@ -16,83 +15,60 @@ import graft.temporal.Temporal
   * [[StreamLengthStats]] histogram discipline applied to the event
   * log.
   *
-  * The in-memory session is at-least-once (a redelivered batch double
-  * counts — counts carry no batch identity); the durable session
-  * commits each batch's delta rows to a [[DurableLedger]] directory
-  * keyed by batch id, so replay OVERWRITES (exactly-once counts),
-  * restarts resume, and compaction's row concatenation re-combines in
-  * the read-side aggregation.
+  * Both sessions are one-part [[FoldSession]]s. The in-memory session
+  * is at-least-once (a redelivered batch double counts — counts carry
+  * no batch identity); the durable session commits each batch's delta
+  * rows to a [[DurableLedger]] directory keyed by batch id, so a
+  * replayed id is a first-writer-wins no-op (exactly-once counts),
+  * restarts resume, and its read skips the fold: the stacked delta rows
+  * re-combine in [[Temporal.burstsFromHourly]]'s own aggregation.
   */
 object StreamEventBursts {
+  import FoldSession.{Part, sumBy}
+
+  private val HourlySchema = StructType.fromDDL("event_type STRING, hour TIMESTAMP, c BIGINT")
 
   /** In-memory session. */
   final class EventBurstsSession(spark: SparkSession,
       typeCol: String, tsCol: String,
-      lookback: Int = 6, zThreshold: Double = 3.0) {
-    @volatile private var state: DataFrame = emptyHourly(spark)
+      lookback: Int = 6, zThreshold: Double = 3.0)
+      extends FoldSession.InMemory("event bursts",
+        Part(Temporal.hourlyCounts(_, typeCol, tsCol), sumBy("event_type", "hour")("c"))) {
+    seed(0, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], HourlySchema))
 
     /** The merged `(event_type, hour, c)` table. */
-    def hourly: DataFrame = state
+    def hourly: DataFrame = state()
 
     /** Batch-identical burst scores as of the last ingest. */
     def currentBursts: DataFrame =
-      Temporal.burstsFromHourly(state, lookback, zThreshold)
+      Temporal.burstsFromHourly(state(), lookback, zThreshold)
 
     def ingest(batch: DataFrame): DataFrame = {
-      val delta = Temporal.hourlyCounts(batch, typeCol, tsCol)
-      state = state.union(delta)
-        .groupBy(col("event_type"), col("hour")).agg(sum(col("c")).as("c"))
-        .localCheckpoint()
+      step(batch, 0L)
       currentBursts
     }
-
-    def start(events: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      events.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
-
-  private val HourlySchema = StructType(Seq(
-    StructField("event_type", StringType),
-    StructField("hour", TimestampType),
-    StructField("c", LongType)))
-
-  private def emptyHourly(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], HourlySchema)
 
   /** Durable session. */
   final class DurableEventBurstsSession(spark: SparkSession, ledgerPath: String,
       typeCol: String, tsCol: String,
-      lookback: Int = 6, zThreshold: Double = 3.0, compactEvery: Int = 0) {
+      lookback: Int = 6, zThreshold: Double = 3.0, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "event bursts", ledgerPath, compactEvery,
+        Part(Temporal.hourlyCounts(_, typeCol, tsCol)
+            .select(col("event_type").cast("string").as("event_type"),
+              col("hour").cast("timestamp").as("hour"), col("c").cast("long").as("c")),
+          schema = HourlySchema)) {
 
     /** Committed delta rows. */
-    def hourly: DataFrame = DurableLedger.load(spark, ledgerPath, HourlySchema)
+    def hourly: DataFrame = ledger()
 
     def currentBursts: DataFrame =
       Temporal.burstsFromHourly(hourly, lookback, zThreshold)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      val delta = Temporal.hourlyCounts(batch, typeCol, tsCol)
-        .select(col("event_type").cast("string").as("event_type"),
-          col("hour").cast("timestamp").as("hour"), col("c").cast("long").as("c"))
-      DurableLedger.commit(delta, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, HourlySchema, compactEvery)
+      step(batch, batchId)
       currentBursts
-    }
-
-    def start(events: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = events.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.TextAnalysis
 
@@ -22,9 +21,10 @@ import graft.textops.TextAnalysis
   * version and its host re-counts, which is what a frontier
   * prioritizer wants). State is host-keyed — bounded by distinct
   * hosts, not pages. Durable twin: per-batch deltas, sum-fold at read,
-  * replay-safe by overwrite-by-batch-id, compaction free.
+  * compaction free ([[FoldSession]] carries the replay contract).
   */
 object StreamHostGraph {
+  import FoldSession.{Part, sumBy}
 
   /** The batch rollup both forms derive: external edges only (relative
     * links have no host), links + distinct source pages per host.
@@ -36,56 +36,30 @@ object StreamHostGraph {
       .agg(count(lit(1)).as("n_links"),
         count_distinct(col(idCol)).as("n_pages"))
 
+  private val CountSchema = StructType.fromDDL("host STRING, n_links BIGINT, n_pages BIGINT")
+
+  private def counts(idCol: String, htmlCol: String) =
+    Part(hostInDegree(_, idCol, htmlCol), sumBy("host")("n_links", "n_pages"),
+      schema = CountSchema)
+
   /** In-memory session: one localCheckpointed count frame. */
   final class HostGraphSession(spark: SparkSession, idCol: String,
-      htmlCol: String) {
-    @volatile private var counts: DataFrame = null
+      htmlCol: String)
+      extends FoldSession.InMemory("host graph", counts(idCol, htmlCol)) {
 
-    def currentInDegree: DataFrame = {
-      require(counts != null, "in-degree requested before any ingest")
-      counts
-    }
+    def currentInDegree: DataFrame = required("in-degree")
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = hostInDegree(batch, idCol, htmlCol)
-      counts = (if (counts == null) delta else mergeCounts(counts, delta))
-        .localCheckpoint()
-    }
-
-    def start(pages: DataFrame): StreamingQuery =
-      pages.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private[streaming] def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("host")).agg(
-      sum(col("n_links")).as("n_links"), sum(col("n_pages")).as("n_pages"))
-
-  private val CountSchema = StructType(Seq(
-    StructField("host", StringType),
-    StructField("n_links", LongType), StructField("n_pages", LongType)))
 
   /** Durable session: per-batch deltas in one sum-foldable ledger. */
   final class DurableHostGraphSession(spark: SparkSession, path: String,
-      idCol: String, htmlCol: String, compactEvery: Int = 0) {
+      idCol: String, htmlCol: String, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "host graph", path, compactEvery,
+        counts(idCol, htmlCol)) {
 
-    def currentInDegree: DataFrame =
-      DurableLedger.load(spark, path, CountSchema)
-        .groupBy(col("host")).agg(
-          sum(col("n_links")).as("n_links"), sum(col("n_pages")).as("n_pages"))
+    def currentInDegree: DataFrame = state()
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(hostInDegree(batch, idCol, htmlCol), path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, CountSchema, compactEvery)
-    }
-
-    def start(pages: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = pages.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

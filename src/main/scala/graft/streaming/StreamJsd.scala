@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -23,72 +21,48 @@ import graft.textops.CurationOps
   * BEFORE the cross-row sum, so even the doubles are reproduced
   * (exact long arithmetic from identical integer inputs).
   *
-  * Durable twin: one `(w, g, n)` ledger, per-batch deltas
-  * overwrite-by-batch-id (counts are additive, not idempotent),
-  * sum-folded at read; compaction preserves the fold.
+  * Durable twin: one `(w, g, n)` ledger of per-batch deltas (counts
+  * are additive, not idempotent — a replayed batch id is a no-op under
+  * [[FoldSession]]'s first-writer-wins commit), sum-folded at read;
+  * compaction preserves the fold.
   */
 object StreamJsd {
+  import FoldSession.{Part, sumBy}
+
+  private val CntSchema = StructType.fromDDL("w STRING, g STRING, n BIGINT")
+
+  private def counts(groupCol: String, textCol: String) =
+    Part(CurationOps.groupedUnigramCounts(_, groupCol, textCol),
+      sumBy("w", "g")("n"), schema = CntSchema)
 
   /** In-memory session over a fixed group roster. */
   final class JsdSession(spark: SparkSession, groupCol: String,
-      textCol: String, groupValues: Seq[String]) {
-    @volatile private var cnt: DataFrame = null
+      textCol: String, groupValues: Seq[String])
+      extends FoldSession.InMemory("jsd", counts(groupCol, textCol)) {
 
     /** Current `(w, g, n)` count state (null before ingest). */
-    def currentCounts: DataFrame = cnt
+    def currentCounts: DataFrame = state()
 
     /** The divergence matrix as of the last ingest. */
-    def currentJsd: DataFrame = {
-      require(cnt != null, "JSD requested before any ingest")
-      CurationOps.jsDivergenceFromCounts(cnt, groupValues)
-    }
+    def currentJsd: DataFrame = CurationOps.jsDivergenceFromCounts(required("JSD"), groupValues)
 
-    def ingest(batch: DataFrame): Unit = {
-      val d = CurationOps.groupedUnigramCounts(batch, groupCol, textCol)
-      cnt = (if (cnt == null) d
-             else cnt.unionByName(d).groupBy(col("w"), col("g"))
-               .agg(sum(col("n")).as("n")))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private val CntSchema = StructType(Seq(
-    StructField("w", StringType), StructField("g", StringType),
-    StructField("n", LongType)))
 
   /** Durable session: per-batch `(w, g, n)` deltas under `path`. */
   final class DurableJsdSession(spark: SparkSession, path: String,
       groupCol: String, textCol: String, groupValues: Seq[String],
-      compactEvery: Int = 0) {
+      compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "jsd", path, compactEvery,
+        counts(groupCol, textCol)) {
 
-    def currentCounts: DataFrame =
-      DurableLedger.load(spark, path, CntSchema)
-        .groupBy(col("w"), col("g")).agg(sum(col("n")).as("n"))
+    def currentCounts: DataFrame = state()
 
     def currentJsd: DataFrame =
       CurationOps.jsDivergenceFromCounts(
         currentCounts.localCheckpoint(), groupValues)
 
-    /** Commit one batch's OWN deltas (replay-safe: redelivery
-      * overwrites the batch directory with identical rows). */
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.groupedUnigramCounts(batch, groupCol, textCol),
-        path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, CntSchema, compactEvery)
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    /** Commit one batch's OWN deltas. */
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -19,36 +18,18 @@ import graft.textops.CurationOps
   * any batching associates and commutes — and sizes are additive
   * counts, PROVIDED doc ids never repeat across batches (the crawl
   * contract shared with [[StreamHostGraph]]). State is keyed by the
-  * md5 dedup key: bounded by distinct content, not arrivals. The
-  * durable twin's ledger fold is the same argmax+sum, so compaction
-  * is a pure fold and replay overwrites by batch id.
+  * md5 dedup key: bounded by distinct content, not arrivals. Both
+  * forms are [[FoldSession]]s over one part whose fold is that
+  * argmax+sum; the durable twin applies it at read.
   */
 object StreamKeepBest {
+  import FoldSession.Part
 
-  /** In-memory session: one localCheckpointed panel frame. */
-  final class KeepBestSession(spark: SparkSession, idCol: String,
-      textCol: String, qualityCol: String) {
-    @volatile private var panel: DataFrame = null
-
-    def currentPanel: DataFrame = {
-      require(panel != null, "panel requested before any ingest")
-      panel
-    }
-
-    def ingest(batch: DataFrame): Unit = {
-      val delta = CurationOps.keepBestPanel(batch, idCol, textCol, qualityCol)
-      panel = (if (panel == null) delta else mergePanels(panel, delta))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
-  }
-
-  private[streaming] def mergePanels(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("key"))
+  /** Argmax of (quality, then smallest id) and summed group size, per
+    * key — the panel fold.
+    */
+  private val fold: DataFrame => DataFrame =
+    _.groupBy(col("key"))
       .agg(max(struct(col("win_quality"),
           negate(col("win_id")).as("nid"))).as("__mx"),
         sum(col("group_size")).as("group_size"))
@@ -57,40 +38,34 @@ object StreamKeepBest {
         col("__mx").getField("win_quality").as("win_quality"),
         col("group_size"))
 
-  private val PanelSchema = StructType(Seq(
-    StructField("key", StringType), StructField("win_id", LongType),
-    StructField("win_quality", LongType), StructField("group_size", LongType)))
+  private val PanelSchema =
+    StructType.fromDDL("key STRING, win_id BIGINT, win_quality BIGINT, group_size BIGINT")
+
+  private def panel(idCol: String, textCol: String, qualityCol: String) =
+    Part(CurationOps.keepBestPanel(_, idCol, textCol, qualityCol), fold,
+      schema = PanelSchema)
+
+  /** In-memory session: one localCheckpointed panel frame. */
+  final class KeepBestSession(spark: SparkSession, idCol: String,
+      textCol: String, qualityCol: String)
+      extends FoldSession.InMemory("keep-best", panel(idCol, textCol, qualityCol)) {
+
+    def currentPanel: DataFrame = required("panel")
+
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
+  }
 
   /** Durable session: per-batch panels in an argmax+sum-foldable
     * ledger.
     */
   final class DurableKeepBestSession(spark: SparkSession, path: String,
       idCol: String, textCol: String, qualityCol: String,
-      compactEvery: Int = 0) {
+      compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "keep-best", path, compactEvery,
+        panel(idCol, textCol, qualityCol)) {
 
-    def currentPanel: DataFrame = mergeFold(
-      DurableLedger.load(spark, path, PanelSchema))
+    def currentPanel: DataFrame = state()
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.keepBestPanel(batch, idCol, textCol, qualityCol),
-        path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, PanelSchema, compactEvery)
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
-
-  /** The read-time fold over stacked ledger batches: identical to
-    * [[mergePanels]] (compaction just concatenates batch rows — the
-    * fold is applied at read, the StreamHostGraph convention).
-    */
-  private def mergeFold(df: DataFrame): DataFrame =
-    mergePanels(df, df.limit(0))
 }

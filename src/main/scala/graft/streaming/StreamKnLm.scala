@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -23,59 +22,39 @@ import graft.textops.CurationOps
   * tokens) and shrinks further in practice because merge collapses
   * repeats.
   *
-  * Two session shapes, the engine's standard pair:
+  * Two session shapes, the engine's standard [[FoldSession]] pair:
   *
   *  - [[KnLmSession]] — driver-held localCheckpointed count frame;
   *  - [[DurableKnLmSession]] — per-batch count DELTAS in a
   *    [[DurableLedger]] (each directory holds one batch's own counts —
-  *    deterministic from the batch alone, so replays rewrite identical
-  *    rows), folded by `groupBy(w1, w2).sum(n)` at read; compactable
-  *    freely ([[DurableLedger.compact]] preserves rows, and the fold is
-  *    a sum over them).
+  *    deterministic from the batch alone; a replayed batch id is a
+  *    first-writer-wins no-op), folded by `groupBy(w1, w2).sum(n)` at
+  *    read; compactable freely ([[DurableLedger.compact]] preserves
+  *    rows, and the fold is a sum over them).
   */
 object StreamKnLm {
+  import FoldSession.{Part, sumBy}
 
-  /** Merge two count tables (additive — associative and commutative;
-    * NOT idempotent, so callers must gate redeliveries by batch id,
-    * which both sessions below do).
-    */
-  def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("w1"), col("w2"))
-      .agg(sum(col("n")).as("n"))
+  private val TriSchema = StructType.fromDDL("w1 STRING, w2 STRING, w3 STRING, n BIGINT")
+  private val BigSchema = StructType.fromDDL("w1 STRING, w2 STRING, n BIGINT")
+
+  private def bigrams(textCol: String, dir: String) =
+    Part(CurationOps.bigramCounts(_, textCol), sumBy("w1", "w2")("n"), dir, BigSchema)
+  private def trigrams(textCol: String) =
+    Part(CurationOps.trigramCounts(_, textCol), sumBy("w1", "w2", "w3")("n"), "tri", TriSchema)
 
   /** In-memory incremental LM session. */
-  final class KnLmSession(spark: SparkSession, textCol: String, minCount: Int) {
-    @volatile private var counts: DataFrame = null
+  final class KnLmSession(spark: SparkSession, textCol: String, minCount: Int)
+      extends FoldSession.InMemory("kn lm", bigrams(textCol, "")) {
 
     /** The current count state (null before any ingest). */
-    def currentCounts: DataFrame = counts
+    def currentCounts: DataFrame = state()
 
     /** The LM as of the last ingest. */
-    def currentLm: DataFrame = {
-      require(counts != null, "LM requested before any ingest")
-      CurationOps.knLmFromCounts(counts, minCount)
-    }
+    def currentLm: DataFrame = CurationOps.knLmFromCounts(required("LM"), minCount)
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = CurationOps.bigramCounts(batch, textCol)
-      counts =
-        (if (counts == null) delta else mergeCounts(counts, delta))
-          .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  /** Merge two TRIGRAM count tables (same additivity contract as
-    * [[mergeCounts]], one order up).
-    */
-  def mergeCounts3(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(sum(col("n")).as("n"))
 
   /** Incrementally-trained TRIGRAM KN LM — the order KenLM ships and
     * q105 gates, so the deployed filter order retrains live. State is
@@ -84,87 +63,41 @@ object StreamKnLm {
     * and bigram counts, both additive.
     */
   final class KnTrigramLmSession(spark: SparkSession, textCol: String,
-      minCount: Int) {
-    @volatile private var tri: DataFrame = null
-    @volatile private var big: DataFrame = null
+      minCount: Int)
+      extends FoldSession.InMemory("kn trigram lm", trigrams(textCol), bigrams(textCol, "big")) {
 
     /** The current (trigram, bigram) count state (nulls before any
       * ingest).
       */
-    def currentCounts: (DataFrame, DataFrame) = (tri, big)
+    def currentCounts: (DataFrame, DataFrame) = (state(0), state(1))
 
     /** The trigram LM as of the last ingest — EXACTLY the batch
       * [[CurationOps.knTrigramLm]] over everything ingested.
       */
-    def currentLm: DataFrame = {
-      require(tri != null, "LM requested before any ingest")
-      CurationOps.knTrigramLmFromCounts(tri, big, minCount)
-    }
+    def currentLm: DataFrame = CurationOps.knTrigramLmFromCounts(required("LM"), state(1), minCount)
 
-    def ingest(batch: DataFrame): Unit = {
-      val dTri = CurationOps.trigramCounts(batch, textCol)
-      val dBig = CurationOps.bigramCounts(batch, textCol)
-      tri = (if (tri == null) dTri else mergeCounts3(tri, dTri))
-        .localCheckpoint()
-      big = (if (big == null) dBig else mergeCounts(big, dBig))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
 
   /** [[KnTrigramLmSession]] with both count tables as per-batch deltas
     * in TWO [[DurableLedger]]s (`<path>/tri`, `<path>/big`) — survives
     * restarts; each ledger's directory for a batch holds that batch's
-    * own deterministic counts, so replays rewrite identical rows in
-    * both.
+    * own deterministic counts.
     */
   final class DurableKnTrigramLmSession(spark: SparkSession, path: String,
-      textCol: String, minCount: Int, compactEvery: Int = 0) {
-    import org.apache.spark.sql.types._
-    private val triSchema = StructType(Seq(
-      StructField("w1", StringType), StructField("w2", StringType),
-      StructField("w3", StringType), StructField("n", LongType)))
-    private val bigSchema = StructType(Seq(
-      StructField("w1", StringType), StructField("w2", StringType),
-      StructField("n", LongType)))
-    private val triPath = s"$path/tri"
-    private val bigPath = s"$path/big"
+      textCol: String, minCount: Int, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "kn trigram lm", path, compactEvery,
+        trigrams(textCol), bigrams(textCol, "big")) {
 
-    def currentTriCounts: DataFrame =
-      DurableLedger.load(spark, triPath, triSchema)
-        .groupBy(col("w1"), col("w2"), col("w3")).agg(sum(col("n")).as("n"))
+    def currentTriCounts: DataFrame = state(0)
 
-    def currentBigCounts: DataFrame =
-      DurableLedger.load(spark, bigPath, bigSchema)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
+    def currentBigCounts: DataFrame = state(1)
 
     def currentLm: DataFrame =
       CurationOps.knTrigramLmFromCounts(
         currentTriCounts, currentBigCounts, minCount)
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.trigramCounts(batch, textCol), triPath, batchId)
-      DurableLedger.commit(
-        CurationOps.bigramCounts(batch, textCol), bigPath, batchId)
-      if (compactEvery > 0) {
-        DurableLedger.maybeCompact(spark, triPath, triSchema, compactEvery)
-        DurableLedger.maybeCompact(spark, bigPath, bigSchema, compactEvery)
-      }
-      ()
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 
   /** [[KnLmSession]] with per-batch count deltas in a
@@ -172,37 +105,18 @@ object StreamKnLm {
     * auto-folds the delta directories.
     */
   final class DurableKnLmSession(spark: SparkSession, path: String,
-      textCol: String, minCount: Int, compactEvery: Int = 0) {
-    import org.apache.spark.sql.types._
-    private val schema = StructType(Seq(
-      StructField("w1", StringType), StructField("w2", StringType),
-      StructField("n", LongType)))
+      textCol: String, minCount: Int, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "kn lm", path, compactEvery, bigrams(textCol, "")) {
 
     /** The committed count state: sum-fold over every delta. */
-    def currentCounts: DataFrame =
-      DurableLedger.load(spark, path, schema)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
+    def currentCounts: DataFrame = state()
 
     def currentLm: DataFrame =
       CurationOps.knLmFromCounts(currentCounts.localCheckpoint(), minCount)
 
-    /** Commit one batch's OWN counts (replay-safe: a redelivered batch
-      * overwrites its directory with identical rows — deltas are a
-      * deterministic function of the batch alone).
+    /** Commit one batch's OWN counts (deterministic from the batch
+      * alone, so a replay would publish identical rows).
       */
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.bigramCounts(batch, textCol), path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, schema, compactEvery)
-      ()
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

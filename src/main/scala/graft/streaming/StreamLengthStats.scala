@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.textops.CurationOps
@@ -20,18 +19,19 @@ import graft.textops.CurationOps
   * `percentile_cont` itself could never stream — it needs every raw
   * value; the histogram needs one row per distinct length.
   *
+  * Both sessions are [[FoldSession]]s over one sum-folded part.
   * [[LengthStatsSession]] keeps the merged histogram as a
   * localCheckpointed frame (at-least-once: a REDELIVERED batch double
   * counts — driver-memory sessions have no batch identity).
   * [[DurableLengthStatsSession]] commits each batch's delta rows to a
-  * [[DurableLedger]] directory keyed by batchId: replay OVERWRITES the
-  * same directory (exactly-once counts), a restart resumes from disk,
-  * and compaction is free — the ledger fold is a plain row
-  * concatenation re-combined by the first aggregation in
-  * [[CurationOps.percentilesFromHistogram]], so folding directories
-  * can never change a count.
+  * [[DurableLedger]] directory keyed by batchId: a replayed id is a
+  * first-writer-wins no-op (exactly-once counts), a restart resumes
+  * from disk, and compaction is free. Its read skips the fold — the
+  * first aggregation in [[CurationOps.percentilesFromHistogram]]
+  * re-combines the stacked delta rows, so no stage is added.
   */
 object StreamLengthStats {
+  import FoldSession.{Part, sumBy}
 
   /** In-memory session: `ingest` merges a batch's histogram delta,
     * `currentStats` returns the q38-shaped statistics as of the last
@@ -40,79 +40,52 @@ object StreamLengthStats {
     */
   final class LengthStatsSession(spark: SparkSession,
       stratumCol: String, textCol: String,
-      initial: Option[DataFrame] = None) {
-    @volatile private var state: DataFrame =
-      initial.getOrElse(emptyHistogram(spark, stratumCol))
+      initial: Option[DataFrame] = None)
+      extends FoldSession.InMemory("length stats",
+        Part(CurationOps.lengthHistogram(_, stratumCol, textCol), sumBy(stratumCol, "v")("cnt"))) {
+    seed(0, initial.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], histSchema(stratumCol))))
 
     /** The merged `(stratum, v, cnt)` histogram. */
-    def histogram: DataFrame = state
+    def histogram: DataFrame = state()
 
     def currentStats: DataFrame =
-      CurationOps.percentilesFromHistogram(state, stratumCol)
+      CurationOps.percentilesFromHistogram(state(), stratumCol)
 
     def ingest(batch: DataFrame): DataFrame = {
-      val delta = CurationOps.lengthHistogram(batch, stratumCol, textCol)
-      state = state.union(delta)
-        .groupBy(col(stratumCol), col("v")).agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint()
+      step(batch, 0L)
       currentStats
     }
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
-  private def emptyHistogram(spark: SparkSession, stratumCol: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      histSchema(stratumCol))
-
   private def histSchema(stratumCol: String): StructType = StructType(Seq(
-    StructField(stratumCol, StringType),
-    StructField("v", IntegerType),
+    StructField(stratumCol, StringType), StructField("v", IntegerType),
     StructField("cnt", LongType)))
 
   /** [[LengthStatsSession]] with the histogram deltas in a
-    * [[DurableLedger]]: survives a restart, replayed batches recommit
-    * the identical delta to their own directory (exactly-once), and
-    * `compactEvery` folds directories without touching any count.
+    * [[DurableLedger]]: survives a restart, a replayed batch id is a
+    * no-op (exactly-once), and `compactEvery` folds directories without
+    * touching any count.
     */
   final class DurableLengthStatsSession(spark: SparkSession, ledgerPath: String,
-      stratumCol: String, textCol: String, compactEvery: Int = 0) {
-
-    private val schema = histSchema(stratumCol)
+      stratumCol: String, textCol: String, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "length stats", ledgerPath, compactEvery,
+        Part(CurationOps.lengthHistogram(_, stratumCol, textCol)
+            .select(col(stratumCol), col("v").cast("int").as("v"),
+              col("cnt").cast("long").as("cnt")),
+          schema = histSchema(stratumCol))) {
 
     /** The committed histogram (delta rows; duplicates by (stratum, v)
       * re-combine in the stats aggregation).
       */
-    def histogram: DataFrame = DurableLedger.load(spark, ledgerPath, schema)
+    def histogram: DataFrame = ledger()
 
     def currentStats: DataFrame =
       CurationOps.percentilesFromHistogram(histogram, stratumCol)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      val delta = CurationOps.lengthHistogram(batch, stratumCol, textCol)
-        .select(col(stratumCol), col("v").cast("int").as("v"),
-          col("cnt").cast("long").as("cnt"))
-      DurableLedger.commit(delta, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, schema, compactEvery)
+      step(batch, batchId)
       currentStats
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

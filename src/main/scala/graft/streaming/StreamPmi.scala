@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -19,90 +17,51 @@ import graft.textops.CurationOps
   * (ranking, counts, and the ratio doubles — same integer inputs, same
   * op nest). The durable twin keeps BOTH ledgers under one root
   * (`big/`, `uni/` — the [[StreamKnLm.DurableKnTrigramLmSession]]
-  * two-ledger layout); counts are additive/not idempotent, so replay
-  * safety comes from the ledger's overwrite-by-batch-id.
+  * two-ledger layout), one [[FoldSession]] part each. Counts are
+  * additive, not idempotent: a replayed batch id is a no-op under the
+  * ledger's first-writer-wins commit.
   */
 object StreamPmi {
+  import FoldSession.{Part, sumBy}
+
+  private val BigSchema = StructType.fromDDL("w1 STRING, w2 STRING, n BIGINT")
+  private val UniSchema = StructType.fromDDL("w STRING, nu BIGINT")
+
+  private def parts(textCol: String) = Seq(
+    Part(CurationOps.bigramCounts(_, textCol), sumBy("w1", "w2")("n"), "big", BigSchema),
+    Part(CurationOps.unigramCounts(_, textCol), sumBy("w")("nu"), "uni", UniSchema))
 
   /** In-memory session: two localCheckpointed count frames. */
   final class PmiSession(spark: SparkSession, textCol: String,
-      minCount: Int = 5, k: Int = 30) {
-    @volatile private var big: DataFrame = null
-    @volatile private var uni: DataFrame = null
+      minCount: Int = 5, k: Int = 30)
+      extends FoldSession.InMemory("pmi", parts(textCol): _*) {
 
     /** Current `(bigram, unigram)` count state (null before ingest). */
-    def currentCounts: (DataFrame, DataFrame) = (big, uni)
+    def currentCounts: (DataFrame, DataFrame) = (state(0), state(1))
 
     /** The PMI table as of the last ingest. */
-    def currentPmi: DataFrame = {
-      require(big != null, "PMI requested before any ingest")
-      CurationOps.pmiFromCounts(big, uni, minCount, k)
-    }
+    def currentPmi: DataFrame = CurationOps.pmiFromCounts(required("PMI"), state(1), minCount, k)
 
-    def ingest(batch: DataFrame): Unit = {
-      val db = CurationOps.bigramCounts(batch, textCol)
-      val du = CurationOps.unigramCounts(batch, textCol)
-      big = (if (big == null) db else StreamKnLm.mergeCounts(big, db))
-        .localCheckpoint()
-      uni = (if (uni == null) du
-             else uni.union(du).groupBy(col("w")).agg(sum(col("nu")).as("nu")))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private val BigSchema = StructType(Seq(
-    StructField("w1", StringType), StructField("w2", StringType),
-    StructField("n", LongType)))
-  private val UniSchema = StructType(Seq(
-    StructField("w", StringType), StructField("nu", LongType)))
 
   /** Durable session: per-batch count deltas in two ledgers under
     * `path` (`big/`, `uni/`), sum-folded at read; compactable freely.
     */
   final class DurablePmiSession(spark: SparkSession, path: String,
-      textCol: String, minCount: Int = 5, k: Int = 30, compactEvery: Int = 0) {
+      textCol: String, minCount: Int = 5, k: Int = 30, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "pmi", path, compactEvery, parts(textCol): _*) {
 
-    private val bigPath = s"$path/big"
-    private val uniPath = s"$path/uni"
+    def currentBigCounts: DataFrame = state(0)
 
-    def currentBigCounts: DataFrame =
-      DurableLedger.load(spark, bigPath, BigSchema)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
-
-    def currentUniCounts: DataFrame =
-      DurableLedger.load(spark, uniPath, UniSchema)
-        .groupBy(col("w")).agg(sum(col("nu")).as("nu"))
+    def currentUniCounts: DataFrame = state(1)
 
     def currentPmi: DataFrame =
       CurationOps.pmiFromCounts(
         currentBigCounts.localCheckpoint(), currentUniCounts.localCheckpoint(),
         minCount, k)
 
-    /** Commit one batch's OWN deltas to both ledgers (replay-safe:
-      * redelivery overwrites the batch's directories with identical
-      * rows).
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(CurationOps.bigramCounts(batch, textCol),
-        bigPath, batchId)
-      DurableLedger.commit(CurationOps.unigramCounts(batch, textCol),
-        uniPath, batchId)
-      if (compactEvery > 0) {
-        DurableLedger.maybeCompact(spark, bigPath, BigSchema, compactEvery)
-        DurableLedger.maybeCompact(spark, uniPath, UniSchema, compactEvery)
-      }
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    /** Commit one batch's OWN deltas to both ledgers. */
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

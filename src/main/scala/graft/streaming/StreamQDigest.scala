@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.sketch.QDigest
 
@@ -22,6 +21,7 @@ import graft.sketch.QDigest
   * nothing here because the histogram is already the smaller object.
   */
 object StreamQDigest {
+  import FoldSession.{Part, sumBy}
 
   /** Per-batch clamped leaf deltas `(v, cnt)`. */
   def leafDeltas(batch: DataFrame, valueCol: Column, logU: Int): DataFrame = {
@@ -43,35 +43,24 @@ object StreamQDigest {
     }.sortBy(_._1).toDF("id", "lo", "hi", "cnt")
   }
 
+  private val CountSchema = StructType.fromDDL("v BIGINT, cnt BIGINT")
+
+  private def leaves(valueCol: Column, logU: Int) =
+    Part(leafDeltas(_, valueCol, logU), sumBy("v")("cnt"), schema = CountSchema)
+
   /** In-memory session: one localCheckpointed histogram frame. */
   final class QDigestSession(spark: SparkSession, valueCol: Column,
-      logU: Int, k: Int) {
-    @volatile private var counts: DataFrame = null
+      logU: Int, k: Int) extends FoldSession.InMemory("q-digest", leaves(valueCol, logU)) {
 
-    def currentCounts: DataFrame = counts
+    def currentCounts: DataFrame = state()
 
     /** The digest as of the last ingest — ≡ the batch
       * [[QDigest.digestTable]] over everything ingested.
       */
-    def currentDigest: DataFrame = {
-      require(counts != null, "digest requested before any ingest")
-      digestFrom(spark, counts, logU, k)
-    }
+    def currentDigest: DataFrame = digestFrom(spark, required("digest"), logU, k)
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = leafDeltas(batch, valueCol, logU)
-      counts = (if (counts == null) delta else mergeCounts(counts, delta))
-        .localCheckpoint()
-    }
-
-    def start(rows: DataFrame): StreamingQuery =
-      rows.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private[streaming] def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
 
   /** Per-batch clamped (group, leaf) deltas — the grouped session's
     * additive state unit.
@@ -95,63 +84,37 @@ object StreamQDigest {
     * shared derivation code path.
     */
   final class GroupedQDigestSession(spark: SparkSession, groupCol: Column,
-      valueCol: Column, logU: Int, k: Int) {
-    @volatile private var counts: DataFrame = null
+      valueCol: Column, logU: Int, k: Int)
+      extends FoldSession.InMemory("q-digest by group",
+        Part(groupedLeafDeltas(_, groupCol, valueCol, logU), sumBy("g", "v")("cnt"))) {
 
-    def currentCounts: DataFrame = counts
+    def currentCounts: DataFrame = state()
 
     /** One digest per group ingested so far — ≡ the batch
       * [[graft.sketch.QDigest.digestByGroup]] over everything.
       */
     def currentDigests: DataFrame = {
-      require(counts != null, "digests requested before any ingest")
       import spark.implicits._
       QDigest.digestsFromGroupCounts(
-        counts.as[(String, Long, Long)], logU, k)
+        required("digests").as[(String, Long, Long)], logU, k)
     }
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = groupedLeafDeltas(batch, groupCol, valueCol, logU)
-      counts = (if (counts == null) delta else mergeGroupCounts(counts, delta))
-        .localCheckpoint()
-    }
-
-    def start(rows: DataFrame): StreamingQuery =
-      rows.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
 
-  private[streaming] def mergeGroupCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))
-
-  private val CountSchema = StructType(Seq(
-    StructField("v", LongType), StructField("cnt", LongType)))
-
   /** Durable session: per-batch histogram deltas in one sum-foldable
-    * ledger; replay-safe by overwrite-by-batch-id, compactable freely.
+    * [[FoldSession]] ledger; compactable freely.
     */
   final class DurableQDigestSession(spark: SparkSession, path: String,
-      valueCol: Column, logU: Int, k: Int, compactEvery: Int = 0) {
+      valueCol: Column, logU: Int, k: Int, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "q-digest", path, compactEvery,
+        leaves(valueCol, logU)) {
 
-    def currentCounts: DataFrame =
-      DurableLedger.load(spark, path, CountSchema)
-        .groupBy(col("v")).agg(sum(col("cnt")).as("cnt"))
+    def currentCounts: DataFrame = state()
 
     def currentDigest: DataFrame =
       digestFrom(spark, currentCounts, logU, k)
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(leafDeltas(batch, valueCol, logU), path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, CountSchema, compactEvery)
-    }
-
-    def start(rows: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = rows.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

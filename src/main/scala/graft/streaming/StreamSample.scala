@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -27,15 +26,18 @@ import graft.textops.CurationOps
   * re-scanning the corpus: per batch the work is the batch's OWN
   * rank-prune plus a merge over bounded state.
   *
-  * [[DurableSampleSession]] commits each batch's PRUNED candidates
+  * Both sessions are one-part [[FoldSession]]s. [[SampleSession]]
+  * folds each raw batch into its state (concat → distinct → rank).
+  * [[DurableSampleSession]]'s delta is the batch's PRUNED candidates
   * (its own per-stratum bottom-k — only rows that could ever enter the
-  * merged sample) to a [[DurableLedger]]; read folds directories by
+  * merged sample), committed to a [[DurableLedger]]; read folds directories by
   * concat → distinct → global rank, so compaction never changes the
-  * sample, replay overwrites the same directory, and a restart resumes
+  * sample, a replayed batch id is a no-op, and a restart resumes
   * exactly. Durable rows are `(doc_id, stratum, text)`-shaped like the
   * other durable document sessions.
   */
 object StreamSample {
+  import FoldSession.Part
 
   /** Rank-prune `df` to each stratum's bottom-k by the batch
     * operator's exact key (shared formula — `md5(salt || id)`).
@@ -54,78 +56,55 @@ object StreamSample {
     * over everything ingested.
     */
   final class SampleSession(spark: SparkSession,
-      idCol: String, stratumCol: String, k: Int, salt: String) {
-    @volatile private var state: Option[DataFrame] = None
+      idCol: String, stratumCol: String, k: Int, salt: String)
+      extends FoldSession.InMemory("stratified sample",
+        Part(identity, df => pruneTopK(df.dropDuplicates(stratumCol, idCol), idCol, stratumCol, k, salt))) {
+
+    /** Seeds an empty state of the batch's schema, so the first batch
+      * is folded (deduplicated and pruned) like every later one.
+      */
+    override protected def step(batch: DataFrame, batchId: Long): Unit = {
+      if (state() == null) seed(0, batch.limit(0))
+      super.step(batch, batchId)
+    }
 
     /** The maintained sample WITHOUT ranks (state rows). */
-    def sampleRows: Option[DataFrame] = state
+    def sampleRows: Option[DataFrame] = Option(state())
 
     /** The maintained sample with the batch operator's `rk` column. */
     def currentSample: Option[DataFrame] =
-      state.map(s => CurationOps.stratifiedSample(s, idCol, stratumCol, k, salt))
+      sampleRows.map(CurationOps.stratifiedSample(_, idCol, stratumCol, k, salt))
 
     def ingest(batch: DataFrame): DataFrame = {
-      val merged = state match {
-        case None => pruneTopK(batch, idCol, stratumCol, k, salt)
-        case Some(s) =>
-          pruneTopK(s.union(batch.select(s.columns.map(col).toSeq: _*))
-              .dropDuplicates(stratumCol, idCol),
-            idCol, stratumCol, k, salt)
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      CurationOps.stratifiedSample(pinned, idCol, stratumCol, k, salt)
+      step(batch, 0L)
+      CurationOps.stratifiedSample(state(), idCol, stratumCol, k, salt)
     }
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
   /** Durable session over `(doc_id, stratum, text)` rows. */
   final class DurableSampleSession(spark: SparkSession, ledgerPath: String,
-      k: Int, salt: String, compactEvery: Int = 0) {
-
-    private val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("stratum", StringType),
-      StructField("text", StringType)))
+      k: Int, salt: String, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "stratified sample", ledgerPath, compactEvery,
+        Part(batch => pruneTopK(
+            batch.select(col("doc_id").cast("long").as("doc_id"),
+              col("stratum").cast("string").as("stratum"),
+              col("text").cast("string").as("text")),
+            "doc_id", "stratum", k, salt),
+          _.dropDuplicates("stratum", "doc_id"),
+          schema = StructType.fromDDL("doc_id BIGINT, stratum STRING, text STRING"))) {
 
     /** The committed candidate rows (concat of per-batch bottom-k's). */
-    def candidates: DataFrame = DurableLedger.load(spark, ledgerPath, schema)
+    def candidates: DataFrame = ledger()
 
     /** The maintained sample with ranks — the batch operator over the
       * folded, deduplicated candidates.
       */
     def currentSample: DataFrame =
-      CurationOps.stratifiedSample(
-        candidates.dropDuplicates("stratum", "doc_id"),
-        "doc_id", "stratum", k, salt)
+      CurationOps.stratifiedSample(state(), "doc_id", "stratum", k, salt)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      val pruned = pruneTopK(
-        batch.select(col("doc_id").cast("long").as("doc_id"),
-          col("stratum").cast("string").as("stratum"),
-          col("text").cast("string").as("text")),
-        "doc_id", "stratum", k, salt)
-      DurableLedger.commit(pruned, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, schema, compactEvery)
+      step(batch, batchId)
       currentSample
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.sketch.Sketches
 
@@ -15,9 +14,9 @@ import graft.sketch.Sketches
   * — and each batch contributes one bounded delta:
   *
   *  - Count-Min cells merge by SUM — additive, NOT idempotent, so the
-  *    durable twin relies on [[DurableLedger]]'s overwrite-by-batch-id
-  *    for exactly-once under replay (same discipline as the counters
-  *    in [[StreamEventBursts]]).
+  *    durable twin relies on [[DurableLedger]]'s first-writer-wins
+  *    commit for exactly-once under replay (same discipline as the
+  *    counters in [[StreamEventBursts]]).
   *  - HLL registers merge by MAX and Bloom bits by UNION — idempotent
   *    at the cell level, so even at-least-once delivery cannot drift
   *    the state (the ledger's replay hygiene is belt-and-braces).
@@ -26,74 +25,55 @@ import graft.sketch.Sketches
   * the batch operator computes in one pass, a session's state after
   * ingesting any partition of the corpus equals the batch sketch of
   * the whole — cell-for-cell, not within-epsilon (spec-pinned over
-  * randomized splits in `StreamSketchesSpec`).
+  * randomized splits in `StreamSketchesSpec`). Every session here is a
+  * one-part [[FoldSession]].
   */
 object StreamSketches {
+  import FoldSession.{Part, sumBy}
+
+  private val CmsSchema = StructType.fromDDL("sk_row BIGINT, bucket BIGINT, cnt BIGINT")
+  private val HllSchema = StructType.fromDDL("idx BIGINT, r BIGINT")
+  private val BloomSchema = StructType.fromDDL("pos BIGINT")
+
+  private def cms(itemCol: String, depth: Int, width: Int) =
+    Part(Sketches.cmsTable(_, itemCol, depth, width),
+      sumBy("sk_row", "bucket")("cnt"), schema = CmsSchema)
+  private def hll(itemCol: String, p: Int) =
+    Part(Sketches.hllRegisters(_, itemCol, p),
+      _.groupBy(col("idx")).agg(max(col("r")).as("r")), schema = HllSchema)
+  private def bloom(itemCol: String, k: Int, mBits: Int) =
+    Part(Sketches.bloomBits(_, itemCol, k, mBits), _.distinct(), schema = BloomSchema)
 
   /** In-memory Count-Min session over `itemCol` occurrences. */
   final class CmsSession(spark: SparkSession, itemCol: String,
-      depth: Int = 4, width: Int = 512) {
-    @volatile private var state: Option[DataFrame] = None
+      depth: Int = 4, width: Int = 512)
+      extends FoldSession.InMemory("count-min", cms(itemCol, depth, width)) {
 
     /** Current `(sk_row, bucket, cnt)` cells. */
-    def sketch: Option[DataFrame] = state
+    def sketch: Option[DataFrame] = Option(state())
 
-    def ingest(batch: DataFrame): DataFrame = {
-      val delta = Sketches.cmsTable(batch, itemCol, depth, width)
-      val merged = state match {
-        case None => delta
-        case Some(s) => s.unionByName(delta)
-          .groupBy(col("sk_row"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      pinned
-    }
+    def ingest(batch: DataFrame): DataFrame = { step(batch, 0L); state() }
 
     /** Point estimates for `probes` against the current state. */
     def estimates(probes: DataFrame, probeCol: String): DataFrame =
       Sketches.cmsEstimates(probes, probeCol,
-        state.getOrElse(spark.emptyDataFrame
+        sketch.getOrElse(spark.emptyDataFrame
           .withColumn("sk_row", lit(0L)).withColumn("bucket", lit(0L))
           .withColumn("cnt", lit(0L))),
         depth, width)
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
   /** In-memory HLL session: register-max state. */
-  final class HllSession(spark: SparkSession, itemCol: String, p: Int = 8) {
-    @volatile private var state: Option[DataFrame] = None
+  final class HllSession(spark: SparkSession, itemCol: String, p: Int = 8)
+      extends FoldSession.InMemory("hll", hll(itemCol, p)) {
 
     /** Current `(idx, r)` registers. */
-    def registers: Option[DataFrame] = state
+    def registers: Option[DataFrame] = Option(state())
 
-    def ingest(batch: DataFrame): DataFrame = {
-      val delta = Sketches.hllRegisters(batch, itemCol, p)
-      val merged = state match {
-        case None => delta
-        case Some(s) => s.unionByName(delta)
-          .groupBy(col("idx")).agg(max(col("r")).as("r"))
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      pinned
-    }
+    def ingest(batch: DataFrame): DataFrame = { step(batch, 0L); state() }
 
     /** One-row `(m, zeros, z_int, est_raw)` as of the last ingest. */
-    def estimate: Option[DataFrame] = state.map(Sketches.hllEstimate(_, p))
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
+    def estimate: Option[DataFrame] = registers.map(Sketches.hllEstimate(_, p))
   }
 
   /** In-memory Bloom session: set-bit union state (the live
@@ -101,78 +81,43 @@ object StreamSketches {
     * table is always probe-ready).
     */
   final class BloomSession(spark: SparkSession, itemCol: String,
-      k: Int = 3, mBits: Int = 16384) {
-    @volatile private var state: Option[DataFrame] = None
+      k: Int = 3, mBits: Int = 16384)
+      extends FoldSession.InMemory("bloom", bloom(itemCol, k, mBits)) {
 
     /** Current `(pos)` set bits. */
-    def bits: Option[DataFrame] = state
+    def bits: Option[DataFrame] = Option(state())
 
-    def ingest(batch: DataFrame): DataFrame = {
-      val delta = Sketches.bloomBits(batch, itemCol, k, mBits)
-      val merged = state match {
-        case None => delta
-        case Some(s) => s.unionByName(delta).distinct()
-      }
-      val pinned = merged.localCheckpoint()
-      state = Some(pinned)
-      pinned
-    }
+    def ingest(batch: DataFrame): DataFrame = { step(batch, 0L); state() }
 
     /** Membership counts of `probe` against the current bits. */
     def probe(df: DataFrame, idCol: String, probeCol: String): DataFrame =
       Sketches.bloomProbe(df, idCol, probeCol,
-        state.getOrElse(spark.emptyDataFrame.withColumn("pos", lit(0L))),
+        bits.getOrElse(spark.emptyDataFrame.withColumn("pos", lit(0L))),
         k, mBits)
-
-    def start(docs: DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch), batchId)
-        }
-        .start()
   }
 
-  private val CmsSchema = StructType(Seq(
-    StructField("sk_row", LongType), StructField("bucket", LongType),
-    StructField("cnt", LongType)))
-  private val HllSchema = StructType(Seq(
-    StructField("idx", LongType), StructField("r", LongType)))
-  private val BloomSchema = StructType(Seq(StructField("pos", LongType)))
-
   /** Durable Count-Min: per-batch DELTA cells in a [[DurableLedger]]
-    * (a replayed batch overwrites its own directory — the additive
+    * (a replayed batch id is a first-writer-wins no-op — the additive
     * merge stays exactly-once), read-time sum fold. Compaction folds
     * segments without changing the sum.
     */
   final class DurableCmsSession(spark: SparkSession, ledgerPath: String,
-      itemCol: String, depth: Int = 4, width: Int = 512, compactEvery: Int = 0) {
+      itemCol: String, depth: Int = 4, width: Int = 512, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "count-min", ledgerPath, compactEvery,
+        cms(itemCol, depth, width)) {
 
     /** Committed per-batch delta cells (pre-fold). */
-    def committed: DataFrame = DurableLedger.load(spark, ledgerPath, CmsSchema)
+    def committed: DataFrame = ledger()
 
     /** The folded `(sk_row, bucket, cnt)` sketch over all commits. */
-    def sketch: DataFrame = committed
-      .groupBy(col("sk_row"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
+    def sketch: DataFrame = state()
 
     def estimates(probes: DataFrame, probeCol: String): DataFrame =
       Sketches.cmsEstimates(probes, probeCol, sketch, depth, width)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      DurableLedger.commit(
-        Sketches.cmsTable(batch, itemCol, depth, width), ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, CmsSchema, compactEvery)
+      step(batch, batchId)
       sketch
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 
@@ -180,32 +125,19 @@ object StreamSketches {
     * (idempotent — compaction and replay provably cannot change it).
     */
   final class DurableHllSession(spark: SparkSession, ledgerPath: String,
-      itemCol: String, p: Int = 8, compactEvery: Int = 0) {
+      itemCol: String, p: Int = 8, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "hll", ledgerPath, compactEvery, hll(itemCol, p)) {
 
-    def committed: DataFrame = DurableLedger.load(spark, ledgerPath, HllSchema)
+    def committed: DataFrame = ledger()
 
     /** The folded `(idx, r)` registers over all commits. */
-    def registers: DataFrame =
-      committed.groupBy(col("idx")).agg(max(col("r")).as("r"))
+    def registers: DataFrame = state()
 
     def estimate: DataFrame = Sketches.hllEstimate(registers, p)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      DurableLedger.commit(
-        Sketches.hllRegisters(batch, itemCol, p), ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, HllSchema, compactEvery)
+      step(batch, batchId)
       registers
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 
@@ -213,32 +145,21 @@ object StreamSketches {
     * fold (idempotent).
     */
   final class DurableBloomSession(spark: SparkSession, ledgerPath: String,
-      itemCol: String, k: Int = 3, mBits: Int = 16384, compactEvery: Int = 0) {
+      itemCol: String, k: Int = 3, mBits: Int = 16384, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "bloom", ledgerPath, compactEvery,
+        bloom(itemCol, k, mBits)) {
 
-    def committed: DataFrame = DurableLedger.load(spark, ledgerPath, BloomSchema)
+    def committed: DataFrame = ledger()
 
     /** The folded `(pos)` bit set over all commits. */
-    def bits: DataFrame = committed.select(col("pos")).distinct()
+    def bits: DataFrame = state()
 
     def probe(df: DataFrame, idCol: String, probeCol: String): DataFrame =
       Sketches.bloomProbe(df, idCol, probeCol, bits, k, mBits)
 
     def ingest(batch: DataFrame, batchId: Long): DataFrame = {
-      DurableLedger.commit(
-        Sketches.bloomBits(batch, itemCol, k, mBits), ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, BloomSchema, compactEvery)
+      step(batch, batchId)
       bits
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None)(
-        sink: (DataFrame, Long) => Unit): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-          sink(ingest(batch, batchId), batchId)
-        }
-        .start()
     }
   }
 }

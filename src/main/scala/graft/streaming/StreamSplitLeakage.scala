@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -22,49 +20,36 @@ import graft.textops.CurationOps
   * [[CurationOps.splitLeakage]] over everything ingested EXACTLY (all
   * columns integer counts; nothing floats). State is keyed by the
   * fingerprint — bounded by DISTINCT keys, the same asymptote the
-  * batch op's groupBy shuffles. Counts are additive / NOT idempotent,
-  * so the durable twin's replay safety comes from the ledger's
-  * overwrite-by-batch-id, and compaction is a free sum-fold.
+  * batch op's groupBy shuffles. Counts are additive / NOT idempotent:
+  * the durable twin's replay safety is [[FoldSession]]'s
+  * first-writer-wins commit, and compaction is a free sum-fold.
   */
 object StreamSplitLeakage {
+  import FoldSession.{Part, sumBy}
+
+  private val CountSchema = StructType.fromDDL(
+    "h STRING, n_train BIGINT, n_val BIGINT, n_test BIGINT, n_docs BIGINT")
+
+  private def counts(idCol: String, groupCol: String, keyCol: Column,
+      seed: String, trainPct: Int, valPct: Int) =
+    Part(CurationOps.splitKeyCounts(_, idCol, groupCol, keyCol, seed, trainPct, valPct),
+      sumBy("h")("n_train", "n_val", "n_test", "n_docs"), schema = CountSchema)
 
   /** In-memory session: one localCheckpointed count frame. */
   final class LeakageSession(spark: SparkSession, idCol: String,
       groupCol: String, keyCol: Column, seed: String,
-      trainPct: Int = 80, valPct: Int = 10) {
-    @volatile private var counts: DataFrame = null
+      trainPct: Int = 80, valPct: Int = 10)
+      extends FoldSession.InMemory("split leakage",
+        counts(idCol, groupCol, keyCol, seed, trainPct, valPct)) {
 
     /** Current merged (h, n_train, n_val, n_test, n_docs) state. */
-    def currentCounts: DataFrame = counts
+    def currentCounts: DataFrame = state()
 
     /** The leaked-key table as of the last ingest. */
-    def currentLeakage: DataFrame = {
-      require(counts != null, "leakage requested before any ingest")
-      CurationOps.splitLeakageFromCounts(counts)
-    }
+    def currentLeakage: DataFrame = CurationOps.splitLeakageFromCounts(required("leakage"))
 
-    def ingest(batch: DataFrame): Unit = {
-      val delta = CurationOps.splitKeyCounts(
-        batch, idCol, groupCol, keyCol, seed, trainPct, valPct)
-      counts = (if (counts == null) delta else mergeCounts(counts, delta))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
-
-  private[streaming] def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
-    a.union(b).groupBy(col("h")).agg(
-      sum(col("n_train")).as("n_train"), sum(col("n_val")).as("n_val"),
-      sum(col("n_test")).as("n_test"), sum(col("n_docs")).as("n_docs"))
-
-  private val CountSchema = StructType(Seq(
-    StructField("h", StringType),
-    StructField("n_train", LongType), StructField("n_val", LongType),
-    StructField("n_test", LongType), StructField("n_docs", LongType)))
 
   /** Durable session: per-batch count deltas in one ledger under
     * `path`, sum-folded at read; compactable freely (sum is
@@ -72,34 +57,16 @@ object StreamSplitLeakage {
     */
   final class DurableLeakageSession(spark: SparkSession, path: String,
       idCol: String, groupCol: String, keyCol: Column, seed: String,
-      trainPct: Int = 80, valPct: Int = 10, compactEvery: Int = 0) {
+      trainPct: Int = 80, valPct: Int = 10, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "split leakage", path, compactEvery,
+        counts(idCol, groupCol, keyCol, seed, trainPct, valPct)) {
 
-    def currentCounts: DataFrame =
-      DurableLedger.load(spark, path, CountSchema)
-        .groupBy(col("h")).agg(
-          sum(col("n_train")).as("n_train"), sum(col("n_val")).as("n_val"),
-          sum(col("n_test")).as("n_test"), sum(col("n_docs")).as("n_docs"))
+    def currentCounts: DataFrame = state()
 
     def currentLeakage: DataFrame =
       CurationOps.splitLeakageFromCounts(currentCounts.localCheckpoint())
 
-    /** Commit one batch's OWN deltas (replay-safe: redelivery
-      * overwrites the batch's directory with identical rows).
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      DurableLedger.commit(
-        CurationOps.splitKeyCounts(
-          batch, idCol, groupCol, keyCol, seed, trainPct, valPct),
-        path, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, path, CountSchema, compactEvery)
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    /** Commit one batch's OWN deltas. */
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ingest.Frontier
 import graft.sketch.Sketches
@@ -35,22 +34,25 @@ import graft.sketch.Sketches
   */
 object StreamTrapPanel {
 
-  /** Per-batch additive deltas: exact (host, template) URL counts and
-    * the max-mergeable register table.
-    */
-  private[streaming] def deltas(batch: DataFrame, hostCol: String,
-      pathCol: String, p: Int): (DataFrame, DataFrame) = {
-    val base = batch.select(col(hostCol).as("host"),
+  /** The batch's (host, template, path) projection both deltas read. */
+  private def base(batch: DataFrame, hostCol: String, pathCol: String): DataFrame =
+    batch.select(col(hostCol).as("host"),
       Frontier.urlTemplate(col(pathCol)).as("template"),
       col(pathCol).as("__path"))
-    val counts = base.groupBy(col("host"), col("template"))
+
+  /** Per-batch additive delta: exact (host, template) URL counts. */
+  private def urlCounts(batch: DataFrame, hostCol: String, pathCol: String): DataFrame =
+    base(batch, hostCol, pathCol).groupBy(col("host"), col("template"))
       .agg(count(lit(1)).as("n_urls"))
+
+  /** Per-batch max-mergeable register table. */
+  private def registers(batch: DataFrame, hostCol: String, pathCol: String,
+      p: Int): DataFrame = {
     val (idx, rank) = Sketches.hllRegisterCols(col("__path"), p)
-    val regs = base.select(col("host"), col("template"),
+    base(batch, hostCol, pathCol).select(col("host"), col("template"),
         idx.as("idx"), rank.as("rank"))
       .groupBy(col("host"), col("template"), col("idx"))
       .agg(max(col("rank")).as("r"))
-    (counts, regs)
   }
 
   /** The panel from folded state: exact URL mass, HLL distinct-path
@@ -100,41 +102,27 @@ object StreamTrapPanel {
     */
   def trapPanelSketched(urls: DataFrame, hostCol: String, pathCol: String,
       sharePct: Int, minPathsEst: Long, p: Int = 12): DataFrame = {
-    val (counts, regs) = deltas(urls, hostCol, pathCol, p)
-    derive(counts, regs, sharePct, minPathsEst, p)
+    derive(urlCounts(urls, hostCol, pathCol), registers(urls, hostCol, pathCol, p),
+      sharePct, minPathsEst, p)
   }
 
   /** In-memory session: counts fold by SUM, registers by MAX — both
     * order-free, so streamed ≡ batch bit-for-bit under any batching.
+    * One [[FoldSession]] part per state table.
     */
   final class TrapPanelSession(spark: SparkSession, hostCol: String,
-      pathCol: String, sharePct: Int, minPathsEst: Long, p: Int = 12) {
-    @volatile private var counts: DataFrame = null
-    @volatile private var regs: DataFrame = null
+      pathCol: String, sharePct: Int, minPathsEst: Long, p: Int = 12)
+      extends FoldSession.InMemory("trap panel",
+        FoldSession.Part(urlCounts(_, hostCol, pathCol),
+          FoldSession.sumBy("host", "template")("n_urls")),
+        FoldSession.Part(registers(_, hostCol, pathCol, p),
+          _.groupBy(col("host"), col("template"), col("idx")).agg(max(col("r")).as("r")))) {
 
-    def currentCounts: DataFrame = counts
-    def currentRegisters: DataFrame = regs
+    def currentCounts: DataFrame = state(0)
+    def currentRegisters: DataFrame = state(1)
 
-    def ingest(batch: DataFrame): Unit = {
-      val (dc, dr) = deltas(batch, hostCol, pathCol, p)
-      counts = (if (counts == null) dc
-        else counts.unionByName(dc)
-          .groupBy(col("host"), col("template"))
-          .agg(sum(col("n_urls")).as("n_urls"))).localCheckpoint()
-      regs = (if (regs == null) dr
-        else regs.unionByName(dr)
-          .groupBy(col("host"), col("template"), col("idx"))
-          .agg(max(col("r")).as("r"))).localCheckpoint()
-    }
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
 
-    def currentPanel: DataFrame = {
-      require(counts != null, "panel requested before any ingest")
-      derive(counts, regs, sharePct, minPathsEst, p)
-    }
-
-    def start(rows: DataFrame): StreamingQuery =
-      rows.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def currentPanel: DataFrame = derive(required("panel"), state(1), sharePct, minPathsEst, p)
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.textops.CurationOps
 
@@ -24,54 +23,46 @@ import graft.textops.CurationOps
   * panel or eval hold-out: per batch the work is the batch's OWN
   * bottom-k plus a merge over k rows of state.
   *
+  * Both sessions are one-part [[FoldSession]]s.
   * [[DurableWeightedSampleSession]] commits each batch's pruned
   * bottom-k candidates `(id, weight, es_key)` to a [[DurableLedger]];
   * read folds by concat → id-dedup → global bottom-k, so compaction
-  * never changes the sample, replay overwrites the same directory,
-  * and a restart resumes exactly.
+  * never changes the sample, a replayed batch id is a no-op, and a
+  * restart resumes exactly.
   */
 object StreamWeightedSample {
+  import FoldSession.Part
 
   /** In-memory session over `(idCol, weightCol)`-bearing frames. */
   final class WeightedSampleSession(spark: SparkSession,
-      idCol: String, weightCol: String, k: Int, salt: String) {
-    @volatile private var state: DataFrame = null
+      idCol: String, weightCol: String, k: Int, salt: String)
+      extends FoldSession.InMemory("weighted sample",
+        Part(CurationOps.weightedSample(_, idCol, weightCol, k, salt).drop("es_key"),
+          _.dropDuplicates(idCol))) {
 
     /** The maintained sample (the batch operator over state). */
-    def currentSample: DataFrame = {
-      require(state != null, "sample requested before any ingest")
-      CurationOps.weightedSample(state, idCol, weightCol, k, salt)
-    }
+    def currentSample: DataFrame =
+      CurationOps.weightedSample(required("sample"), idCol, weightCol, k, salt)
 
-    def ingest(batch: DataFrame): Unit = {
-      val pruned = CurationOps.weightedSample(
-        batch, idCol, weightCol, k, salt).drop("es_key")
-      state = (if (state == null) pruned
-               else state.unionByName(
-                 pruned.select(state.columns.map(col).toSeq: _*))
-                 .dropDuplicates(idCol))
-        .localCheckpoint()
-    }
-
-    def start(docs: DataFrame): StreamingQuery =
-      docs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) => ingest(batch) }
-        .start()
+    def ingest(batch: DataFrame): Unit = step(batch, 0L)
   }
 
-  private val Schema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("weight", LongType),
-    StructField("es_key", DoubleType)))
+  private val Schema = StructType.fromDDL("id BIGINT, weight BIGINT, es_key DOUBLE")
 
   /** Durable session over `(id, weight)` rows (long id/weight — the
     * durable document sessions' shape).
     */
   final class DurableWeightedSampleSession(spark: SparkSession,
-      ledgerPath: String, k: Int, salt: String, compactEvery: Int = 0) {
+      ledgerPath: String, k: Int, salt: String, compactEvery: Int = 0)
+      extends FoldSession.Durable(spark, "weighted sample", ledgerPath, compactEvery,
+        Part(batch => CurationOps.weightedSample(
+            batch.select(col("id").cast("long").as("id"),
+              col("weight").cast("long").as("weight")),
+            "id", "weight", k, salt),
+          _.dropDuplicates("id"), schema = Schema)) {
 
     /** The committed candidate rows (concat of per-batch bottom-k's). */
-    def candidates: DataFrame = DurableLedger.load(spark, ledgerPath, Schema)
+    def candidates: DataFrame = ledger()
 
     /** The maintained sample — the batch operator's selection over the
       * folded, deduplicated candidates (the stored `es_key` is the
@@ -79,26 +70,8 @@ object StreamWeightedSample {
       * self-describing for audits).
       */
     def currentSample: DataFrame =
-      CurationOps.weightedSample(
-        candidates.dropDuplicates("id").drop("es_key"),
-        "id", "weight", k, salt)
+      CurationOps.weightedSample(state().drop("es_key"), "id", "weight", k, salt)
 
-    def ingest(batch: DataFrame, batchId: Long): Unit = {
-      val pruned = CurationOps.weightedSample(
-        batch.select(col("id").cast("long").as("id"),
-          col("weight").cast("long").as("weight")),
-        "id", "weight", k, salt)
-      DurableLedger.commit(pruned, ledgerPath, batchId)
-      if (compactEvery > 0)
-        DurableLedger.maybeCompact(spark, ledgerPath, Schema, compactEvery)
-      ()
-    }
-
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None): StreamingQuery = {
-      val w = docs.writeStream.outputMode("append")
-      checkpointLocation.foreach(w.option("checkpointLocation", _))
-      w.foreachBatch { (batch: DataFrame, batchId: Long) => ingest(batch, batchId) }
-        .start()
-    }
+    def ingest(batch: DataFrame, batchId: Long): Unit = step(batch, batchId)
   }
 }

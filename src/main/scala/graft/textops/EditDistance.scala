@@ -48,12 +48,15 @@ object EditDistance {
     * Shape: explode variants → self equi-join on the 64-bit HASH of the
     * variant (the shuffle and the join compare 8-byte longs, never the
     * variant strings; a hash collision only widens the candidate set
-    * the verify prunes anyway) → one plain-levenshtein filter →
-    * `distinct` collapses pairs that met through several shared
-    * variants (at most L+1). The 3-arg threshold levenshtein was
-    * measured SLOWER here and rejected — see SCALING.md. No cross join
-    * anywhere; the length filter inside the join condition discards the
-    * len-diff > maxDist corner early.
+    * the verify prunes anyway; each side aliases the key, `__vha` /
+    * `__vhb`, so the condition names two distinct columns) → one
+    * bounded `levenshtein(a, b, maxDist)` per candidate, in the
+    * projection → `distinct` collapses pairs that met through several
+    * shared variants (at most L+1). The bounded form sits after the
+    * join, not in its condition: there it was evaluated on top of the
+    * pushed-down predicate and measured slower (SCALING.md). No cross
+    * join anywhere; the length filter inside the join condition
+    * discards the len-diff > maxDist corner early.
     */
   def similarPairs(
       df: DataFrame, idCol: String, strCol: String, maxDist: Int): DataFrame = {
@@ -68,10 +71,10 @@ object EditDistance {
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .withColumn("__v", explode(deletionVariants1(col("__s"))))
       .select(col("__id"), col("__s"), xxhash64(col("__v")).as("__vh"))
-    val a = vars.select(col("__id").as("id_a"), col("__s").as("__sa"), col("__vh"))
-    val b = vars.select(col("__id").as("id_b"), col("__s").as("__sb"), col("__vh"))
+    val a = vars.select(col("__id").as("id_a"), col("__s").as("__sa"), col("__vh").as("__vha"))
+    val b = vars.select(col("__id").as("id_b"), col("__s").as("__sb"), col("__vh").as("__vhb"))
     a.join(b,
-        a("__vh") === b("__vh") && col("id_a") < col("id_b") &&
+        col("__vha") === col("__vhb") && col("id_a") < col("id_b") &&
           abs(length(col("__sa")) - length(col("__sb"))) <= maxDist)
       // bounded form: levenshtein(a, b, k) early-exits past k (banded
       // O(n·k) DP instead of the full O(n²) matrix — the verify is the

@@ -245,9 +245,11 @@ object NearDup {
     * NEW crawl `b` deduplicated against an EXISTING corpus `a`, which
     * is never re-examined against itself): every verified pair
     * `(id_a, id_b, jaccard >= threshold)` with `id_a` from `a` and
-    * `id_b` from `b`. Ids must be disjoint across the two frames (they
-    * come from different corpora; the verify relation unions both
-    * sides' shingles by id).
+    * `id_b` from `b`. Ids are expected to be disjoint across the two
+    * frames (they come from different corpora, and a drop-list treats
+    * an id as one document). The verify does not rely on it: the split
+    * [[verifyJaccard]] reads `a`'s shingles for `id_a` and `b`'s for
+    * `id_b`, never a union of both sides.
     *
     * Built from [[minhashLshPairs]]'s own phases — the only change is
     * the candidate join: `a`-side bands against `b`-side bands instead

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.util.Jobs
+
 /** Embedding similarity search (BASELINE.json north star; operates on
   * the `embeddings` table: `embedding: array<float>`).
   *
@@ -964,18 +966,13 @@ object Vectors {
     // when it is an upper layer's only member). Self is excluded only
     // in the final re-rank.
     val sc = spark.sparkContext
-    def labeled[T](desc: String)(f: => T): T = {
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(desc)
-      try f finally sc.setJobDescription(prev)
-    }
     val entry = q.select($"query_id")
       .crossJoin(broadcast(entryMembers.select($"id".as("cand"))))
-    var b = labeled("hnsw: entry beam")(rankBeam(entry, beam).localCheckpoint())
+    var b = Jobs.labeled(sc, "hnsw: entry beam")(rankBeam(entry, beam).localCheckpoint())
     var li = 0
     for (edges0 <- layerEdgesDesc) {
       val edges = if (hops > 1)
-        labeled(s"hnsw: layer $li edges")(edges0.localCheckpoint())
+        Jobs.labeled(sc, s"hnsw: layer $li edges")(edges0.localCheckpoint())
       else edges0
       for (h <- 1 to hops) {
         val expanded = b.select($"query_id", $"cand".as("src"))
@@ -983,7 +980,7 @@ object Vectors {
           .select($"query_id", $"dst".as("cand"))
           .union(b.select($"query_id", $"cand"))
           .distinct()
-        b = labeled(s"hnsw: layer $li hop $h beam")(
+        b = Jobs.labeled(sc, s"hnsw: layer $li hop $h beam")(
           rankBeam(expanded, beam).localCheckpoint())
       }
       li += 1
