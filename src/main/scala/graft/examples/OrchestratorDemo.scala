@@ -62,6 +62,7 @@ object OrchestratorDemo {
       .show(truncate = false)
     println("errors:")
     result.errors.show(truncate = false)
+    result.release()
     spark.stop()
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *    reference's OpenAI Batch flow — the file round-trip itself is
   *    driver-side control, not a Spark operator (reference
   *    `batch_file_station.py:120-420`);
-  *  - an inline `mapPartitions` HTTP exchange with bounded parallelism
-  *    for the online path (out of scope offline).
+  *  - [[InlineExchange]] — per-request calls inside a `mapPartitions`
+  *    stage with bounded parallelism, for the online path.
   *
   * Requests carry at minimum (custom_id, body_json).
   */

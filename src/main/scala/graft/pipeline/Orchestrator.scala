@@ -34,6 +34,17 @@ import graft.vocab.{BruteSearch, Concept}
   * dropped to `errors` (abort-on-error, reference `:294-319`); a failed
   * optional field nulls that field and records the error, keeping the
   * company (reference per-field try blocks).
+  *
+  * Shared frames are computed once, eagerly: `process` runs the exchange
+  * rounds before it returns, as the reference bot does. Each boundary —
+  * the input texts, the round-1 requests and responses, and per concept
+  * field the chunk+brute frame, the search responses, the mapping frame
+  * and the mapping responses — is materialized into the result's
+  * [[graft.util.CacheScope]] under a job label (`orchestrator: texts`,
+  * `orchestrator: round 1`, `orchestrator: <field> search`,
+  * `orchestrator: <field> mapping`), and every later plan reads a leaf
+  * over those blocks instead of the boundary's lineage. `manufacturers`
+  * and `errors` stay lazy over the leaves.
   */
 object Orchestrator {
 
@@ -41,9 +52,13 @@ object Orchestrator {
 
   final case class FieldError(etld1: String, field: String, error: String)
 
-  /** `release()` unpersists every frame the orchestration cached —
-    * call AFTER materializing `manufacturers`/`errors`; releasing
-    * earlier recomputes lineage through the exchange (replay hazard).
+  /** `release()` frees the blocks of every frame the orchestration
+    * materialized. Each boundary was computed once and its lineage cut,
+    * so call it AFTER the last action on `manufacturers`/`errors`: an
+    * action after `release()` fails (block not found) instead of
+    * re-calling the transport. At 100 TB scale this is also what holds
+    * `texts` once in block storage, where a lazy plan would re-derive it
+    * in each of the ~8 branches that read it.
     */
   final case class Result(manufacturers: DataFrame, errors: Dataset[FieldError],
       caches: graft.util.CacheScope) {
@@ -87,28 +102,29 @@ object Orchestrator {
     import spark.implicits._
 
     val caches = new graft.util.CacheScope
+    def hold[T](phase: String)(ds: Dataset[T]): Dataset[T] =
+      graft.util.Jobs.labeled(spark.sparkContext, s"orchestrator: $phase")(caches.materialize(ds))
+    val docs = hold("texts")(texts)
     val presentPairs = present.getOrElse(
       Seq.empty[(String, String)].toDF("etld1", "field_type"))
     // filter BEFORE chunking: with a large present overlay (the re-run
     // case) the tokenizer flatMap must not run for work that is then
     // anti-joined away
     def textsWithout(label: String): Dataset[CompanyText] =
-      texts.join(presentPairs.filter($"field_type" === label).select($"etld1"),
+      docs.join(presentPairs.filter($"field_type" === label).select($"etld1"),
         Seq("etld1"), "left_anti").as[CompanyText]
 
     // ---- round 1: binary / desc / address requests ----------------------
-    val r1Requests =
+    val r1Requests = hold("round 1")(
       firstChunkRequests(textsWithout("is_manufacturer"), "is_manufacturer", firstChunkBudget, tok, "<binary prompt>")
         .unionByName(firstChunkRequests(textsWithout("business_desc"), "business_desc", firstChunkBudget, tok, "<desc prompt>"))
-        .unionByName(firstChunkRequests(textsWithout("addresses"), "addresses", firstChunkBudget, tok, "<address prompt>"))
-        .transform(caches.persistDf) // chunking runs once, not once per downstream branch
-    // Persist at the exchange boundary: downstream plans reference these
-    // results from several actions, and an un-persisted lineage would
-    // re-invoke the transport per action (replay hazard + cost).
-    val r1Responses = exchange.execute(r1Requests)
+        .unionByName(firstChunkRequests(textsWithout("addresses"), "addresses", firstChunkBudget, tok, "<address prompt>")))
+    // Materialized at the exchange boundary: downstream plans read these
+    // results from several actions, and a lazy lineage would re-invoke
+    // the transport per action (replay hazard + cost).
+    val r1Responses = hold("round 1")(exchange.execute(r1Requests)
       .withColumn("content", Ledger.responseContent($"response_json"))
-      .select($"custom_id", $"content")
-      .transform(caches.persistDf)
+      .select($"custom_id", $"content"))
     val r1 = r1Requests.join(r1Responses, Seq("custom_id"), "left")
       .withColumn("field", split($"custom_id", ">").getItem(1))
       .select($"etld1", $"field", $"content")
@@ -124,7 +140,7 @@ object Orchestrator {
 
     // Companies whose is_manufacturer was skipped-as-present still flow
     // through the gate (decision supplied via the gtBinary overlay).
-    val skippedBinary = texts.toDF()
+    val skippedBinary = docs.toDF()
       .join(presentPairs.filter($"field_type" === "is_manufacturer").select($"etld1"),
         Seq("etld1"), "left_semi")
       .select($"etld1",
@@ -143,7 +159,7 @@ object Orchestrator {
         $"d._3".as("desc_error"))
     val addresses = r1.filter($"field" === "addresses")
       .select($"etld1", parseAddrs($"content").as("addresses"))
-    val emails = texts.toDF()
+    val emails = docs.toDF()
       .select($"etld1", Emails.emailsCol($"text").as("email_addresses"))
 
     // ---- gate: GT overlay of the binary decision ------------------------
@@ -160,7 +176,7 @@ object Orchestrator {
 
     // ---- round 2: content extraction for passing companies --------------
     val passing = alive.filter($"final_is_manufacturer").select($"etld1")
-    val passingTexts = texts.join(passing, "etld1").as[CompanyText]
+    val passingTexts = docs.join(passing, "etld1").as[CompanyText]
 
     val conceptResults: Seq[(String, DataFrame, Dataset[FieldError])] = conceptFields.map { strat =>
       // T27: companies that already have this concept field skip the
@@ -172,19 +188,18 @@ object Orchestrator {
       val chunks = Chunker.chunkDocs(
         fieldTexts.map(c => (c.etld1, c.version_id, c.text)), strat, tok)
       // custom_id hoisted so requests and evidence share one definition,
-      // and the chunk+brute pipeline is persisted — it feeds both.
-      val withBrute = BruteSearch.searchColumn(chunks.toDF(), "text", vocab, "brute")
+      // and the chunk+brute pipeline is materialized — it feeds both.
+      val search = s"${strat.fieldType} search"
+      val withBrute = hold(search)(BruteSearch.searchColumn(chunks.toDF(), "text", vocab, "brute")
         .withColumn("custom_id", concat_ws(">", $"etld1", lit(strat.fieldType),
           lit("llm_search"), lit("chunk"),
-          concat($"chunk_start", lit(":"), $"chunk_end")))
-        .transform(caches.persistDf)
+          concat($"chunk_start", lit(":"), $"chunk_end"))))
       val reqs = withBrute.select($"etld1", $"custom_id", $"text")
         .withColumn("body_json", RequestBlob.bodyJson($"custom_id", "gpt-4o-mini",
           lit(s"<${strat.fieldType} search prompt>"), $"text", 7500))
-      val responses = exchange.execute(reqs)
+      val responses = hold(search)(exchange.execute(reqs)
         .withColumn("content", Ledger.responseContent($"response_json"))
-        .select($"custom_id", $"content")
-        .transform(caches.persistDf)
+        .select($"custom_id", $"content"))
       val evidence = withBrute
         .join(responses, Seq("custom_id"), "inner")
         .select($"etld1", lit(strat.fieldType).as("field_type"),
@@ -204,19 +219,19 @@ object Orchestrator {
       val companyUnmatched = withBrute.join(responses, Seq("custom_id"), "inner")
         .select($"etld1", explode_outer(unmatchedUdf($"content")).as("kw"))
         .groupBy($"etld1").agg(collect_set($"kw").as("unmatched"))
-      val allMapping = fieldTexts.map(c =>
+      // materialized: it feeds both the request filter and the response join
+      val mapping = s"${strat.fieldType} mapping"
+      val allMapping = hold(mapping)(fieldTexts.map(c =>
           (c.etld1, s"${c.etld1}>${strat.fieldType}>mapping")).toDF("etld1", "custom_id")
         .join(companyUnmatched, Seq("etld1"), "left")
         .withColumn("unmatched", coalesce($"unmatched", array()))
-        .withColumn("dummy", graft.vocab.Mapping.dummyMappingResponse("unmatched"))
-        .transform(caches.persistDf) // feeds both the request filter and the response join
+        .withColumn("dummy", graft.vocab.Mapping.dummyMappingResponse("unmatched")))
       val mappingReqs = allMapping.filter($"dummy".isNull)
         .select($"etld1", $"custom_id")
         .withColumn("body_json", RequestBlob.bodyJson($"custom_id", "gpt-4o-mini",
           lit("<mapping prompt>"), lit(""), 7500))
-      val mappingResponses = exchange.execute(mappingReqs)
-        .withColumn("content", Ledger.responseContent($"response_json"))
-        .transform(caches.persistDf)
+      val mappingResponses = hold(mapping)(exchange.execute(mappingReqs)
+        .withColumn("content", Ledger.responseContent($"response_json")))
       // Field-level error isolation: an unparseable mapping response
       // drops this field for that company (recorded in errors) instead
       // of failing the whole job inside reconcile's mapGroups.

@@ -214,7 +214,8 @@ object StreamHeavyHitters {
 
   /** [[HhSession]] with per-batch summaries in a [[DurableLedger]]
     * parquet table. Each batch commits its OWN deterministic summary
-    * (replays rewrite identical rows); reads sum residuals across every
+    * (a replayed published batch writes nothing: the commit is
+    * first-writer-wins); reads sum residuals across every
     * committed directory — an associative fold, so compaction never
     * changes the answer — then apply ONE capacity prune. Because the
     * durable read prunes once instead of once per merge, its residuals
@@ -273,10 +274,10 @@ object StreamHeavyHitters {
 
   /** [[GroupedHhSession]] with per-batch per-group summaries in a
     * [[DurableLedger]] — the [[DurableHhSession]] contract with a
-    * group column: replay rewrites identical rows, the read-side fold
-    * sums residuals per (group, item) and prunes ONCE per group (so
-    * durable residuals are never less accurate than in-memory ones),
-    * and compaction never changes an answer.
+    * group column: a replayed published batch writes nothing, the
+    * read-side fold sums residuals per (group, item) and prunes ONCE per
+    * group (so durable residuals are never less accurate than in-memory
+    * ones), and compaction never changes an answer.
     */
   final class DurableGroupedHhSession(spark: SparkSession, path: String,
       groupCol: String, itemCol: String, capacity: Int, compactEvery: Int = 0) {

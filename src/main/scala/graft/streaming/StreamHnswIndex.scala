@@ -226,8 +226,9 @@ object StreamHnswIndex {
     *
     * Replay safety is the standard seam discipline: every commit is
     * derived from (batch, ledgers-excluding-this-batch), so a replayed
-    * micro-batch rewrites exactly its own directories with identical
-    * rows. The maintained graph equals the in-memory session's — and
+    * micro-batch re-derives exactly its own directories' rows; the
+    * first-writer-wins commit leaves the directories already published
+    * as they are and publishes only the missing ones. The maintained graph equals the in-memory session's — and
     * therefore the from-scratch batch build's — exactly (spec-pinned
     * across a simulated restart).
     *
@@ -300,7 +301,8 @@ object StreamHnswIndex {
         .emptyRDD[org.apache.spark.sql.Row], schema)
 
     /** Assign + commit one batch (replay-safe: every read excludes
-      * this batch's own directories; every commit overwrites them).
+      * this batch's own directories, and a commit to a directory that is
+      * already published writes nothing — first-writer-wins).
       */
     def ingest(batch: DataFrame, batchId: Long): Unit = {
       val priorCorpus = DurableLedger

@@ -29,9 +29,10 @@ import graft.textops.Retrieval
   * query terms| + the doc-stat aggregate — never a corpus text scan.
   *
   * [[DurableSearchIndexSession]] commits each batch's delta rows to
-  * two [[DurableLedger]]s (docs + postings): replay overwrites the
-  * batch's own directories, restarts resume from disk, and compaction
-  * is a row concatenation the read side re-resolves.
+  * two [[DurableLedger]]s (docs + postings): the commit is
+  * first-writer-wins, so a replayed published batch writes nothing,
+  * restarts resume from disk, and compaction is a row concatenation
+  * the read side re-resolves.
   *
   * UPDATES AND DELETES (the [[graft.plans.Merge]] seam expressed in
   * ledger form): every committed row carries its batch id as a
@@ -40,9 +41,9 @@ import graft.textops.Retrieval
   * rows (they become dead weight until a compaction rewrite), and a
   * delete commits a `dl = -1` tombstone doc row the read side filters
   * after resolution. Both are per-doc facts like everything else
-  * here: replay of an upsert or delete batch overwrites its own
-  * directory with identical rows, and compaction's concat fold
-  * changes no winner.
+  * here: a replayed upsert or delete batch that was already published
+  * writes nothing (first-writer-wins commit), and compaction's concat
+  * fold changes no winner.
   */
 object StreamSearchIndex {
 

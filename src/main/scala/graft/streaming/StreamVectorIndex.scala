@@ -39,8 +39,9 @@ import graft.vectors.Vectors
   * their batch id as a VERSION, the read side resolves
   * newest-version-wins per id, `upsert` out-versions an id's old
   * vector, and `delete` commits a `cell = -1` tombstone filtered after
-  * resolution — all per-id facts, so replay overwrites identically and
-  * compaction's concat fold changes no winner.
+  * resolution — all per-id facts, so a replayed published batch writes
+  * nothing (first-writer-wins commit) and compaction's concat fold
+  * changes no winner.
   */
 object StreamVectorIndex {
 
@@ -234,8 +235,9 @@ object StreamVectorIndex {
     /** Re-index the batch's ids with their NEW vectors: the committed
       * rows out-version the old ones (newest-wins resolution) — an
       * unseen id just inserts. The batch id must be newer than the
-      * versions it replaces (foreachBatch ids are monotone). Replay
-      * overwrites the batch's own directory with identical rows.
+      * versions it replaces (foreachBatch ids are monotone). Replaying
+      * a published batch id writes nothing: the commit is
+      * first-writer-wins.
       */
     def upsert(batch: DataFrame, batchId: Long): Unit = {
       val rows = inner.assign(batch)

@@ -1,37 +1,44 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftbridge.BlockBridge
 
-/** Tracks persisted frames so their blocks can be released explicitly
-  * once the consuming actions complete, instead of accumulating in a
-  * long-lived session until the ContextCleaner happens to collect the
-  * plans (multi-round orchestrations persist per concept field — the
-  * leak grows with rounds × fields).
+/** Materializes frames into block storage and frees those blocks
+  * explicitly once the consuming actions complete, instead of letting
+  * them accumulate in a long-lived session until the ContextCleaner
+  * happens to collect the plans (multi-round orchestrations materialize
+  * per concept field — the leak would grow with rounds × fields).
+  *
+  * [[materialize]] computes a frame exactly once, eagerly (a local
+  * checkpoint), and returns a frame whose plan is a leaf over those
+  * blocks: later plans carry neither the frame's lineage nor its
+  * analysis and planning cost, and no later action recomputes it — at
+  * an exchange boundary, no later action re-calls the transport.
   *
   * Lifecycle is caller-managed: the owner of the scope calls
   * [[release]] after materializing every output derived from the
-  * tracked frames; releasing earlier silently recomputes lineage —
-  * which at an exchange boundary means re-invoking the transport.
+  * tracked frames. The lineage is gone, so an action that reads a
+  * released frame fails (block not found) rather than recomputing it;
+  * the same holds for blocks lost with an executor, after which the
+  * caller re-runs the work that built the scope.
   */
 final class CacheScope extends Serializable {
-  @transient private lazy val frames =
-    scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+  @transient private lazy val rdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
-  /** Persist and remember a frame. */
-  def persist[T](ds: Dataset[T]): Dataset[T] = synchronized {
-    ds.persist()
-    frames += ds
-    ds
+  /** Compute `ds` now and return a frame over its blocks. */
+  def materialize[T](ds: Dataset[T]): Dataset[T] = {
+    val leaf = ds.localCheckpoint(eager = true)
+    synchronized {
+      rdds ++= leaf.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+    }
+    leaf
   }
 
-  def persistDf(df: DataFrame): DataFrame = persist(df)
-
-  /** Currently tracked frames (test/introspection surface). */
-  def snapshot: Seq[Dataset[_]] = synchronized(frames.toSeq)
-
-  /** Unpersist everything tracked (non-blocking). */
+  /** Free the blocks of every materialized frame (non-blocking). */
   def release(): Unit = synchronized {
-    frames.foreach(_.unpersist())
-    frames.clear()
+    rdds.foreach(BlockBridge.free)
+    rdds.clear()
   }
 }

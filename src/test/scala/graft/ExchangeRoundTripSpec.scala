@@ -172,6 +172,28 @@ class InlineExchangeSpec extends SparkSpec {
     assert(!InlineExchangeSpec.called.contains("cached>x>chunk>0:1"))
     assert(InlineExchangeSpec.attempts.get("flaky>x>chunk>0:1") == 2)
   }
+
+  test("executeWithErrors: both frames read one materialization, freed by its scope") {
+    val requests = Seq(("flaky2>x>chunk>0:1", "{}"), ("dead2>x>chunk>0:1", "{}"),
+      ("fine2>x>chunk>0:1", "{}")).toDF("custom_id", "body_json")
+    val scope = new graft.util.CacheScope
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (ok, errors) = InlineExchange(InlineExchangeSpec.transport, maxParallelism = 2,
+      InlineExchange.RetryPolicy(maxAttempts = 3, backoffMs = 1)).executeWithErrors(requests, scope)
+    assert(ok.select("custom_id").as[String].collect().sorted.toSeq ==
+      Seq("fine2>x>chunk>0:1", "flaky2>x>chunk>0:1"))
+    assert(errors.as[(String, String)].collect().toSeq ==
+      Seq(("dead2>x>chunk>0:1", "permanently down")))
+    ok.count(); errors.count()
+    // the transport ran once per attempt, however often the frames are read
+    assert(InlineExchangeSpec.attempts.get("fine2>x>chunk>0:1") == 1)
+    assert(InlineExchangeSpec.attempts.get("flaky2>x>chunk>0:1") == 2)
+    assert(InlineExchangeSpec.attempts.get("dead2>x>chunk>0:1") == 3)
+    val held = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(held.nonEmpty)
+    scope.release()
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet intersect held).isEmpty)
+  }
 }
 
 object InlineExchangeSpec {

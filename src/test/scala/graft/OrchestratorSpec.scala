@@ -1,7 +1,7 @@
 package graft
 
 import graft.chunk.ChunkingStrat
-import graft.exchange.MockExchange
+import graft.exchange.{InlineExchange, MockExchange}
 import graft.functions.WhitespaceTokenizer
 import graft.pipeline.Orchestrator
 import graft.pipeline.Orchestrator.CompanyText
@@ -22,27 +22,7 @@ class OrchestratorSpec extends SparkSpec {
     CompanyText("broken.example", "v1", "Parse failure company.\nStill has text."),
     CompanyText("human-says-yes.example", "v1", "Machine calls this not a manufacturer.\nISO 9001 appears here."))
 
-  private val exchange = new MockExchange((id, body) => {
-    val etld1 = id.split(">")(0)
-    val field = id.split(">")(1)
-    field match {
-      case "is_manufacturer" => etld1 match {
-        case "maker.example" => """{"answer": true, "confidence": 90, "reason": "makes things"}"""
-        case "blog.example" => """{"answer": false, "confidence": 95, "reason": "a blog"}"""
-        case "broken.example" => "THIS IS NOT JSON {{{"
-        case _ => """{"answer": false, "confidence": 60, "reason": "unclear"}"""
-      }
-      case "business_desc" =>
-        s"""{"name": "${etld1.split('.').head}", "description": "About $etld1"}"""
-      case "addresses" =>
-        """[{"city":"Phoenix","state":"AZ","address_lines":["1 Main St"]}]"""
-      case "certificates" =>
-        if (id.contains("llm_search")) {
-          if (body.contains("ISO 9001")) """["ISO 9001"]""" else """[]"""
-        } else "{}"
-      case _ => null
-    }
-  })
+  private val exchange = new MockExchange(OrchestratorSpec.respond)
 
   private lazy val result = Orchestrator.process(
     texts.toDS(), exchange, vocab,
@@ -52,6 +32,8 @@ class OrchestratorSpec extends SparkSpec {
 
   private lazy val rows = result.manufacturers.collect()
     .map(r => r.getAs[String]("etld1") -> r).toMap
+
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("binary decision + GT override gate content extraction") {
     assert(rows("maker.example").getAs[Boolean]("is_manufacturer"))
@@ -101,6 +83,7 @@ class OrchestratorSpec extends SparkSpec {
         inner.execute(requests)
       }
     }
+    val before = persistentIds
     // haskw.example already has certificates AND its binary decision;
     // its stored is_manufacturer=true arrives via the gtBinary overlay.
     val r = Orchestrator.process(
@@ -123,14 +106,51 @@ class OrchestratorSpec extends SparkSpec {
     // the untouched company still extracts everything
     assert(rs("fresh.example").getAs[scala.collection.Seq[String]]("certificates").toSeq ==
       Seq("ISO 9001"))
-    // caller-managed cache lifecycle: release drops every frame this
-    // orchestration persisted (checked per-frame — the session is
-    // shared with other suites, so a global cache-empty check is racy)
-    val tracked = r.caches.snapshot
-    assert(tracked.nonEmpty)
+    // caller-managed block lifecycle: release frees every frame this
+    // orchestration materialized (checked by RDD id — the session is
+    // shared with other suites, so a global empty check is racy)
+    val held = persistentIds -- before
+    assert(held.nonEmpty)
     r.release()
-    tracked.foreach(df =>
-      assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    assert((persistentIds intersect held).isEmpty)
+  }
+
+  test("every boundary is computed once: one transport call per request, released by id") {
+    OrchestratorSpec.calls.clear()
+    val before = persistentIds
+    val docs = texts.toDS()
+    val r = Orchestrator.process(
+      docs, InlineExchange(OrchestratorSpec.transport, maxParallelism = 2,
+        retry = InlineExchange.RetryPolicy(maxAttempts = 3, backoffMs = 0)),
+      vocab,
+      conceptFields = Seq(ChunkingStrat("certificates", 50, 0.0, 25)),
+      tok = WhitespaceTokenizer,
+      gtBinary = Seq(("human-says-yes.example", true)).toDF("etld1", "human_answer"))
+    import scala.jdk.CollectionConverters._
+    // process runs the exchange rounds before it returns
+    val ranRounds = OrchestratorSpec.calls.asScala.toMap
+    assert(texts.forall(t => ranRounds.keys.exists(_.startsWith(s"${t.etld1}>is_manufacturer>"))))
+    val rs = r.manufacturers.collect().map(r => r.getAs[String]("etld1") -> r).toMap
+    assert(r.errors.collect().map(e => (e.etld1, e.field)).toSeq ==
+      Seq(("broken.example", "is_manufacturer")))
+    assert(rs("maker.example").getAs[scala.collection.Seq[String]]("certificates").toSeq ==
+      Seq("ISO 9001"))
+    // neither action reached the transport again: one call per request,
+    // plus the one retry of the request whose first attempt throws
+    val calls = OrchestratorSpec.calls.asScala.toMap
+    assert(calls == ranRounds)
+    assert(calls.exists(_._1.contains(">llm_search>")) && calls.keys.exists(OrchestratorSpec.flaky))
+    calls.foreach { case (id, n) =>
+      assert(n == (if (OrchestratorSpec.flaky(id)) 2 else 1), id)
+    }
+    // later plans read leaves over the materialized blocks, not the input
+    val inputLeaves = docs.queryExecution.analyzed.collectLeaves()
+    assert(!r.manufacturers.queryExecution.analyzed.exists(inputLeaves.contains(_)))
+    // release frees what the orchestration and its exchange materialized
+    val held = persistentIds -- before
+    assert(held.nonEmpty)
+    r.release()
+    assert((persistentIds intersect held).isEmpty)
   }
 
   test("T26: fully-matched companies skip the mapping exchange round") {
@@ -170,5 +190,38 @@ class OrchestratorSpec extends SparkSpec {
       Seq("ISO 9001"))
     assert(rs("unknowns.example").getAs[scala.collection.Seq[String]]("certificates").toSeq ==
       Seq("ISO 9001"))
+  }
+}
+
+object OrchestratorSpec {
+  def respond(id: String, body: String): String = {
+    val etld1 = id.split(">")(0)
+    val field = id.split(">")(1)
+    field match {
+      case "is_manufacturer" => etld1 match {
+        case "maker.example" => """{"answer": true, "confidence": 90, "reason": "makes things"}"""
+        case "blog.example" => """{"answer": false, "confidence": 95, "reason": "a blog"}"""
+        case "broken.example" => "THIS IS NOT JSON {{{"
+        case _ => """{"answer": false, "confidence": 60, "reason": "unclear"}"""
+      }
+      case "business_desc" =>
+        s"""{"name": "${etld1.split('.').head}", "description": "About $etld1"}"""
+      case "addresses" =>
+        """[{"city":"Phoenix","state":"AZ","address_lines":["1 Main St"]}]"""
+      case "certificates" =>
+        if (id.contains("llm_search")) {
+          if (body.contains("ISO 9001")) """["ISO 9001"]""" else """[]"""
+        } else "{}"
+      case _ => null
+    }
+  }
+
+  /** The request whose first transport attempt throws. */
+  def flaky(id: String): Boolean = id.startsWith("blog.example>business_desc>")
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  val transport: InlineExchange.Transport = (id, body) => {
+    if (calls.merge(id, 1, (a, b) => a + b) == 1 && flaky(id))
+      throw new RuntimeException("transient")
+    respond(id, body)
   }
 }
