@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.util.Jobs
 
@@ -33,13 +34,10 @@ object ConnectedComponents {
     * irrelevant (symmetrized + deduped internally).
     *
     * Graphs with at most `localEdgeLimit` (distinct, directed) edges
-    * are solved by driver-side union-find instead of iterating — each
-    * distributed round costs whole Spark jobs of fixed latency, which
-    * dwarfs a sub-second exact solve for small pair lists (the same
-    * bounded-driver-work trade as the IVF centroid sample). The default
-    * cap (~128k edges ⇒ tens of MB of collected rows + boxed map
-    * entries) keeps the transient driver footprint small even under a
-    * default 1g driver heap; pass 0 to force the distributed path.
+    * are solved by driver-side union-find instead of iterating, behind
+    * the gate [[PageRank]] and [[Hits]] share ([[SmallGraph]]: one
+    * bounded collect of the canonical edge checkpoint is both the size
+    * probe and the data); pass 0 to force the distributed path.
     *
     * Mixed src/dst column types are fine: the canonicalizing
     * least/greatest projection widens both endpoints to their common
@@ -48,7 +46,7 @@ object ConnectedComponents {
     */
   def labels(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, localEdgeLimit: Long = 1L << 17,
+      maxIter: Int = 30, localEdgeLimit: Long = SmallGraph.DefaultLimit,
       algorithm: String = "min-label"): DataFrame = {
     require(algorithm == "min-label" || algorithm == "star",
       s"unknown algorithm '$algorithm' (expected min-label | star)")
@@ -72,20 +70,21 @@ object ConnectedComponents {
     // rows (half the distinct shuffle, half the checkpoint, half the
     // local path's collect; least/greatest also widens mixed src/dst
     // types exactly like the union did)
-    val cu = e.select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst")).distinct()
-      .localCheckpoint()
-    // the size gate counts DISTINCT DIRECTED edges (the old sym frame):
-    // each non-loop canonical row stands for 2, each self-loop for 1 —
-    // derived in the one probe aggregate instead of materializing 2|E|.
-    // localEdgeLimit = 0 forces the distributed path — skip the probe
-    // job it can never satisfy (the r13 fix, preserved).
-    def symCount: Long = {
-      val cnt = cu.agg(count(lit(1)).as("n"),
-        count(when(col("src") =!= col("dst"), 1)).as("nl")).head
-      cnt.getLong(0) + cnt.getLong(1)
-    }
-    if (localEdgeLimit > 0 && symCount <= localEdgeLimit) labelsLocal(cu)
+    //
+    // The size gate counts DISTINCT DIRECTED edges (the old sym frame):
+    // each non-loop canonical row stands for 2, each self-loop for 1.
+    // Every canonical row is at least one directed edge, so the shared
+    // gate's row count decides every graph it rejects, and the directed
+    // count of the rows it returns decides the rest — the same decision
+    // as a full directed count, with no probe job beyond the
+    // checkpoint's own (localEdgeLimit = 0 runs none at all).
+    val (cu, canonRows) = SmallGraph.checkpointUpTo(
+      e.select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst")).distinct(),
+      localEdgeLimit)
+    val small = canonRows.filter(rows =>
+      rows.iterator.map(r => if (r.get(0) == r.get(1)) 1L else 2L).sum <= localEdgeLimit)
+    if (small.isDefined) labelsLocal(cu, small.get)
     else if (algorithm == "star") labelsStar(cu, maxIter)
     else labelsDistributed(
       // min-label propagation needs BOTH directions; rebuild them from
@@ -100,7 +99,7 @@ object ConnectedComponents {
     * component label. Exact and deterministic — the distributed path
     * must agree with it (spec'd both ways).
     */
-  private def labelsLocal(sym: DataFrame): DataFrame = {
+  private def labelsLocal(cu: DataFrame, edges: Array[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     // Strings must sort by CODE POINT (= UTF-8 byte order), matching
     // Spark's UTF8String / DuckDB collation on the distributed path;
@@ -115,7 +114,7 @@ object ConnectedComponents {
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    sym.collect().foreach { row =>
+    edges.foreach { row =>
       val (a, b) = (row.get(0), row.get(1))
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
@@ -124,15 +123,9 @@ object ConnectedComponents {
       if (cmp(ra, rb) < 0) parent(rb) = ra
       else if (cmp(rb, ra) < 0) parent(ra) = rb
     }
-    val spark = sym.sparkSession
-    val nodeType = sym.schema.head.dataType
-    val rows = parent.keys.toSeq.map(n =>
-      org.apache.spark.sql.Row(n, find(n)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("label", nodeType))))
+    val nodeType = cu.schema.head.dataType
+    SmallGraph.frame(cu.sparkSession, parent.keys.toSeq.map(n => Row(n, find(n))),
+      StructType(Seq(StructField("node", nodeType), StructField("label", nodeType))))
   }
 
   private def compareCodePoints(x: String, y: String): Int = {
@@ -289,7 +282,7 @@ object ConnectedComponents {
     */
   def dedupClusters(pairs: DataFrame, idACol: String, idBCol: String,
       algorithm: String = "min-label",
-      localEdgeLimit: Long = 1L << 17): DataFrame =
+      localEdgeLimit: Long = SmallGraph.DefaultLimit): DataFrame =
     labels(pairs, idACol, idBCol,
         algorithm = algorithm, localEdgeLimit = localEdgeLimit)
       .select(

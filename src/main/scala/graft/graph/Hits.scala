@@ -1,7 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import java.lang.Math.{addExact, multiplyExact}
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** HITS (Kleinberg 1999) hub/authority scores over a weighted edge
   * list, in EXACT integer arithmetic — the [[PageRank]] float policy
@@ -29,38 +32,78 @@ import org.apache.spark.sql.functions._
   * Scale shape: each half-step is one keyed equi-join (edges ⋈ scores)
   * + one sum-aggregate on the opposite endpoint — node-id-keyed
   * shuffles, AQE-reusable partitioning, exactly the [[PageRank]]
-  * round; each round cuts lineage eagerly (both score frames feed the
-  * next round AND its max aggregate — two consumers, the
-  * redistributed-PageRank situation).
+  * round; each half-step cuts lineage eagerly (each score frame feeds
+  * the next half-step AND its max aggregate — two consumers, the
+  * redistributed-PageRank situation). Small graphs (edge and node
+  * frames each under 2^17 rows, the [[ConnectedComponents]] gate)
+  * skip those 2·iters cuts and are scored on the driver in the same
+  * arithmetic.
   */
 object Hits {
 
   /** Scores after `iters` rounds: `(node, hub, auth)`, one row per
     * node in `nodes` — MAX-normalized to `scale` each half-step;
     * nodes with no out-edges have hub 0, with no in-edges auth 0
-    * (after the first round). ENFORCED preconditions (each a bounded
-    * probe, failing loudly like `iters`/`scale`): edge weights are
-    * positive integers, `scale²·ΣW` fits in a Long (the half-step ×
-    * rescale product bound), and `nodes` covers every edge endpoint
-    * (rescale's left join would otherwise drop absent endpoints' mass
-    * each half-step).
+    * (after the first round). The final node join is an inner
+    * equi-join, so a NULL node yields no row and a node listed k times
+    * yields k² rows (its k score rows also weigh k in every half-step).
+    * ENFORCED preconditions (failing loudly like `iters`/`scale`): edge
+    * weights are positive integers, `scale²·ΣW` fits in a Long (the
+    * half-step × rescale product bound), and `nodes` covers every edge
+    * endpoint, NULL endpoints included (rescale's left join would
+    * otherwise drop absent endpoints' mass each half-step).
+    *
+    * A graph whose edge and node frames each fit under 2^17 rows is
+    * scored on the driver ([[SmallGraph]]) with the same semantics,
+    * preconditions and messages; overflow raises there too
+    * (`multiplyExact`/`addExact`, as ANSI arithmetic does in Spark).
     */
   def scores(
       nodes: DataFrame, nodeCol: String,
       edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
       iters: Int,
-      scale: Long = 100000L): DataFrame = {
+      scale: Long = 100000L): DataFrame =
+    scoresGated(nodes, nodeCol, edges, srcCol, dstCol, wCol, iters, scale,
+      SmallGraph.DefaultLimit)
+
+  /** [[scores]] behind a gate of `localEdgeLimit` rows; 0 forces the
+    * distributed path (the specs run every case on both paths).
+    */
+  private[graft] def scoresGated(
+      nodes: DataFrame, nodeCol: String,
+      edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
+      iters: Int, scale: Long, localEdgeLimit: Long): DataFrame = {
     require(iters >= 1, s"iters must be at least 1: $iters")
     require(scale > 0, s"scale must be positive: $scale")
+    val n = nodes.select(col(nodeCol).as("node"))
+    SmallGraph.graphUpTo(edges.select(
+        col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w")),
+        n, localEdgeLimit) match {
+      case (_, Some((edgeRows, nodeRows))) => scoresLocal(n, nodeRows, edgeRows, iters, scale)
+      case (ew, None) => scoresDistributed(n, ew, iters, scale)
+    }
+  }
+
+  private val CoverageMsg = "nodes must cover every edge endpoint (src and dst)"
+
+  /** Preconditions (1) and (2) of [[scores]], from the edge count, the
+    * non-NULL weight count, the least weight (0 when none) and the
+    * total weight.
+    */
+  private def requireWeights(n: Long, nw: Long, mn: Long, totalW: Long, scale: Long): Unit = {
+    require(n == nw && (n == 0L || mn > 0L), "edge weights must be positive integers")
+    require(scale <= Long.MaxValue / math.max(totalW, 1L) / scale,
+      s"scale^2 * total edge weight overflows 64-bit: scale=$scale totalW=$totalW")
+  }
+
+  private def scoresDistributed(nodes: DataFrame, ew: DataFrame, iters: Int,
+      scale: Long): DataFrame = {
     // every rescale (2 per round, each behind an eager localCheckpoint)
     // joins the node frame — left lazy, each cut re-executes the
     // caller's node-derivation subtree from the source (q169: the full
     // outlink extraction, 2×iters times; at corpus scale, one redundant
     // full scan per half-step). Materialize it once.
-    val n = nodes.select(col(nodeCol).as("node")).localCheckpoint()
-    val e = edges.select(
-      col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w"))
-    val ew = e.localCheckpoint()
+    val n = nodes.localCheckpoint()
     // three enforced preconditions (violations silently corrupted
     // scores when these were document-only). The r11 form costed them
     // as TWO bounded control-plane jobs (weight aggregate + coverage
@@ -89,11 +132,7 @@ object Hits {
       count(lit(1)).as("n"), count(col("w")).as("nw"),
       coalesce(min(col("w")), lit(0L)).as("mn"),
       coalesce(sum(col("w")), lit(0L)).as("tw")).head
-    require(agg.getLong(0) == agg.getLong(1) && (agg.getLong(0) == 0L || agg.getLong(2) > 0L),
-      "edge weights must be positive integers")
-    val totalW = agg.getLong(3)
-    require(scale <= Long.MaxValue / math.max(totalW, 1L) / scale,
-      s"scale^2 * total edge weight overflows 64-bit: scale=$scale totalW=$totalW")
+    requireWeights(agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3), scale)
     var h = n.withColumn("s", lit(scale)).localCheckpoint()
     var a: DataFrame = null
     for (i <- 1 to iters) {
@@ -106,6 +145,43 @@ object Hits {
     h.select(col("node"), col("s").as("hub"))
       .join(a.select(col("node"), col("s").as("auth")), Seq("node"))
       .select(col("node"), col("hub"), col("auth"))
+  }
+
+  /** The driver twin of [[scoresDistributed]] over the collected node
+    * and edge rows, exact to the value: the same three preconditions
+    * and messages, `Long` arithmetic that raises on overflow as ANSI
+    * arithmetic does in Spark, and the final inner node join's output —
+    * a node listed k times yields k² rows, a NULL node none.
+    */
+  private def scoresLocal(n: DataFrame, nodeRows: Array[Row], edgeRows: Array[Row],
+      iters: Int, scale: Long): DataFrame = {
+    val ws = edgeRows.filter(!_.isNullAt(2)).map(_.getLong(2))
+    requireWeights(edgeRows.length, ws.length, if (ws.isEmpty) 0L else ws.min,
+      ws.foldLeft(0L)(addExact), scale)
+    val g = new SmallGraph.Local(nodeRows, edgeRows)
+    import g.{m, mult, src, dst, w}
+    def covered(i: Int) = i < m && mult(i) > 0
+    require(src.forall(covered) && dst.forall(covered), CoverageMsg)
+    // raw(to) = Σ w·s(from) over each edge's mult(from) score rows,
+    // then the MAX rescale
+    def halfStep(s: Array[Long], from: Array[Int], to: Array[Int]): Array[Long] = {
+      val raw = new Array[Long](m + 1)
+      for (j <- w.indices)
+        raw(to(j)) = addExact(raw(to(j)),
+          multiplyExact(multiplyExact(w(j), s(from(j))), mult(from(j))))
+      val mx = math.max(raw.max, 1L)
+      raw.map(r => multiplyExact(r, scale) / mx)
+    }
+    var h = Array.fill(m + 1)(scale)
+    var a = h
+    for (_ <- 1 to iters) {
+      a = halfStep(h, src, dst)
+      h = halfStep(a, dst, src)
+    }
+    val rows = (0 until m).filter(mult(_) > 0).flatMap(i =>
+      Iterator.fill((mult(i) * mult(i)).toInt)(Row(g.id(i), h(i), a(i))))
+    SmallGraph.frame(n.sparkSession, rows, StructType(n.schema.fields ++ Seq(
+      StructField("hub", LongType), StructField("auth", LongType))))
   }
 
   /** `raw(to) = Σ w · s(from)` — one keyed join + one sum-aggregate.
@@ -122,8 +198,7 @@ object Hits {
         ew.join(s, ew(from) === s("node"), "left")
           .select(col(to).as("node"),
             (col("w") * when(s("node").isNull,
-              raise_error(lit(
-                "nodes must cover every edge endpoint (src and dst)")))
+              raise_error(lit(CoverageMsg)))
               .otherwise(col("s"))).as("c"))
       else
         ew.join(s, ew(from) === s("node"))
@@ -148,8 +223,7 @@ object Hits {
         n.withColumn("__in_n", lit(1)).join(raw, Seq("node"), "full")
           .select(col("node"),
             when(col("__in_n").isNull,
-              raise_error(lit(
-                "nodes must cover every edge endpoint (src and dst)")))
+              raise_error(lit(CoverageMsg)))
               .otherwise(coalesce(col("raw"), lit(0L))).as("raw"))
       else
         n.join(raw, Seq("node"), "left")

@@ -1,0 +1,101 @@
+package graft.graph
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
+
+/** The small-graph gate shared by [[ConnectedComponents]], [[PageRank]]
+  * and [[Hits]]: a graph whose frames each fit under `localEdgeLimit`
+  * rows is solved exactly on the driver. Every distributed round costs
+  * whole Spark jobs of fixed latency, which dwarfs a sub-second exact
+  * solve of a small graph (the same bounded-driver-work trade as the
+  * IVF centroid sample). The default cap, `1L << 17` rows, keeps the
+  * transient driver footprint at tens of MB even under a default 1g
+  * driver heap; `localEdgeLimit = 0` forces the distributed path.
+  */
+private[graph] object SmallGraph {
+
+  /** The default gate, in rows. */
+  val DefaultLimit: Long = 1L << 17
+
+  /** `df`'s local checkpoint, with its rows when it has at most
+    * `limit` of them. The size probe rides the materialization the
+    * distributed path needs anyway: one job fills the checkpoint's
+    * blocks and counts them, and only a small frame pays a second job
+    * that collects its rows from the blocks. A large frame thus costs
+    * exactly an eager checkpoint, and none of its rows reach the
+    * driver (a bounded `limit(limit + 1).collect()` probe ships up to
+    * `limit + 1` of them). `limit <= 0` checkpoints eagerly and probes
+    * nothing.
+    */
+  def checkpointUpTo(df: DataFrame, limit: Long): (DataFrame, Option[Array[Row]]) =
+    if (limit <= 0) (df.localCheckpoint(), None)
+    else {
+      val ck = df.localCheckpoint(eager = false)
+      val n = ck.queryExecution.toRdd.count()
+      (ck, if (n <= limit) Some(ck.collect()) else None)
+    }
+
+  /** `df`'s rows when it has at most `limit` of them: one bounded
+    * `limit(limit + 1).collect()`, for a frame that is not
+    * checkpointed.
+    */
+  private def rowsUpTo(df: DataFrame, limit: Long): Option[Array[Row]] = {
+    val rows = df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length <= limit) Some(rows) else None
+  }
+
+  /** The edge checkpoint of a weighted graph, with the edge and node
+    * rows when the graph qualifies for the driver: both frames fit
+    * under `limit`, and the node column and both endpoint columns
+    * (`edges`' `src`/`dst`) share one integral or (binary-collated)
+    * string type. The local solvers compare ids with Scala equality,
+    * which is Spark's join equality only there: Spark widens mixed
+    * types first, normalizes floating-point zeros and NaN, and compares
+    * binary by content and collated strings by collation. The edges
+    * are probed first ([[checkpointUpTo]]): they are the frame that
+    * outgrows the cap. The node frame is probed only when the edges
+    * fit, lazily — a small graph's node lineage then runs once, and a
+    * graph with few edges but more than `limit` nodes pays a partial
+    * read of at most `limit + 1` node rows before going distributed.
+    */
+  def graphUpTo(edges: DataFrame, nodes: DataFrame,
+      limit: Long): (DataFrame, Option[(Array[Row], Array[Row])]) = {
+    val t = nodes.schema.head.dataType
+    val local = LocalIdTypes.contains(t) &&
+      edges.schema("src").dataType == t && edges.schema("dst").dataType == t
+    val (ck, edgeRows) = checkpointUpTo(edges, if (local) limit else 0L)
+    (ck, for (e <- edgeRows; n <- rowsUpTo(nodes, limit)) yield (e, n))
+  }
+
+  private val LocalIdTypes: Set[DataType] =
+    Set(ByteType, ShortType, IntegerType, LongType, StringType)
+
+  /** A collected weighted graph — node rows `(node)`, edge rows
+    * `(src, dst, w)` with every weight non-NULL — with its ids interned
+    * to slots `0 until m`. Slot `m` stands for NULL: it groups like a
+    * key in the aggregates (their sums still overflow-check) but never
+    * matches a join. `mult(i)` counts the node rows of slot `i`, so
+    * `mult(i) > 0` marks a node, and a node listed k times weighs k in
+    * every join it takes part in, as its k rows do in Spark's.
+    */
+  final class Local(nodeRows: Array[Row], edgeRows: Array[Row]) {
+    private val slots = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+    (nodeRows.iterator.map(_.get(0)) ++ edgeRows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))))
+      .foreach(v => if (v != null) slots.getOrElseUpdate(v, slots.size))
+    val m: Int = slots.size
+    /** The id of each slot (NULL at `m`). */
+    val id: Array[Any] = (slots.keysIterator ++ Iterator(null)).toArray
+    private def slot(v: Any): Int = if (v == null) m else slots(v)
+    /** The slot of each node row, in row order. */
+    val node: Array[Int] = nodeRows.map(r => slot(r.get(0)))
+    val mult: Array[Long] = new Array[Long](m + 1)
+    node.foreach(i => mult(i) += 1)
+    val src: Array[Int] = edgeRows.map(r => slot(r.get(0)))
+    val dst: Array[Int] = edgeRows.map(r => slot(r.get(1)))
+    val w: Array[Long] = edgeRows.map(_.getLong(2))
+  }
+
+  /** A frame over a local solve's result rows. */
+  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+}

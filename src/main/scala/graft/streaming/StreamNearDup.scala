@@ -82,6 +82,13 @@ object StreamNearDup {
     * dup_batch | already_admitted, partner = the admitted doc (or
     * batch canonical) this doc duplicates, null when kept — and the
     * updated ledger.
+    *
+    * The intermediate frames are cut with `localCheckpoint(eager =
+    * false)`, which is not lazy over an exchange: under AQE the cut's
+    * shuffle stages run inside the call (AQE finalizes the plan to
+    * build the RDD), and only its last stage waits for the first
+    * action. Most of a batch's work therefore runs inside this call,
+    * and the two ledger cuts are eager outright.
     */
   def nearDupBatch(batch: DataFrame, ledger: Ledger,
       idCol: String, textCol: String,

@@ -54,22 +54,28 @@ object Dsir {
   def bucketPanel(docs: DataFrame, textCol: String, isTarget: Column,
       buckets: Int, bigrams: Boolean = false): DataFrame = {
     require(buckets >= 2, s"buckets must be at least 2: $buckets")
-    val ws = TextTokens.wordsCol(col(textCol))
-    // q71's feature space when bigrams are on: unigrams ++ space-joined
-    // bigrams (size-guarded — an empty doc makes size-1 negative)
-    val feats =
-      if (!bigrams) ws
-      else concat(ws, when(size(ws) >= 2,
-        transform(sequence(lit(0), size(ws) - 2),
-          i => concat_ws(" ", slice(ws, i + lit(1), lit(2)))))
-        .otherwise(array().cast("array<string>")))
     docs
-      .select(explode(feats).as("__w"), isTarget.as("__t"))
+      .select(explode(featuresCol(col(textCol), bigrams)).as("__w"), isTarget.as("__t"))
       .withColumn("bucket", pmod(NearDup.shingleHash60(col("__w")), lit(buckets.toLong)))
       .groupBy(col("bucket"))
       .agg(sum(when(col("__t"), 1L).otherwise(0L)).as("t_count"),
         count(lit(1)).as("r_count"))
   }
+
+  /** The feature array both [[bucketPanel]] and [[score]] hash: the
+    * document's words, and with `bigrams` (q71's feature space) the
+    * words ++ their space-joined bigrams (size-guarded — an empty doc
+    * makes size-1 negative). The tokens are bound once
+    * ([[TextTokens.withWords]]), not re-derived per bigram window.
+    */
+  private[graft] def featuresCol(text: Column, bigrams: Boolean): Column =
+    if (!bigrams) TextTokens.wordsCol(text)
+    else TextTokens.withWords(text) { ws =>
+      concat(ws, when(size(ws) >= 2,
+        transform(sequence(lit(0), size(ws) - 2),
+          i => concat_ws(" ", slice(ws, i + lit(1), lit(2)))))
+        .otherwise(array().cast("array<string>")))
+    }
 
   /** Laplace-smoothed per-bucket log-importance weights, e6-scaled:
     * `w[b] = round(1e6 · (ln((t_b+1)/(T+B)) − ln((r_b+1)/(R+B))))`
@@ -109,17 +115,11 @@ object Dsir {
       w: Array[Long], bigrams: Boolean = false): DataFrame = {
     require(w.nonEmpty, "weight table must be non-empty")
     val wArr = array(w.toIndexedSeq.map(lit): _*)
-    val words = TextTokens.wordsCol(col(textCol))
     // MUST hash the same feature space the panel counted — a
     // bigram-fitted table scored over unigrams silently misweights
-    val feats =
-      if (!bigrams) words
-      else concat(words, when(size(words) >= 2,
-        transform(sequence(lit(0), size(words) - 2),
-          i => concat_ws(" ", slice(words, i + lit(1), lit(2)))))
-        .otherwise(array().cast("array<string>")))
+    val feats = featuresCol(col(textCol), bigrams)
     docs.select(col(idCol),
-      size(words).cast("long").as("n_words"),
+      size(TextTokens.wordsCol(col(textCol))).cast("long").as("n_words"),
       aggregate(
         transform(feats, wd =>
           element_at(wArr,

@@ -34,14 +34,14 @@ object NearDup {
   }
 
   /** Column form: `shingles(text, n)` as array<string>. */
-  def shinglesCol(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
-    val words = TextTokens.wordsCol(text)
-    when(size(words) < n, when(size(words) === 0, array()).otherwise(array(array_join(words, " "))))
-      .otherwise(
-        // transform over sliding windows: index i -> words[i..i+n-1]
-        transform(sequence(lit(0), size(words) - n),
-          i => array_join(slice(words, i + lit(1), lit(n)), " ")))
-  }
+  def shinglesCol(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
+    TextTokens.withWords(text) { words =>
+      when(size(words) < n, when(size(words) === 0, array()).otherwise(array(array_join(words, " "))))
+        .otherwise(
+          // transform over sliding windows: index i -> words[i..i+n-1]
+          transform(sequence(lit(0), size(words) - n),
+            i => array_join(slice(words, i + lit(1), lit(n)), " ")))
+    }
 
   // ---- exact n-gram Jaccard (the oracle method) --------------------------
 
@@ -55,11 +55,14 @@ object NearDup {
       n: Int, threshold: Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // The shingle relation is consumed twice (both join sides); LAZY
+    // The shingle relation is consumed twice (both join sides); a
     // localCheckpoint so the tokenize+explode+distinct pipeline runs
-    // once, pipelined into the first action (an eager cut would run a
-    // separate blocking job first — measured ~2× on the gate bench),
-    // AND the blocks are ContextCleaner-reclaimable — persist() here
+    // once. `eager = false` is not fully lazy: under AQE the cut's
+    // shuffle stages (distinct, window) run inside this call, since AQE
+    // finalizes the plan to build the RDD; only the last stage is
+    // deferred to the first action (an eager cut would add one more
+    // blocking job — measured ~2× on the gate bench). The blocks are
+    // ContextCleaner-reclaimable — persist() here
     // pinned cache for the session's lifetime (no unpersist handle),
     // which under a 64-query bench session accumulated into
     // re-materialization pressure. Set size is attached by window so no
@@ -285,7 +288,7 @@ object NearDup {
     * (the oracle joins on the same md5-derived values), so results are
     * identical by construction — even a hash collision collides
     * identically on both sides. Null texts carry no shingles, like
-    * jaccardPairs; persisted — feeds signatures + verify twice.
+    * jaccardPairs; checkpointed — feeds signatures + verify twice.
     * ONE exchange hash-partitioned by id serves the whole query:
     * HashPartitioning(id) satisfies the clustering needs of the
     * (id, h) dedup, the signature groupBy(id), the sizes groupBy(id),
@@ -302,14 +305,18 @@ object NearDup {
       .select($"id", shingleHash60($"shingle").as("h"))
       .repartition($"id")
       .dropDuplicates("id", "h")
-      .localCheckpoint(eager = false) // reclaimable multi-consumer cut, pipelined into the first action
+      // reclaimable multi-consumer cut; under AQE its repartition
+      // shuffle runs inside this call (so minhashLshPairs runs jobs
+      // before it returns), only the dedup after it waits for the
+      // first action
+      .localCheckpoint(eager = false)
   }
 
   /** Phase 2 of [[minhashLshPairs]] (shared with the streaming twin):
     * `(id, band, band_key)` — per-doc signature (ONE aggregation with k
     * min() columns, map-side partial), then band explode. The band key
     * is the band's r signature values joined as a string (a
-    * cross-engine bucket id); persisted — joined at least twice.
+    * cross-engine bucket id); checkpointed — joined at least twice.
     */
   private[graft] def bandedKeys(
       sh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
@@ -327,9 +334,12 @@ object NearDup {
       val slots = (j * rowsPerBand until (j + 1) * rowsPerBand).map(i => col(s"m$i"))
       struct(lit(j).as("band"), concat_ws("_", slots: _*).as("band_key"))
     }
+    // both self-join sides; reclaimable. Under AQE the signature
+    // aggregate's shuffle runs inside this call; only the band explode
+    // after it waits for the first action
     sigs.select($"id", explode(array(bandStructs: _*)).as("bk"))
       .select($"id", $"bk.band".as("band"), $"bk.band_key".as("band_key"))
-      .localCheckpoint(eager = false) // both self-join sides; reclaimable, pipelined
+      .localCheckpoint(eager = false)
   }
 
   /** Phase 3 of [[minhashLshPairs]] (shared with the streaming twin):
@@ -433,7 +443,10 @@ object NearDup {
       shiftright($"fp", b * width).bitwiseAND(lit(mask))
     }: _*)
     val keyed = fps.select($"id", $"fp", posexplode(blockKeys).as(Seq("block", "key")))
-      .localCheckpoint(eager = false) // both self-join sides; reclaimable, pipelined
+      // both self-join sides; reclaimable. Under AQE the fingerprint
+      // aggregate's shuffle runs inside this call; only the block
+      // explode after it waits for the first action
+      .localCheckpoint(eager = false)
     keyed.as("x").join(keyed.as("y"),
         $"x.block" === $"y.block" && $"x.key" === $"y.key" && $"x.id" < $"y.id")
       .select($"x.id".as("id_a"), $"y.id".as("id_b"),

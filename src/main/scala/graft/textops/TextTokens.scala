@@ -14,6 +14,18 @@ object TextTokens {
   def wordsCol(text: Column): Column =
     filter(split(lower(text), "\\s+"), w => length(w) > 0)
 
+  /** `f` over `text`'s token array ([[wordsCol]]), tokenized ONCE per
+    * row. Spark's higher-order functions do no common-subexpression
+    * elimination, so an `f` that names the tokens in a lambda body —
+    * a sliding window's `slice(words, i, n)` — would re-run
+    * lower + split + filter over the whole document for every window,
+    * O(W²) per document. Binding the array to the lambda variable of a
+    * one-element `transform` evaluates it once; the expression form of
+    * the staged-alias pattern in `CurationOps.repetitionStats`.
+    */
+  def withWords(text: Column)(f: Column => Column): Column =
+    transform(array(wordsCol(text)), f).getItem(0)
+
   /** Plain-Scala twin of [[wordsCol]] (lowercase, whitespace-split,
     * empties dropped) for executor-side code that tokenizes outside a
     * Column expression (BPE segmentation, tokenizer impls).

@@ -139,4 +139,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(out.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq === Seq(
       (3L, 3L, 1), (7L, 3L, 0), (9L, 3L, 0), (20L, 20L, 1), (21L, 20L, 0)))
   }
+
+  test("the gate counts distinct directed edges: a self-loop is one, any other edge two") {
+    // the driver result is a frame over collected rows, so its lineage
+    // starts at a parallelized collection; the distributed result's is
+    // a checkpoint
+    def local(e: org.apache.spark.sql.DataFrame, lim: Long): Boolean = {
+      def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+        r +: r.dependencies.flatMap(d => lineage(d.rdd))
+      ConnectedComponents.labels(e, "a", "b", localEdgeLimit = lim).queryExecution.analyzed
+        .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+        .flatMap(lineage).exists(_.getClass.getSimpleName == "ParallelCollectionRDD")
+    }
+    // 2 edges + 1 self-loop: 3 canonical rows, 5 directed edges
+    val e = edges(1L -> 2L, 2L -> 1L, 3L -> 4L, 5L -> 5L)
+    assert(local(e, 5))
+    assert(!local(e, 4))
+    assert(!local(e, 3))
+    assert(!local(e, 0))
+  }
 }

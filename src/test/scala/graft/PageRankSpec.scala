@@ -1,16 +1,55 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 import graft.graph.PageRank
 
+/** Every case runs on BOTH paths — the driver solve (the small-graph
+  * default) and the distributed rounds (forced with
+  * `localEdgeLimit = 0`) — and asserts they agree exactly: same rows
+  * with multiplicity, same schema, same failure message.
+  */
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
 
+  private val Paths = Seq(1L << 17, 0L)
+
+  /** `f(localEdgeLimit)` on both paths; asserts equal rows and schemas. */
+  private def bothPaths(f: Long => DataFrame): Seq[Row] = {
+    val Seq(local, dist) = Paths.map(f)
+    assert(local.schema === dist.schema)
+    val Seq(l, d) = Seq(local, dist).map(_.collect().toSeq.sortBy(_.toString))
+    assert(l === d, "driver and distributed paths disagree")
+    l
+  }
+
+  /** The failure of `f(localEdgeLimit)` on both paths (Spark wraps
+    * in-plan failures, so the whole cause chain is searched); asserts
+    * both carry `msg`.
+    */
+  private def bothFail(msg: String)(f: Long => Any): Unit = Paths.foreach { lim =>
+    val ex = intercept[Exception](f(lim))
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    assert(chain.contains(msg), s"localEdgeLimit=$lim: $chain")
+  }
+
+  /** `PageRank.ranks` at its default scale and damping, behind a gate
+    * of `lim` rows.
+    */
+  private def ranksAt(nodes: DataFrame, edges: DataFrame, iters: Int,
+      redistributeDangling: Boolean = false, checkpointInterval: Int = 8)(lim: Long) =
+    PageRank.ranksGated(nodes, "node", edges, "src", "dst", "w", iters, Scale, 85L, 100L,
+      redistributeDangling, checkpointInterval, lim)
+
+  private def ranksDf(nodes: Seq[Long], edges: Seq[(Long, Long, Long)], iters: Int,
+      redistributeDangling: Boolean = false, checkpointInterval: Int = 8)(lim: Long) =
+    ranksAt(nodes.toDF("node"), edges.toDF("src", "dst", "w"), iters,
+      redistributeDangling, checkpointInterval)(lim)
+
   private def run(
       nodes: Seq[Long], edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.ranks(
-        nodes.toDF("node"), "node",
-        edges.toDF("src", "dst", "w"), "src", "dst", "w", iters)
-      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("rank")).toMap
+    bothPaths(ranksDf(nodes, edges, iters)).map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private val Scale = 1000000000000L
   private val Base = 150000000000L // (1 - 0.85) * scale
@@ -41,11 +80,8 @@ class PageRankSpec extends SparkSpec {
 
   private def runRedistributed(
       nodes: Seq[Long], edges: Seq[(Long, Long, Long)], iters: Int): Map[Long, Long] =
-    PageRank.ranks(
-        nodes.toDF("node"), "node",
-        edges.toDF("src", "dst", "w"), "src", "dst", "w", iters,
-        redistributeDangling = true)
-      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("rank")).toMap
+    bothPaths(ranksDf(nodes, edges, iters, redistributeDangling = true))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("dangling redistribution conserves total mass within the integer-truncation bound") {
     // 1 -> 2 -> 3, node 3 dangling: under the leak variant its whole
@@ -84,10 +120,8 @@ class PageRankSpec extends SparkSpec {
     val nodes = Seq(1L, 2L, 3L, 4L)
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (3L, 4L, 1L))
     def at(interval: Int): Map[Long, Long] =
-      PageRank.ranks(nodes.toDF("node"), "node",
-          edges.toDF("src", "dst", "w"), "src", "dst", "w", iters = 10,
-          checkpointInterval = interval)
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("rank")).toMap
+      bothPaths(ranksDf(nodes, edges, iters = 10, checkpointInterval = interval))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // leak path: interval 3 cuts three times, interval 100 never (the
     // single-ref chain is linear, so staying lazy is legal) — identical
     assert(at(3) === at(100))
@@ -99,12 +133,67 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("non-positive edge weights are rejected up front, not folded into wrong ranks") {
-    val bad = intercept[IllegalArgumentException] {
-      run(Seq(1L, 2L), Seq((1L, 2L, 0L)), iters = 1)
+    bothFail("edge weights must be positive integers")(ranksDf(Seq(1L, 2L), Seq((1L, 2L, 0L)), 1))
+    bothFail("edge weights must be positive integers")(ranksDf(Seq(1L, 2L), Seq((1L, 2L, -3L)), 1))
+    // a NULL weight is no positive integer either
+    bothFail("edge weights must be positive integers")(ranksAt(Seq(1L, 2L).toDF("node"),
+      Seq[(Long, Long, java.lang.Long)]((1L, 2L, null)).toDF("src", "dst", "w"), 1))
+  }
+
+  test("NULL endpoints and NULL nodes: both paths keep the join semantics") {
+    // a NULL-src edge is dropped; a NULL-dst edge still counts in its
+    // src's total weight (1 keeps only 2/3 of its mass for node 2); a
+    // NULL node gets a rank row but never joins an edge
+    val nodes = Seq[java.lang.Long](1L, 2L, 3L, null).toDF("node")
+    val edges = Seq[(java.lang.Long, java.lang.Long, Long)](
+      (1L, 2L, 2L), (1L, null, 1L), (null, 3L, 5L), (2L, 1L, 1L))
+      .toDF("src", "dst", "w")
+    for (redistribute <- Seq(false, true)) {
+      val out = bothPaths(ranksAt(nodes, edges, iters = 3, redistributeDangling = redistribute))
+      assert(out.size === 4)
+      assert(out.count(_.isNullAt(0)) === 1)
     }
-    assert(bad.getMessage.contains("positive"))
-    intercept[IllegalArgumentException] {
-      run(Seq(1L, 2L), Seq((1L, 2L, -3L)), iters = 1)
+    val one = bothPaths(ranksAt(nodes, edges, iters = 1))
+      .map(r => Option(r.get(0)) -> r.getLong(1)).toMap
+    assert(one(Some(2L)) === Base + (Scale * 2L / 3L) * 85L / 100L)
+    assert(one(Some(3L)) === Base && one(None) === Base)
+  }
+
+  test("duplicate node rows: one output row each, k-fold contributions on both paths") {
+    // node 1 listed twice holds two rank rows, so it sends its
+    // contribution twice and appears twice in the output
+    val out = bothPaths(ranksDf(Seq(1L, 1L, 2L), Seq((1L, 2L, 1L)), iters = 1))
+    assert(out.map(_.getLong(0)).sorted === Seq(1L, 1L, 2L))
+    assert(out.filter(_.getLong(0) == 2L).map(_.getLong(1)) === Seq(Base + 2L * Scale * 85L / 100L))
+    // redistributed: the duplicated dangling node's mass counts twice too
+    bothPaths(ranksDf(Seq(1L, 2L, 2L, 3L), Seq((1L, 2L, 1L), (3L, 1L, 1L)), iters = 3,
+      redistributeDangling = true))
+  }
+
+  test("rank overflow raises on both paths") {
+    // scale · w overflows a Long in the first contribution: the driver
+    // raises "long overflow", Spark's ANSI arithmetic ARITHMETIC_OVERFLOW
+    bothFail("overflow")(lim =>
+      ranksDf(Seq(1L, 2L), Seq((1L, 2L, Long.MaxValue / 2)), 1)(lim).collect())
+  }
+
+  test("the gate: limit edges and nodes stay on the driver, limit + 1 of either go distributed") {
+    // the shallow leak path plans its rounds lazily, so a distributed
+    // result carries joins; the driver result is a scan of its rows
+    def graph(nodes: Int, edges: Int) = ((1L to nodes).toDF("node"),
+      (1L until edges + 1L).map(i => (i, i % nodes + 1, 1L)).toDF("src", "dst", "w"))
+    def isLocal(df: DataFrame): Boolean = df.queryExecution.optimizedPlan
+      .collectFirst { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty
+    def local(nodes: Int, edges: Int, lim: Long): Boolean = {
+      val (n, e) = graph(nodes, edges)
+      isLocal(ranksAt(n, e, iters = 2)(lim))
     }
+    assert(local(nodes = 6, edges = 6, lim = 6))
+    assert(!local(nodes = 6, edges = 7, lim = 6))
+    assert(!local(nodes = 7, edges = 6, lim = 6))
+    assert(!local(nodes = 6, edges = 6, lim = 0))
+    // the public entry point gates at the default
+    val (n, e) = graph(nodes = 6, edges = 6)
+    assert(isLocal(PageRank.ranks(n, "node", e, "src", "dst", "w", iters = 2)))
   }
 }
