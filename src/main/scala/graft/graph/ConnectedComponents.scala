@@ -28,10 +28,15 @@ import graft.util.Jobs
   */
 object ConnectedComponents {
 
+  /** The message a NULL edge endpoint raises with. */
+  val NullEndpointMsg = "connected components: edge endpoints must be non-NULL"
+
   /** Labels every node of the undirected edge list with the minimum
     * node id reachable from it: output `(node, label)`, one row per
     * distinct endpoint. Edge direction and duplicate edges are
-    * irrelevant (symmetrized + deduped internally).
+    * irrelevant (symmetrized + deduped internally). A NULL endpoint
+    * fails the action that first reads the edges with
+    * [[NullEndpointMsg]].
     *
     * Graphs with at most `localEdgeLimit` (distinct, directed) edges
     * are solved by driver-side union-find instead of iterating, behind
@@ -50,7 +55,14 @@ object ConnectedComponents {
       algorithm: String = "min-label"): DataFrame = {
     require(algorithm == "min-label" || algorithm == "star",
       s"unknown algorithm '$algorithm' (expected min-label | star)")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // a NULL endpoint raises inside the plan, on every path: least/
+    // greatest would turn (NULL, x) into a self-loop of x and drop the
+    // NULL node, the star rounds would emit a [null, null] row, and the
+    // driver union-find cannot order NULL. Zero extra jobs — the raise
+    // rides whichever job first reads the edges
+    def endpoint(c: String) =
+      when(col(c).isNull, raise_error(lit(NullEndpointMsg))).otherwise(col(c))
+    val e = edges.select(endpoint(srcCol).as("src"), endpoint(dstCol).as("dst"))
     // localEdgeLimit = 0 forces the distributed path — don't pay the
     // size-probe count job it can never satisfy; and the star path
     // needs only the canonical undirected edge set plus the node set,

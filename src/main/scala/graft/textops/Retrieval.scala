@@ -99,7 +99,7 @@ object Retrieval {
       // hazard. The partition key is constant-VALUED but non-foldable
       // (id % 1 — a literal key gets optimized away, restoring the
       // empty spec): it documents the bound to the engine (no
-      // global-window warning) and to WindowAudit
+      // global-window warning) and to PlanCheck's window contract
       .withColumn("rk",
         row_number().over(
           Window.partitionBy(pmod(col(idCol), lit(1)))

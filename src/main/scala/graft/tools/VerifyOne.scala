@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Verify.jsonString
+
 /** Single-query slice of [[graft.Verify]] — the inner loop for gate
   * authoring: dump the named queries' result parquet plus an
   * `oracle_sql.json` holding only their oracles, so `tools/check.py`
@@ -29,16 +31,7 @@ object VerifyOne {
       graft.SparkEntry.queries(name)(spark, sfDir)
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val entries = names.map(n => s"${q(n)}: ${q(graft.SparkEntry.oracleSql(n))}")
+    val entries = names.map(n => s"${jsonString(n)}: ${jsonString(graft.SparkEntry.oracleSql(n))}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       s"{${entries.mkString(", ")}}")
     spark.stop()

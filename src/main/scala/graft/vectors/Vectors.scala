@@ -733,7 +733,8 @@ object Vectors {
       // dst join first, src join last: the rank window partitions by
       // src — ending the join chain on src lets the window reuse the
       // join's partitioning when the joins shuffle (the layerEdges
-      // rationale; inner equi-joins commute, values identical)
+      // rationale and plan pair; inner equi-joins commute, values
+      // identical)
       val scored = pairs
         .join(c.select($"id".as("dst"), $"v".as("dv"), $"n".as("dn")), "dst")
         .join(c.select($"id".as("src"), $"v".as("sv"), $"n".as("sn")), "src")
@@ -907,7 +908,10 @@ object Vectors {
       // reuse that partitioning when the joins shuffle (at gate scale
       // mem broadcasts and this is moot; at corpus scale it saves one
       // full exchange of the scored pair relation per layer). Inner
-      // equi-joins commute — values identical.
+      // equi-joins commute — values identical. Plan pair with broadcast
+      // joins disabled: plans/r15/scoring_join_src_{last,first}.txt,
+      // 5 exchanges src-last vs 6 src-first (the window re-shuffles
+      // the scored pairs by src).
       val scored = pairs
         .join(mem.select($"id".as("dst"), $"v".as("dv"), $"n".as("dn")), "dst")
         .join(mem.select($"id".as("src"), $"v".as("sv"), $"n".as("sn")), "src")
@@ -2009,7 +2013,7 @@ object Vectors {
       .withColumn("ivar", $"p_dec" * $"n_vecs" - $"s_dec" * $"s_dec")
     // dim-sized frame: the constant-key window is bounded (the k-row
     // window convention — pmod(d, 1) is the non-foldable constant key
-    // the WindowAudit contract requires); all windowed sums are over
+    // the PlanCheck window contract requires); all windowed sums are over
     // exact integers, so engine accumulation order is irrelevant
     val constKey = pmod($"d", lit(1))
     val w = Window.partitionBy(constKey).orderBy($"ivar".desc, $"d".asc)

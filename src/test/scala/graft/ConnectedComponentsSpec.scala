@@ -158,4 +158,28 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(!local(e, 3))
     assert(!local(e, 0))
   }
+
+  test("a NULL endpoint fails with one message on every path") {
+    // (NULL, 3) used to become a self-loop of 3 on the driver and
+    // min-label paths and a [null, null] row on the star path; (NULL,
+    // NULL) threw a NullPointerException on the driver path
+    for (rows <- Seq(
+        Seq[(Option[Long], Option[Long])](Some(1L) -> Some(2L), None -> Some(3L)),
+        Seq[(Option[Long], Option[Long])](Some(1L) -> Some(2L), None -> None),
+        Seq[(Option[Long], Option[Long])](Some(1L) -> None))) {
+      val e = rows.toDF("a", "b")
+      val paths = Seq[(String, () => Unit)](
+        "driver" -> (() => ConnectedComponents.labels(e, "a", "b").collect()),
+        "min-label" -> (() =>
+          ConnectedComponents.labels(e, "a", "b", localEdgeLimit = 0).collect()),
+        "star" -> (() => ConnectedComponents.labels(e, "a", "b", localEdgeLimit = 0,
+          algorithm = "star").collect()))
+      for ((path, run) <- paths) {
+        val ex = intercept[Exception](run())
+        val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        assert(chain.exists(t => Option(t.getMessage).exists(
+          _.contains(ConnectedComponents.NullEndpointMsg))), s"$rows on $path: $ex")
+      }
+    }
+  }
 }
