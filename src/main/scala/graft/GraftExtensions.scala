@@ -127,17 +127,20 @@ object GraftExtensions {
     * [[graft.plans.DedupKeyFuse]] rewrite lands in
     * `spark.experimental.extraOptimizations` (a post-optimizer batch —
     * same fixed-point semantics as `injectOptimizerRule`, applied to
-    * every query planned after this call). Idempotent.
+    * every query planned after this call). Idempotent: a function the
+    * registry already holds is left as it is (replacing it would log a
+    * "replaced a previously registered function" WARN per call).
     */
   def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vocab_match", buildVocabMatch, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dedup_key", buildDedupKey, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chunks", buildChunkSplit, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vocab_spans", buildVocabSpans, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Seq[(String, Seq[Expression] => Expression)](
+      "graft_vocab_match" -> buildVocabMatch,
+      "graft_dedup_key" -> buildDedupKey,
+      "graft_chunks" -> buildChunkSplit,
+      "graft_vocab_spans" -> buildVocabSpans).foreach { case (name, builder) =>
+        if (!registry.functionExists(FunctionIdentifier(name)))
+          registry.createOrReplaceTempFunction(name, builder, "built-in")
+      }
     Seq(graft.plans.DedupKeyFuse, graft.plans.VocabBelowExplode)
       .foreach { r =>
         if (!spark.experimental.extraOptimizations.contains(r))

@@ -90,7 +90,7 @@ object ConnectedComponents {
     // count of the rows it returns decides the rest — the same decision
     // as a full directed count, with no probe job beyond the
     // checkpoint's own (localEdgeLimit = 0 runs none at all).
-    val (cu, canonRows) = SmallGraph.checkpointUpTo(
+    val (cu, canonRows) = graft.util.DriverGate.checkpointUpTo(
       e.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst")).distinct(),
       localEdgeLimit)

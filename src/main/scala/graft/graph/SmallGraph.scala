@@ -3,56 +3,26 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.util.DriverGate
+
 /** The small-graph gate shared by [[ConnectedComponents]], [[PageRank]]
   * and [[Hits]]: a graph whose frames each fit under `localEdgeLimit`
-  * rows is solved exactly on the driver. Every distributed round costs
-  * whole Spark jobs of fixed latency, which dwarfs a sub-second exact
-  * solve of a small graph (the same bounded-driver-work trade as the
-  * IVF centroid sample). The default cap, `1L << 17` rows, keeps the
-  * transient driver footprint at tens of MB even under a default 1g
-  * driver heap; `localEdgeLimit = 0` forces the distributed path.
+  * rows is solved exactly on the driver, behind the bounded-collect
+  * gate the vector graph builders use too ([[graft.util.DriverGate]]).
+  * `localEdgeLimit = 0` forces the distributed path.
   */
 private[graph] object SmallGraph {
 
   /** The default gate, in rows. */
-  val DefaultLimit: Long = 1L << 17
-
-  /** `df`'s local checkpoint, with its rows when it has at most
-    * `limit` of them. The size probe rides the materialization the
-    * distributed path needs anyway: one job fills the checkpoint's
-    * blocks and counts them, and only a small frame pays a second job
-    * that collects its rows from the blocks. A large frame thus costs
-    * exactly an eager checkpoint, and none of its rows reach the
-    * driver (a bounded `limit(limit + 1).collect()` probe ships up to
-    * `limit + 1` of them). `limit <= 0` checkpoints eagerly and probes
-    * nothing.
-    */
-  def checkpointUpTo(df: DataFrame, limit: Long): (DataFrame, Option[Array[Row]]) =
-    if (limit <= 0) (df.localCheckpoint(), None)
-    else {
-      val ck = df.localCheckpoint(eager = false)
-      val n = ck.queryExecution.toRdd.count()
-      (ck, if (n <= limit) Some(ck.collect()) else None)
-    }
-
-  /** `df`'s rows when it has at most `limit` of them: one bounded
-    * `limit(limit + 1).collect()`, for a frame that is not
-    * checkpointed.
-    */
-  private def rowsUpTo(df: DataFrame, limit: Long): Option[Array[Row]] = {
-    val rows = df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length <= limit) Some(rows) else None
-  }
+  val DefaultLimit: Long = DriverGate.DefaultRowLimit
 
   /** The edge checkpoint of a weighted graph, with the edge and node
     * rows when the graph qualifies for the driver: both frames fit
     * under `limit`, and the node column and both endpoint columns
     * (`edges`' `src`/`dst`) share one integral or (binary-collated)
-    * string type. The local solvers compare ids with Scala equality,
-    * which is Spark's join equality only there: Spark widens mixed
-    * types first, normalizes floating-point zeros and NaN, and compares
-    * binary by content and collated strings by collation. The edges
-    * are probed first ([[checkpointUpTo]]): they are the frame that
+    * string type ([[DriverGate.LocalIdTypes]]), where the local
+    * solvers' Scala equality is Spark's join equality. The edges
+    * are probed first ([[DriverGate.checkpointUpTo]]): they are the frame that
     * outgrows the cap. The node frame is probed only when the edges
     * fit, lazily — a small graph's node lineage then runs once, and a
     * graph with few edges but more than `limit` nodes pays a partial
@@ -61,14 +31,11 @@ private[graph] object SmallGraph {
   def graphUpTo(edges: DataFrame, nodes: DataFrame,
       limit: Long): (DataFrame, Option[(Array[Row], Array[Row])]) = {
     val t = nodes.schema.head.dataType
-    val local = LocalIdTypes.contains(t) &&
+    val local = DriverGate.LocalIdTypes.contains(t) &&
       edges.schema("src").dataType == t && edges.schema("dst").dataType == t
-    val (ck, edgeRows) = checkpointUpTo(edges, if (local) limit else 0L)
-    (ck, for (e <- edgeRows; n <- rowsUpTo(nodes, limit)) yield (e, n))
+    val (ck, edgeRows) = DriverGate.checkpointUpTo(edges, if (local) limit else 0L)
+    (ck, for (e <- edgeRows; n <- DriverGate.rowsUpTo(nodes, limit)) yield (e, n))
   }
-
-  private val LocalIdTypes: Set[DataType] =
-    Set(ByteType, ShortType, IntegerType, LongType, StringType)
 
   /** A collected weighted graph — node rows `(node)`, edge rows
     * `(src, dst, w)` with every weight non-NULL — with its ids interned

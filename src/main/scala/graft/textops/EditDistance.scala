@@ -117,12 +117,14 @@ object EditDistance {
       .groupBy(col(strCol).as("__n"))
       .agg(count(lit(1)).as("__support"))
       .withColumn("__blk", substring(col("__n"), 1, blockPrefix))
+    // each side aliases the block key (`__blka` / `__blkb`), so the
+    // condition names two distinct columns, not one attribute twice
     val a = dict.select(col("__n").as("name_a"),
-      col("__support").as("support_a"), col("__blk"))
+      col("__support").as("support_a"), col("__blk").as("__blka"))
     val b = dict.select(col("__n").as("name_b"),
-      col("__support").as("support_b"), col("__blk"))
+      col("__support").as("support_b"), col("__blk").as("__blkb"))
     a.join(b,
-        a("__blk") === b("__blk") && col("name_a") < col("name_b") &&
+        col("__blka") === col("__blkb") && col("name_a") < col("name_b") &&
           abs(length(col("name_a")) - length(col("name_b"))) <= lenBand)
       .withColumn("jw",
         graft.functions.JaroWinklerSimilarity.jwCol(col("name_a"), col("name_b")))

@@ -232,11 +232,13 @@ object PlanCheck {
     // the BROADCAST codebook (the q22 situation)
     Expectation("q90_cluster_balanced_sample",
       mustContain = Seq("WindowGroupLimit", "BroadcastNestedLoopJoin")),
-    // HNSW beam descent: the per-round phases live behind
-    // localCheckpoints (q58's situation — layer graphs + beam ranks are
-    // spec-asserted in HnswSpec); the only intentional cross score is
-    // the entry against the broadcast top layer, inside the checkpoint;
-    // the visible readout must stay cross-product-free
+    // HNSW beam descent: at gate scale the search runs on the driver
+    // and the plan is a scan of its local rows; above the driver budget
+    // the per-round phases live behind localCheckpoints (layer graphs +
+    // beam ranks are spec-asserted in HnswSpec on both paths) and the
+    // only intentional cross score is the entry against the broadcast
+    // top layer, inside the checkpoint. Either way the visible readout
+    // must stay cross-product-free
     Expectation("q88_hnsw_topk",
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin")),
     // exact-span dedup: first-occurrence must stay the q40 map-side
@@ -604,7 +606,9 @@ object PlanCheck {
     // session windows must use the native MergingSessions operator
     Expectation("q33_sessionize", mustContain = Seq("MergingSessions")),
     // iterative star-CC / kNN-graph readouts are checkpoint-truncated
-    // (the q57 situation) — the visible slice must stay product-free
+    // (the q57 situation) — the visible slice must stay product-free.
+    // At gate scale both solve on the driver and the plan is a scan of
+    // local rows; the contract holds on either path
     Expectation("q35_dedup_clusters",
       mustNotContain = Seq("BroadcastNestedLoopJoin")),
     Expectation("q58_knn_graph",

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.util.Jobs
+import scala.jdk.CollectionConverters._
+
+import graft.util.{DriverGate, Jobs}
 
 /** Embedding similarity search (BASELINE.json north star; operates on
   * the `embeddings` table: `embedding: array<float>`).
@@ -686,9 +688,6 @@ object Vectors {
       .select($"query_id", $"rank", $"neighbor_id", $"cosine")
   }
 
-  /** Bucketed ANN top-k: exact ranking within the query's bucket. Trades
-    * recall for a bucket join; [[bruteTopK]] is the recall oracle.
-    */
   /** NN-Descent-flavored k-NN GRAPH construction: every corpus vector
     * gets its k nearest neighbors, refined iteratively — the batch
     * analogue of HNSW's neighbor-graph layer and the third scale path
@@ -716,19 +715,53 @@ object Vectors {
     * Scale shape: proposals per round are Σ_v |B(v)|² ≤ N·(2k)² — linear
     * in N for fixed k, never a cross join; every stage shuffles on a
     * node id. Exact scoring touches candidate pairs only. The vector
-    * relation is persisted once and re-read by each round's two score
-    * joins (multi-consumer convention, like NearDup's shingles).
+    * relation is a local checkpoint, filled once and re-read by each
+    * round's two score joins (multi-consumer convention, like NearDup's
+    * shingles).
+    *
+    * Small corpora are solved on the driver ([[VectorGate]], behind the
+    * bounded-collect gate the graph operators share): when the vectors
+    * fit 2^22 doubles, the ids are non-NULL, distinct and integral or
+    * string, and the seed pair work Σ_tables Σ_buckets |b|² (from the
+    * bucket sizes, before any scoring) is at most 2^22, the relation is
+    * collected once and the same seeding and rounds run there, with the
+    * same constants and tie-breaks. That costs two jobs (fill and
+    * measure the relation; collect it), where the distributed rounds
+    * launch a few per round, and the result is a frame over local rows.
+    * Above the gate the probe is the job that fills the relation, which
+    * the distributed path reads anyway.
     */
   def knnGraph(corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, planes: Int, dim: Int,
-      rounds: Int, tables: Int = 2, seed: Int = 42): DataFrame = {
+      rounds: Int, tables: Int = 2, seed: Int = 42): DataFrame =
+    knnGraphGated(corpus, idCol, vecCol, k, planes, dim, rounds, tables, seed,
+      VectorGate.Budget, VectorGate.PairWorkLimit)
+
+  /** [[knnGraph]] behind a driver budget of `limit` doubles and a seed
+    * pair-work bound of `pairLimit`; `limit = 0` forces the distributed
+    * path (the specs run every case on both paths).
+    */
+  private[graft] def knnGraphGated(corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int, planes: Int, dim: Int,
+      rounds: Int, tables: Int, seed: Int, limit: Long, pairLimit: Long): DataFrame = {
     require(tables >= 1, s"need at least one LSH table: $tables")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = corpus
+    val sc = spark.sparkContext
+    val frame = corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", normCol($"v"))
-      .persist()
+    val idType = frame.schema("id").dataType
+    // the vector relation, filled and measured by the gate's one job;
+    // the distributed rounds read its blocks (each round's two score
+    // joins — the multi-consumer convention, like NearDup's shingles)
+    val (c, local) = Jobs.labeled(sc, "knn graph: gate") {
+      val (ck, fits) = DriverGate.checkpointFits(frame,
+        if (VectorGate.localIds(idType)) limit else 0L, VectorGate.weight)
+      (ck, if (!fits) None else VectorGate.Vecs.of(DriverGate.internalRows(ck), idType)
+        .flatMap(VectorGate.knnGraph(_, k,
+          (0 until tables).map(t => hyperplanes(planes, dim, seed + t)), rounds, pairLimit)))
+    }
     def topk(pairs: DataFrame): DataFrame = {
       // dst join first, src join last: the rank window partitions by
       // src — ending the join chain on src lets the window reuse the
@@ -743,42 +776,52 @@ object Vectors {
       scored.withColumn("rank", row_number().over(w)).filter($"rank" <= k)
         .select($"src", $"rank", $"dst", $"cosine")
     }
-    // ONE projection computes every LSH table's bucket key (the r13
-    // hnswTopK layerEdges shape): the hyperplane dot products are the
-    // per-row cost, so computing all tables in one pass — lazily
-    // checkpointed so each table's two self-join sides read
-    // materialized narrow rows — replaces `tables` separate
-    // projections over the corpus (2 per table via the self-join)
-    val bk = c.select(($"id" +: (0 until tables).map { t =>
-        hyperplaneBucket($"v", planes, dim, seed + t).as(s"b$t")
-      }): _*)
-      .localCheckpoint(eager = false)
-    val seedPairs = (0 until tables).map { t =>
-      bk.as("x").join(bk.as("y"),
-          col(s"x.b$t") === col(s"y.b$t") && col("x.id") =!= col("y.id"))
-        .select(col("x.id").as("src"), col("y.id").as("dst"))
-    }.reduce(_ union _)
-    // each round reads the previous graph three times (two symmetrize
-    // branches + the incumbent union) — without cutting lineage every
-    // round, recomputation nests EXPONENTIALLY in `rounds`; same
-    // per-round localCheckpoint as the ConnectedComponents loop
-    var g = topk(seedPairs.distinct()).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val edges = g.select($"src", $"dst")
-      val undirected = edges
-        .union(edges.select($"dst".as("src"), $"src".as("dst"))).distinct()
-      val proposals = undirected.as("a")
-        .join(undirected.as("b"), col("a.src") === col("b.src"))
-        .select(col("a.dst").as("src"), col("b.dst").as("dst"))
-        .filter($"src" =!= $"dst")
-      g = topk(proposals.union(edges).distinct()).localCheckpoint()
+    def out(g: DataFrame): DataFrame =
+      g.select($"src".as("query_id"), $"rank", $"dst".as("neighbor_id"), $"cosine")
+    local match {
+      case Some(rows) =>
+        DriverGate.free(c)
+        // the distributed plan's schema, nullability included
+        spark.createDataFrame(rows.asJava,
+          out(topk(c.select($"id".as("src"), $"id".as("dst")))).schema)
+      case None =>
+        // ONE projection computes every LSH table's bucket key (the r13
+        // hnswTopK layerEdges shape): the hyperplane dot products are the
+        // per-row cost, so computing all tables in one pass — lazily
+        // checkpointed so each table's two self-join sides read
+        // materialized narrow rows — replaces `tables` separate
+        // projections over the corpus (2 per table via the self-join)
+        val bk = c.select(($"id" +: (0 until tables).map { t =>
+            hyperplaneBucket($"v", planes, dim, seed + t).as(s"b$t")
+          }): _*)
+          .localCheckpoint(eager = false)
+        val seedPairs = (0 until tables).map { t =>
+          bk.as("x").join(bk.as("y"),
+              col(s"x.b$t") === col(s"y.b$t") && col("x.id") =!= col("y.id"))
+            .select(col("x.id").as("src"), col("y.id").as("dst"))
+        }.reduce(_ union _)
+        // each round reads the previous graph three times (two symmetrize
+        // branches + the incumbent union) — without cutting lineage every
+        // round, recomputation nests EXPONENTIALLY in `rounds`; same
+        // per-round localCheckpoint as the ConnectedComponents loop
+        var g = Jobs.labeled(sc, "knn graph: seed")(topk(seedPairs.distinct()).localCheckpoint())
+        for (r <- 1 to rounds) {
+          val edges = g.select($"src", $"dst")
+          val undirected = edges
+            .union(edges.select($"dst".as("src"), $"src".as("dst"))).distinct()
+          val proposals = undirected.as("a")
+            .join(undirected.as("b"), col("a.src") === col("b.src"))
+            .select(col("a.dst").as("src"), col("b.dst").as("dst"))
+            .filter($"src" =!= $"dst")
+          g = Jobs.labeled(sc, s"knn graph: round $r")(
+            topk(proposals.union(edges).distinct()).localCheckpoint())
+        }
+        // every reader of the vector relation ran inside the loop (the
+        // final localCheckpoint above is eager), so free its blocks
+        // before handing back the checkpoint-backed result
+        DriverGate.free(c)
+        out(g)
     }
-    // every consumer of the vector cache ran inside the loop (the final
-    // localCheckpoint above is eager), so release its blocks before
-    // handing back the checkpoint-backed result — otherwise the cache
-    // stays pinned for the session with no caller-side handle
-    c.unpersist()
-    g.select($"src".as("query_id"), $"rank", $"dst".as("neighbor_id"), $"cosine")
   }
 
   /** HNSW-style layered ANN top-k (Malkov & Yashunin, "Efficient and
@@ -829,17 +872,36 @@ object Vectors {
     * bucket ∝ N rule): a fixed plane count would make the
     * within-bucket pair work quadratic in the corpus, while the sized
     * ladder keeps it ≈ N × targetBucket × tables — at sf0.1 that cuts
-    * layer-0 scored pairs 8× (6.2M → 0.8M); local wall-time is
-    * dominated by the fixed ~9 shuffle rounds (entry + per-layer
-    * edges/hops), which AMORTIZE at scale where per-round data work
-    * dwarfs round latency. Pass `planes > 0` to pin the ladder
-    * explicitly ([[lshTopK]]/[[knnGraph]] convention).
+    * layer-0 scored pairs 8× (6.2M → 0.8M). Pass `planes > 0` to pin
+    * the ladder explicitly ([[lshTopK]]/[[knnGraph]] convention).
+    *
+    * A corpus and query set that together fit 2^22 doubles, with
+    * non-NULL distinct ids of one integral or string type, are searched
+    * on the driver ([[VectorGate]], the gate [[knnGraph]] and the graph
+    * operators share): the layer-count aggregate also measures the
+    * corpus, one job collects it and a bounded `limit` collect reads
+    * the queries, and the same layers, edges and beam rounds run there.
+    * The distributed search runs about nine shuffle rounds (entry +
+    * per-layer edges/hops) of fixed job latency, which only AMORTIZE at
+    * scale, where per-round data work dwarfs round latency.
     */
   def hnswTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int,
       beam: Int = 16, degree: Int = 16, layers: Int = 3, fanout: Long = 8,
       planes: Int = 0, tables: Int = 2, hops: Int = 2, seed: Int = 42,
-      targetBucket: Int = graft.textops.NearDup.EmbedTargetBucket): DataFrame = {
+      targetBucket: Int = graft.textops.NearDup.EmbedTargetBucket): DataFrame =
+    hnswTopKGated(corpus, queries, idCol, vecCol, k, dim, beam, degree, layers, fanout,
+      planes, tables, hops, seed, targetBucket, VectorGate.Budget)
+
+  /** [[hnswTopK]] behind a driver budget of `limit` doubles (corpus and
+    * queries together); `limit = 0` forces the distributed path (the
+    * specs run every case on both paths).
+    */
+  private[graft] def hnswTopKGated(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, dim: Int,
+      beam: Int, degree: Int, layers: Int, fanout: Long,
+      planes: Int, tables: Int, hops: Int, seed: Int,
+      targetBucket: Int, limit: Long): DataFrame = {
     require(layers >= 1, s"need at least one layer: $layers")
     require(beam >= k, s"beam ($beam) must cover k ($k)")
     require(fanout >= 2 && (fanout & (fanout - 1)) == 0,
@@ -849,26 +911,31 @@ object Vectors {
     require(hops >= 1, s"need at least one hop per layer: $hops")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val c = corpus
+    val sc = spark.sparkContext
+    val layerMods = Array.tabulate(layers)(j => (0 until j).foldLeft(1L)((a, _) => a * fanout))
+    val frame = corpus
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", normCol($"v"))
       .withColumn("h60", conv(substring(
         md5(concat(lit(s"hnsw$seed:"), $"id".cast("string"))), 1, 15), 16, 10)
         .cast("long"))
-      .persist()
-    // scored against every beam round — persist like the corpus side
-    val q = queries
+    // the vector relation, filled by the one pass that counts every
+    // layer's members — sizing the per-layer bucket ladders AND picking
+    // the entry layer — and the corpus' doubles for the driver gate;
+    // every layer graph and beam round reads its blocks
+    val (c, counts) = Jobs.labeled(sc, "hnsw: gate")(
+      DriverGate.checkpointAggregate(frame, new Array[Long](layers + 1))(
+        (a, r) => {
+          if (!r.isNullAt(3))
+            layerMods.indices.foreach(j => if (r.getLong(3) % layerMods(j) == 0) a(j) += 1)
+          a(layers) += VectorGate.weight(r)
+          a
+        },
+        (a, b) => { a.indices.foreach(i => a(i) += b(i)); a }))
+    val qf = queries
       .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
       .withColumn("qn", normCol($"qv"))
-      .persist()
-    val layerMods = (0 until layers)
-      .map(j => (0 until j).foldLeft(1L)((a, _) => a * fanout))
-    // one pass over the cached corpus yields every layer's member count
-    // — sizes the per-layer bucket ladders AND picks the entry layer
-    val countsRow = c.select(layerMods.zipWithIndex.map { case (m, j) =>
-      coalesce(sum(when($"h60" % lit(m) === 0, 1L)), lit(0L)).as(s"c$j")
-    }: _*).collect()(0)
-    val layerCount = (0 until layers).map(countsRow.getLong)
+    val layerCount = counts.toSeq.take(layers)
     // planes = 0 (the default) sizes each layer's bucket count to its
     // membership — the [[graft.textops.NearDup.autoPlanes]] bucket ∝ N
     // rule, without which the within-bucket pair work is quadratic in
@@ -884,8 +951,8 @@ object Vectors {
     // per-row cost — one pass instead of one per table), lazily
     // checkpointed so each table's TWO self-join sides read
     // materialized narrow rows (the scoring joins read `mem` — they
-    // need v/n, which bk drops, so they re-filter the persisted
-    // corpus: an in-memory scan, not a recompute); and the
+    // need v/n, which bk drops, so they re-filter the corpus
+    // blocks: a scan, not a recompute); and the
     // symmetrized result skips
     // its final distinct — the descent's `expanded.distinct()` dedups
     // candidates anyway, so edge multiplicity cannot reach a result
@@ -929,14 +996,36 @@ object Vectors {
     // exact.
     val entryLayer = ((layers - 1) to 0 by -1)
       .find(j => layerCount(j) > 0).getOrElse(0)
-    val out = hnswBeamDescent(c, q, members(entryLayer),
-      ((entryLayer - 1) to 0 by -1).map(layerEdges), k, beam, hops)
-    // the descent's localCheckpoints are eager, so the vector caches
-    // have no remaining consumers — release them (the knnGraph
-    // convention)
-    c.unpersist()
-    q.unpersist()
-    out
+    val idType = c.schema("id").dataType
+    val budget = limit - counts(layers)
+    val local = if (limit <= 0 || budget < 0 || !VectorGate.localIds(idType) ||
+        qf.schema("query_id").dataType != idType) None
+      else Jobs.labeled(sc, "hnsw: gate") {
+        for {
+          vs <- VectorGate.Vecs.of(DriverGate.internalRows(c), idType)
+          qrows <- DriverGate.internalRowsUpTo(qf, budget)
+          if qrows.iterator.map(VectorGate.weight).sum <= budget
+          qs <- VectorGate.Vecs.of(qrows, idType)
+        } yield VectorGate.hnsw(vs, qs, k, beam, degree, layerMods, entryLayer, planesFor,
+          dim, tables, hops, seed)
+      }
+    local match {
+      case Some(rows) =>
+        DriverGate.free(c)
+        // the distributed plan's schema, nullability included
+        spark.createDataFrame(rows.asJava, beamTopK(rankBeam(c, qf,
+          qf.select($"query_id").crossJoin(c.select($"id".as("cand"))), beam), k).schema)
+      case None =>
+        // scored against every beam round — persisted
+        val q = qf.persist()
+        val out = hnswBeamDescent(c, q, members(entryLayer),
+          ((entryLayer - 1) to 0 by -1).map(layerEdges), k, beam, hops)
+        // the descent's localCheckpoints are eager, so the vector
+        // relation and the query cache have no remaining readers
+        q.unpersist()
+        DriverGate.free(c)
+        out
+    }
   }
 
   /** The beam-descent phase of [[hnswTopK]], factored out so an
@@ -954,16 +1043,6 @@ object Vectors {
       k: Int, beam: Int, hops: Int): DataFrame = {
     val spark = c.sparkSession
     import spark.implicits._
-    // exact re-score of a (query_id, cand) frame, keep top-`limit`
-    def rankBeam(cands: DataFrame, limit: Int): DataFrame = {
-      val scored = cands
-        .join(c.select($"id".as("cand"), $"v".as("dv"), $"n".as("dn")), "cand")
-        .join(q, "query_id")
-        .withColumn("cosine", round6(cosineWithNorms($"qv", $"qn", $"dv", $"dn")))
-      val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"cand".asc)
-      scored.withColumn("rnk", row_number().over(w)).filter($"rnk" <= limit)
-        .select($"query_id", $"cand", $"cosine", $"rnk")
-    }
     // a query that IS a corpus member keeps itself in the beam as a
     // NAVIGATION seed (cosine 1.0 — real HNSW keeps the entry node
     // even when it equals the query; dropping it can empty the beam
@@ -972,7 +1051,7 @@ object Vectors {
     val sc = spark.sparkContext
     val entry = q.select($"query_id")
       .crossJoin(broadcast(entryMembers.select($"id".as("cand"))))
-    var b = Jobs.labeled(sc, "hnsw: entry beam")(rankBeam(entry, beam).localCheckpoint())
+    var b = Jobs.labeled(sc, "hnsw: entry beam")(rankBeam(c, q, entry, beam).localCheckpoint())
     var li = 0
     for (edges0 <- layerEdgesDesc) {
       val edges = if (hops > 1)
@@ -985,17 +1064,38 @@ object Vectors {
           .union(b.select($"query_id", $"cand"))
           .distinct()
         b = Jobs.labeled(sc, s"hnsw: layer $li hop $h beam")(
-          rankBeam(expanded, beam).localCheckpoint())
+          rankBeam(c, q, expanded, beam).localCheckpoint())
       }
       li += 1
     }
-    val wf = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"cand".asc)
-    b.filter($"cand" =!= $"query_id")
-      .drop("rnk")
-      .withColumn("rnk", row_number().over(wf)).filter($"rnk" <= k)
-      .select($"query_id", $"rnk", $"cand".as("neighbor_id"), $"cosine")
+    beamTopK(b, k)
   }
 
+  /** Exact re-score of a `(query_id, cand)` frame against the corpus `c`
+    * and the queries `q`; keeps each query's top `limit`.
+    */
+  private def rankBeam(c: DataFrame, q: DataFrame, cands: DataFrame, limit: Int): DataFrame = {
+    val scored = cands
+      .join(c.select(col("id").as("cand"), col("v").as("dv"), col("n").as("dn")), "cand")
+      .join(q, "query_id")
+      .withColumn("cosine", round6(cosineWithNorms(col("qv"), col("qn"), col("dv"), col("dn"))))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("cand").asc)
+    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= limit)
+      .select(col("query_id"), col("cand"), col("cosine"), col("rnk"))
+  }
+
+  /** The top `k` of a ranked beam, self excluded. */
+  private def beamTopK(b: DataFrame, k: Int): DataFrame = {
+    val wf = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("cand").asc)
+    b.filter(col("cand") =!= col("query_id"))
+      .drop("rnk")
+      .withColumn("rnk", row_number().over(wf)).filter(col("rnk") <= k)
+      .select(col("query_id"), col("rnk"), col("cand").as("neighbor_id"), col("cosine"))
+  }
+
+  /** Bucketed ANN top-k: exact ranking within the query's bucket. Trades
+    * recall for a bucket join; [[bruteTopK]] is the recall oracle.
+    */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, planes: Int, dim: Int): DataFrame = {
     val spark = corpus.sparkSession

@@ -57,6 +57,40 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(got == Seq("Copper Pipe"))
   }
 
+  test("install is idempotent: a second call keeps the registry entries and logs no WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val plain = SparkSpec.session
+    val registry = plain.sessionState.functionRegistry
+    val names = Seq("graft_vocab_match", "graft_dedup_key", "graft_chunks", "graft_vocab_spans")
+    def entries = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    GraftExtensions.install(plain)
+    val first = entries
+    assert(first.forall(_.isDefined))
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("install-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) warns.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try GraftExtensions.install(plain)
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    first.zip(entries).zip(names).foreach { case ((a, b), n) => assert(a.get eq b.get, n) }
+    import scala.jdk.CollectionConverters._
+    val replaced = warns.asScala.filter(_.contains("previously registered"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
+  }
+
   test("graft_dedup_key callable from SQL; equals the DataFrame key column") {
     val got = spark.sql(
       "SELECT graft_dedup_key('The QUICK  brown fox, v2.1!') AS k")

@@ -318,7 +318,7 @@ class TextAnalysisSpec extends SparkSpec {
 class VectorsSpec extends SparkSpec {
   import spark.implicits._
   import org.apache.spark.sql.functions.col
-  import graft.vectors.Vectors
+  import graft.vectors.{VectorGate, Vectors}
 
   test("cosineCol: orthogonal=0, identical=1, opposite=-1") {
     val df = Seq(
@@ -409,9 +409,12 @@ class VectorsSpec extends SparkSpec {
     val brute = Vectors.bruteTopK(emb, emb, "vec_id", "embedding", 3)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     def recallAt(rounds: Int): Double = {
-      val g = Vectors.knnGraph(emb, "vec_id", "embedding",
-          k = 3, planes = 3, dim = 64, rounds = rounds, tables = 3)
-        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+      val g = GatePaths.agree(
+          Vectors.knnGraph(emb, "vec_id", "embedding",
+            k = 3, planes = 3, dim = 64, rounds = rounds, tables = 3),
+          Vectors.knnGraphGated(emb, "vec_id", "embedding", k = 3, planes = 3, dim = 64,
+            rounds = rounds, tables = 3, seed = 42, 0L, VectorGate.PairWorkLimit))
+        .map(r => (r.getLong(0), r.getLong(2))).toSet
       g.intersect(brute).size.toDouble / brute.size
     }
     val seeded = recallAt(0) // = multi-table LSH candidates only
@@ -765,9 +768,11 @@ class VectorsSpec extends SparkSpec {
   test("knnGraph emits exactly k ranked rows per node with no self-edges") {
     val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .filter($"vec_id" < 50)
-    val g = Vectors.knnGraph(emb, "vec_id", "embedding",
-        k = 3, planes = 2, dim = 64, rounds = 1)
-      .select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect()
+    val g = GatePaths.agree(
+        Vectors.knnGraph(emb, "vec_id", "embedding", k = 3, planes = 2, dim = 64, rounds = 1),
+        Vectors.knnGraphGated(emb, "vec_id", "embedding", k = 3, planes = 2, dim = 64,
+          rounds = 1, tables = 2, seed = 42, 0L, VectorGate.PairWorkLimit))
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     g.foreach { case (q, _, n) => assert(q != n) }
     g.groupBy(_._1).values.foreach { rs =>
       assert(rs.map(_._2).sorted.toSeq == (1 to rs.length).toSeq)
@@ -1520,10 +1525,13 @@ class MultimodalSpec extends SparkSpec {
     assert(row.slice(0, 32).toSeq != row.slice(32, 64).toSeq)
     // media -> embedding -> NN-Descent graph: the duplicated payload
     // must surface as its twin's rank-1 neighbor at cosine 1.0
-    val g = graft.vectors.Vectors.knnGraph(emb, "media_id", "embedding",
-        k = 2, planes = 2, dim = 64, rounds = 1, tables = 2)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-      .as[(Long, Int, Long, Double)].collect()
+    val g = GatePaths.agree(
+        graft.vectors.Vectors.knnGraph(emb, "media_id", "embedding",
+          k = 2, planes = 2, dim = 64, rounds = 1, tables = 2),
+        graft.vectors.Vectors.knnGraphGated(emb, "media_id", "embedding",
+          k = 2, planes = 2, dim = 64, rounds = 1, tables = 2, seed = 42,
+          0L, graft.vectors.VectorGate.PairWorkLimit))
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     val top = g.filter(r => r._1 == 9999L && r._2 == 1).head
     assert(top._3 == media.head.media_id && top._4 == 1.0, s"got $top")
   }
