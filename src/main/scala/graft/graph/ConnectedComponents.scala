@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.util.Jobs
+import graft.util.{DriverGate, Jobs}
 
 /** Distributed connected components by iterative min-label propagation —
   * the clustering step that turns near-duplicate PAIRS (MinHash/SimHash
@@ -90,7 +90,7 @@ object ConnectedComponents {
     // count of the rows it returns decides the rest — the same decision
     // as a full directed count, with no probe job beyond the
     // checkpoint's own (localEdgeLimit = 0 runs none at all).
-    val (cu, canonRows) = graft.util.DriverGate.checkpointUpTo(
+    val (cu, canonRows) = DriverGate.checkpointUpTo(
       e.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst")).distinct(),
       localEdgeLimit)
@@ -136,7 +136,7 @@ object ConnectedComponents {
       else if (cmp(rb, ra) < 0) parent(ra) = rb
     }
     val nodeType = cu.schema.head.dataType
-    SmallGraph.frame(cu.sparkSession, parent.keys.toSeq.map(n => Row(n, find(n))),
+    DriverGate.frame(cu.sparkSession, parent.keys.toSeq.map(n => Row(n, find(n))),
       StructType(Seq(StructField("node", nodeType), StructField("label", nodeType))))
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.util.DriverGate
+
 /** HITS (Kleinberg 1999) hub/authority scores over a weighted edge
   * list, in EXACT integer arithmetic — the [[PageRank]] float policy
   * applied to the mutually-recursive pair: a good HUB points at good
@@ -180,7 +182,7 @@ object Hits {
     }
     val rows = (0 until m).filter(mult(_) > 0).flatMap(i =>
       Iterator.fill((mult(i) * mult(i)).toInt)(Row(g.id(i), h(i), a(i))))
-    SmallGraph.frame(n.sparkSession, rows, StructType(n.schema.fields ++ Seq(
+    DriverGate.frame(n.sparkSession, rows, StructType(n.schema.fields ++ Seq(
       StructField("hub", LongType), StructField("auth", LongType))))
   }
 

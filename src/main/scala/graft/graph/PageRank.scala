@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.util.DriverGate
+
 /** Weighted PageRank over an edge list, in EXACT integer arithmetic —
   * ranks are carried as fixed-point micro-units (scale 10^12) and every
   * step is integer multiply/divide, so a fixed iteration count yields
@@ -227,7 +229,7 @@ object PageRank {
     }
     // the distributed schema: a round's `div` types as nullable, the
     // start vector's literal does not
-    SmallGraph.frame(n.sparkSession, g.node.toSeq.map(i => Row(g.id(i), rank(i))),
+    DriverGate.frame(n.sparkSession, g.node.toSeq.map(i => Row(g.id(i), rank(i))),
       StructType(n.schema.fields :+ StructField("rank", LongType, nullable = iters > 0)))
   }
 }

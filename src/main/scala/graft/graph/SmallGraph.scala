@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.util.DriverGate
 
@@ -61,8 +60,4 @@ private[graph] object SmallGraph {
     val dst: Array[Int] = edgeRows.map(r => slot(r.get(1)))
     val w: Array[Long] = edgeRows.map(_.getLong(2))
   }
-
-  /** A frame over a local solve's result rows. */
-  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
 }

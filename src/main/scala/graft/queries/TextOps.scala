@@ -568,12 +568,16 @@ object TextOps {
     // ---- MinHash+LSH near-dup pairs with exact verification: the 100 TB
     // scale path (oracled: the seeded hash family is plain integer
     // arithmetic mirrored into DuckDB SQL; recall vs q16 additionally
-    // asserted in NearDupSpec).
+    // asserted in NearDupSpec). FORCED distributed (driver gate at 0,
+    // like q84's CC): the gate corpus fits the driver gate, which
+    // q35/q70/q84/q173 take, so this gate keeps the distributed plan
+    // under the oracle and its plan contract.
     "q17_minhash_lsh_pairs" -> { (s, dir) =>
       import s.implicits._
-      graft.textops.NearDup.minhashLshPairs(
+      graft.textops.NearDup.minhashLshPairsGated(
         docsParallel(s, dir), "doc_id", "text",
-        n = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
+        n = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
+        limit = 0L, pairLimit = graft.textops.NearDupGate.PairWorkLimit)
         .orderBy($"id_a", $"id_b")
     },
 

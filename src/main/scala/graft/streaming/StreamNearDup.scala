@@ -1,11 +1,15 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.graph.ConnectedComponents
-import graft.textops.NearDup
+import graft.textops.{NearDup, NearDupGate}
+import graft.util.{DriverGate, Jobs}
 
 /** Streaming twin of the MinHash+LSH near-dup pipeline (q17's
   * [[NearDup.minhashLshPairs]] composed with q35's
@@ -17,9 +21,10 @@ import graft.textops.NearDup
   * ledger (every admitted doc's (band, band_key) rows — the same keys
   * the batch operator self-joins) plus the hashed-shingle ledger
   * ((id, h) — what the exact-Jaccard verify joins). Both are built by
-  * the batch operator's OWN phases ([[NearDup.hashedShingleIds]],
-  * [[NearDup.bandedKeys]], [[NearDup.verifyJaccard]] — shared code,
-  * not a mirror), so stream and batch can never drift.
+  * the batch operator's OWN code — its phases ([[NearDup.hashedShingleIds]],
+  * [[NearDup.bandedKeys]], [[NearDup.verifyJaccard]]) on the
+  * distributed path, its driver solver ([[graft.textops.NearDupGate]])
+  * below the gate — so stream and batch can never drift.
   *
   * Per micro-batch ([[nearDupBatch]]):
   *
@@ -55,8 +60,15 @@ import graft.textops.NearDup
   * rows.
   *
   * Scale shape: the ledgers are hash-only corpus-scale tables (8-byte
-  * ids + longs/strings, never text), held as localCheckpointed frames
-  * here (session-scale); a production deployment keys both in a
+  * ids + longs/strings, never text). While the ledger and the batch's
+  * shingle rows together fit the driver gate
+  * ([[graft.util.DriverGate.DefaultRowLimit]] rows), a batch is admitted
+  * on the driver ([[graft.textops.NearDupGate.admit]], the batch
+  * operator's driver solver) and the ledger is held as frames over
+  * local rows, which the next batch reads without a job. A ledger that
+  * outgrows the gate hands off to the distributed steps as ordinary
+  * frames, and from then on is held as localCheckpointed frames
+  * (session-scale); a production deployment keys both in a
   * Delta/parquet table and MERGEs only the batch's rows — the
   * [[graft.plans.Ledger]] seam, per-batch cost proportional to the
   * BATCH. The probe join shuffles only the batch's own bands (the
@@ -83,22 +95,86 @@ object StreamNearDup {
     * batch canonical) this doc duplicates, null when kept — and the
     * updated ledger.
     *
-    * The intermediate frames are cut with `localCheckpoint(eager =
-    * false)`, which is not lazy over an exchange: under AQE the cut's
-    * shuffle stages run inside the call (AQE finalizes the plan to
-    * build the RDD), and only its last stage waits for the first
-    * action. Most of a batch's work therefore runs inside this call,
-    * and the two ledger cuts are eager outright.
+    * A batch whose ids are non-NULL and integral, over a ledger held
+    * as local rows, runs on the driver when the ledger's rows and the
+    * batch's `(id, h)` shingle rows (bounded by the rows its cut's
+    * repartition wrote, [[NearDup.hashedShingleIds]]) together fit the
+    * gate: one job fills and collects the batch's shingle checkpoint,
+    * and a bounded collect reads the batch ids (none for a batch of
+    * local rows). The result and the next ledger are frames over local
+    * rows. Otherwise the steps run distributed, reading the same
+    * checkpoint: their intermediate frames are cut with
+    * `localCheckpoint(eager = false)`, which is not lazy over an
+    * exchange — under AQE the cut's shuffle stages run inside the call
+    * (AQE finalizes the plan to build the RDD), and only its last stage
+    * waits for the first action — and the two ledger cuts are eager
+    * outright.
     */
   def nearDupBatch(batch: DataFrame, ledger: Ledger,
       idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int, threshold: Double): (DataFrame, Ledger) = {
+      n: Int, bands: Int, rowsPerBand: Int, threshold: Double): (DataFrame, Ledger) =
+    nearDupBatchGated(batch, ledger, idCol, textCol, n, bands, rowsPerBand, threshold,
+      DriverGate.DefaultRowLimit)
+
+  /** [[nearDupBatch]] behind a driver gate of `limit` rows (ledger and
+    * batch shingles together); `limit = 0` forces the distributed steps
+    * (the specs run every case on both paths).
+    */
+  private[graft] def nearDupBatchGated(batch: DataFrame, ledger: Ledger,
+      idCol: String, textCol: String,
+      n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
+      limit: Long): (DataFrame, Ledger) = {
     val spark = batch.sparkSession
+    val (shB, bound) = DriverGate.checkpointRowBound(
+      NearDup.hashedShingleIds(batch, idCol, textCol, n))
+    val ids = batch.select(col(idCol).cast("long"))
+    val held = for {
+      b <- DriverGate.localRows(ledger.bands)
+      if ledger.bands.schema.map(_.dataType) == Seq(LongType, IntegerType, StringType)
+      s <- DriverGate.localRows(ledger.shingles)
+      if ledger.shingles.schema.map(_.dataType) == Seq(LongType, LongType)
+      if !(b ++ s).exists(_.anyNull)
+    } yield (b, s)
+    val budget = held.fold(0L) { case (b, s) => limit - b.length - s.length }
+    val idType = shB.schema("id").dataType
+    val local =
+      if (!DriverGate.LocalIdTypes.contains(idType) || idType == StringType) None
+      else Jobs.labeled(spark.sparkContext, "near dup admission: gate") {
+        for {
+          rows <- DriverGate.checkpointRowsUpTo(shB, bound, budget)
+          idRows <- DriverGate.internalRowsUpTo(ids, budget - rows.length)
+          if !idRows.exists(_.isNullAt(0))
+          sets <- NearDupGate.Sets.of(rows, r => r.get(0, idType).asInstanceOf[Number].longValue,
+            DriverGate.idOrdering(LongType))
+          (b, s) <- held
+          a <- NearDupGate.admit(idRows.map(_.getLong(0)).distinct.toSeq, sets, b, s,
+            bands, rowsPerBand, threshold, NearDupGate.PairWorkLimit)
+        } yield a
+      }
+    local match {
+      case Some(a) =>
+        DriverGate.free(shB)
+        val outSchema = StructType(Seq(ids.schema.head.copy(name = idCol),
+          StructField("status", StringType, nullable = false),
+          StructField("partner", LongType, nullable = true)))
+        (spark.createDataFrame(a.out.asJava, outSchema),
+          Ledger(spark.createDataFrame(a.bands.asJava, ledger.bands.schema),
+            spark.createDataFrame(a.shingles.asJava, ledger.shingles.schema)))
+      case None =>
+        distributed(shB, ids, ledger, idCol, bands, rowsPerBand, threshold)
+    }
+  }
+
+  /** [[nearDupBatch]]'s distributed steps over the batch's `(id, h)`
+    * checkpoint `shB` and its `ids` frame (the id column cast to long).
+    */
+  private def distributed(shB: DataFrame, ids: DataFrame, ledger: Ledger,
+      idCol: String, bands: Int, rowsPerBand: Int, threshold: Double): (DataFrame, Ledger) = {
+    val spark = shB.sparkSession
     import spark.implicits._
 
-    val shB = NearDup.hashedShingleIds(batch, idCol, textCol, n)
     val bandedB = NearDup.bandedKeys(shB, bands, rowsPerBand)
-    val batchIds = batch.select(col(idCol).cast("long").as("id")).distinct()
+    val batchIds = ids.toDF("id").distinct()
       .localCheckpoint(eager = false)
     val admittedIds = ledger.bands.select($"id").distinct()
 
@@ -182,7 +258,8 @@ object StreamNearDup {
     def ingest(batch: DataFrame): DataFrame = {
       val (out, next) = nearDupBatch(
         batch, state, idCol, textCol, n, bands, rowsPerBand, threshold)
-      val pinned = out.localCheckpoint()
+      // a driver-path result is local rows already; pin only a plan
+      val pinned = if (DriverGate.localRows(out).isDefined) out else out.localCheckpoint()
       state = next
       pinned
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.util.{DriverGate, Jobs}
+
 /** Near-duplicate detection suite for training-data curation at 100 TB
   * (BASELINE.json north star; beyond the reference's own surface — the
   * reference dedups exact page bodies only, SURVEY.md T1).
@@ -226,22 +228,65 @@ object NearDup {
     * (docs × b rows) → bucket self-join (buckets are tiny unless data is
     * degenerate) → verify on exact shingle join restricted to candidates.
     *
+    * Below the driver gate the phases after the shingle hashes run on
+    * the driver instead ([[NearDupGate]], behind the bounded-collect gate
+    * the graph and vector operators share). Every path reads the
+    * `(id, h)` checkpoint, whose cut runs the repartition shuffle; the
+    * rows that shuffle wrote bound the deduplicated rows, so the gate
+    * probes no rows. When the bound is at most
+    * [[graft.util.DriverGate.DefaultRowLimit]] and the ids are of an
+    * integral or string type, one job fills and collects the
+    * checkpoint, and when the ids are non-NULL the signatures, buckets
+    * and verify run on the driver — unless the
+    * pair work Σ_bands Σ_buckets |b|² exceeds
+    * [[NearDupGate.PairWorkLimit]]. The result is then a one-partition
+    * frame over local rows with the plan's schema. The distributed plan
+    * launches a job per shuffle stage (signature aggregate, bucket join,
+    * candidate distinct, verify joins), which at gate scale is all
+    * latency.
+    *
     * Entirely `functions`-built (no UDF): the md5-based hash family is
     * plain integer arithmetic, so every stage is whole-stage-codegen'd
     * AND the identical formulas run in DuckDB as the correctness oracle
-    * (q17 in the driver gate).
+    * (q17 in the driver gate, which forces the distributed plan).
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    val sh = hashedShingleIds(df, idCol, textCol, n)
-    val banded = bandedKeys(sh, bands, rowsPerBand)
+      n: Int, bands: Int, rowsPerBand: Int, threshold: Double): DataFrame =
+    minhashLshPairsGated(df, idCol, textCol, n, bands, rowsPerBand, threshold,
+      DriverGate.DefaultRowLimit, NearDupGate.PairWorkLimit)
+
+  /** [[minhashLshPairs]] behind a driver gate of `limit` shingle rows
+    * and a pair-work bound of `pairLimit`; `limit = 0` forces the
+    * distributed plan (q17 and the specs, which run every case on both
+    * paths).
+    */
+  private[graft] def minhashLshPairsGated(df: DataFrame, idCol: String, textCol: String,
+      n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
+      limit: Long, pairLimit: Long): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val candidates = banded.as("x").join(banded.as("y"),
-        $"x.band" === $"y.band" && $"x.band_key" === $"y.band_key" && $"x.id" < $"y.id")
-      .select($"x.id".as("id_a"), $"y.id".as("id_b"))
-      .distinct()
-    verifyJaccard(candidates, sh).filter($"jaccard" >= threshold)
+    val (sh, bound) = DriverGate.checkpointRowBound(hashedShingleIds(df, idCol, textCol, n))
+    val idType = sh.schema("id").dataType
+    val local =
+      if (!DriverGate.LocalIdTypes.contains(idType)) None
+      else Jobs.labeled(spark.sparkContext, "near dup: gate") {
+        DriverGate.checkpointRowsUpTo(sh, bound, limit)
+      }.flatMap(NearDupGate.Sets.of(_, _.get(0, idType), DriverGate.idOrdering(idType)))
+        .flatMap(NearDupGate.pairs(_, bands, rowsPerBand, threshold, pairLimit))
+    local match {
+      case Some(rows) =>
+        DriverGate.free(sh)
+        // the distributed plan's schema, nullability included
+        DriverGate.frame(spark, rows,
+          verifyJaccard(sh.select($"id".as("id_a"), $"id".as("id_b")), sh).schema)
+      case None =>
+        val banded = bandedKeys(sh, bands, rowsPerBand)
+        val candidates = banded.as("x").join(banded.as("y"),
+            $"x.band" === $"y.band" && $"x.band_key" === $"y.band_key" && $"x.id" < $"y.id")
+          .select($"x.id".as("id_a"), $"y.id".as("id_b"))
+          .distinct()
+        verifyJaccard(candidates, sh).filter($"jaccard" >= threshold)
+    }
   }
 
   /** Cross-corpus MinHash near-dup (the Dolma-style priority dedup: a
@@ -267,8 +312,11 @@ object NearDup {
       n: Int, bands: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
     val spark = a.sparkSession
     import spark.implicits._
-    val shA = hashedShingleIds(a, idCol, textCol, n)
-    val shB = hashedShingleIds(b, idCol, textCol, n)
+    // reclaimable multi-consumer cuts; under AQE each repartition
+    // shuffle runs inside this call, only the dedup after it waits for
+    // the first action
+    val shA = hashedShingleIds(a, idCol, textCol, n).localCheckpoint(eager = false)
+    val shB = hashedShingleIds(b, idCol, textCol, n).localCheckpoint(eager = false)
     val bandedA = bandedKeys(shA, bands, rowsPerBand)
     val bandedB = bandedKeys(shB, bands, rowsPerBand)
     val candidates = bandedA.as("x").join(bandedB.as("y"),
@@ -288,7 +336,10 @@ object NearDup {
     * (the oracle joins on the same md5-derived values), so results are
     * identical by construction — even a hash collision collides
     * identically on both sides. Null texts carry no shingles, like
-    * jaccardPairs; checkpointed — feeds signatures + verify twice.
+    * jaccardPairs. Callers cut it with a local checkpoint — it feeds
+    * the signatures and the verify; the driver gates read the rows its
+    * repartition wrote off that cut
+    * ([[graft.util.DriverGate.checkpointRowBound]]).
     * ONE exchange hash-partitioned by id serves the whole query:
     * HashPartitioning(id) satisfies the clustering needs of the
     * (id, h) dedup, the signature groupBy(id), the sizes groupBy(id),
@@ -305,11 +356,6 @@ object NearDup {
       .select($"id", shingleHash60($"shingle").as("h"))
       .repartition($"id")
       .dropDuplicates("id", "h")
-      // reclaimable multi-consumer cut; under AQE its repartition
-      // shuffle runs inside this call (so minhashLshPairs runs jobs
-      // before it returns), only the dedup after it waits for the
-      // first action
-      .localCheckpoint(eager = false)
   }
 
   /** Phase 2 of [[minhashLshPairs]] (shared with the streaming twin):

@@ -1,17 +1,24 @@
 package graft.util
 
+import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.graftbridge.BlockBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The bounded-collect gate shared by the graph operators
   * ([[graft.graph.ConnectedComponents]], [[graft.graph.PageRank]],
-  * [[graft.graph.Hits]]) and the vector graph builders
-  * ([[graft.vectors.Vectors.knnGraph]], [[graft.vectors.Vectors.hnswTopK]]):
+  * [[graft.graph.Hits]]), the vector graph builders
+  * ([[graft.vectors.Vectors.knnGraph]], [[graft.vectors.Vectors.hnswTopK]])
+  * and MinHash near-dup detection
+  * ([[graft.textops.NearDup.minhashLshPairs]] and the admission batch
+  * [[graft.streaming.StreamNearDup.nearDupBatch]]):
   * an input that fits a driver budget is solved exactly on the driver,
   * because every distributed round costs whole Spark jobs of fixed
   * latency, which dwarfs a sub-second exact solve of a small input (the
@@ -24,6 +31,9 @@ import org.apache.spark.sql.types._
   * an eager checkpoint, and none of its rows reach the driver (a
   * bounded `limit(limit + 1).collect()` probe ships up to `limit + 1`
   * of them). A limit `<= 0` checkpoints eagerly and probes nothing.
+  * The near-dup gates probe nothing at all: their cut's own shuffle
+  * bounds the rows ([[checkpointRowBound]]), so a large frame costs
+  * exactly its lazy checkpoint and a small one one collecting job.
   */
 object DriverGate {
 
@@ -63,6 +73,47 @@ object DriverGate {
     (ck, if (fits) Some(ck.collect()) else None)
   }
 
+  /** `df`'s lazy local checkpoint, and a bound on its rows read off the
+    * cut itself. Under AQE, cutting a plan runs the shuffle stages below
+    * its final stage; when that stage reads nothing but them, the rows
+    * they wrote bound the rows of a final stage that does not multiply
+    * rows (a dedup, filter or projection: the caller's to know). `None`
+    * when there is no such bound (AQE off, as in a streaming query's
+    * micro-batches, or the final stage also scans or broadcasts). No
+    * job beyond the cut's own shuffle stages.
+    */
+  def checkpointRowBound(df: DataFrame): (DataFrame, Option[Long]) = {
+    val ck = df.localCheckpoint(eager = false)
+    val bound = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        val finalStage = a.executedPlan match {
+          case r: ResultQueryStageExec => r.plan
+          case p => p
+        }
+        val rows = finalStage.collectLeaves().map {
+          case s: ShuffleQueryStageExec if s.isMaterialized => s.getRuntimeStatistics.rowCount
+          case _ => None
+        }
+        if (rows.forall(_.isDefined)) Some(rows.map(_.get.toLong).sum) else None
+      case _ => None
+    }
+    (ck, bound)
+  }
+
+  /** The rows of `ck`, a lazy local checkpoint with row bound `bound`
+    * ([[checkpointRowBound]]), when it has at most `limit` of them. A
+    * bound within `limit` costs one job, which fills and collects the
+    * checkpoint; a bound over it costs none (the rows are not probed,
+    * so a frame whose final stage shrinks it below `limit` counts as
+    * over). Without a bound, a counting job fills the checkpoint first.
+    * `limit <= 0` reads nothing.
+    */
+  def checkpointRowsUpTo(ck: DataFrame, bound: Option[Long],
+      limit: Long): Option[Array[InternalRow]] =
+    if (limit <= 0 || bound.exists(_ > limit)) None
+    else if (bound.isEmpty && ck.queryExecution.toRdd.count() > limit) None
+    else Some(internalRows(ck))
+
   /** `df`'s rows, collected as `InternalRow`s (one job; a checkpoint is
     * read from its blocks).
     */
@@ -90,6 +141,23 @@ object DriverGate {
   def free(ck: DataFrame): Unit =
     ck.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.foreach(BlockBridge.free)
 
+  /** The rows of `df` when it is a frame over local rows (its optimized
+    * plan is a `LocalRelation`), read without a job.
+    */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
+  /** A frame over a driver solve's result rows, in one partition: a
+    * global sort or aggregate over it then plans no exchange and runs
+    * one job, where a scan of local rows in several slices pays a
+    * range-sampling job and a shuffle-map job first.
+    */
+  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
   private def bounded(limit: Long): Int = math.min(limit, Int.MaxValue - 1L).toInt + 1
 
   /** The id types a driver solve may intern: integral or
@@ -100,4 +168,19 @@ object DriverGate {
     */
   val LocalIdTypes: Set[DataType] =
     Set(ByteType, ShortType, IntegerType, LongType, StringType)
+
+  /** Spark's ascending order on non-NULL internal values of a
+    * [[LocalIdTypes]] type `t`: numeric for integral ids, UTF-8 byte
+    * order for strings.
+    */
+  def idOrdering(t: DataType): Ordering[Any] =
+    if (t == StringType) (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String])
+    else (a, b) => java.lang.Long.compare(
+      a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
+
+  /** An internal id value as an external one (strings as `String`). */
+  def external(v: Any): Any = v match {
+    case s: UTF8String => s.toString
+    case x => x
+  }
 }

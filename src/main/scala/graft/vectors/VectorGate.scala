@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, Literal}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.HyperplaneBuckets
 import graft.util.DriverGate
@@ -55,7 +54,7 @@ private[graft] object VectorGate {
     * are NULL (a NULL vector or a NULL element) — and `ord(i)`, row
     * `i`'s position in Spark's ascending id order.
     */
-  final class Vecs private (val rows: Array[InternalRow], val id: Array[Any]) {
+  final class Vecs private (val rows: Array[InternalRow], val id: Array[Any], idType: DataType) {
     val size: Int = rows.length
     val v: Array[Array[Double]] = rows.map { r =>
       if (r.isNullAt(1)) null
@@ -66,23 +65,14 @@ private[graft] object VectorGate {
     }
     val norm: Array[Double] = rows.map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2))
     val ord: Array[Int] = {
-      val cmp: (Any, Any) => Int = id.headOption match {
-        case Some(_: UTF8String) =>
-          (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String])
-        case _ =>
-          (a, b) => java.lang.Long.compare(
-            a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
-      }
+      val cmp = DriverGate.idOrdering(idType)
       val o = new Array[Int](size)
-      Array.range(0, size).sortWith((i, j) => cmp(id(i), id(j)) < 0)
+      Array.range(0, size).sortWith((i, j) => cmp.compare(id(i), id(j)) < 0)
         .zipWithIndex.foreach { case (i, p) => o(i) = p }
       o
     }
     /** Row `i`'s id as an external value. */
-    def ext(i: Int): Any = id(i) match {
-      case s: UTF8String => s.toString
-      case x => x
-    }
+    def ext(i: Int): Any = DriverGate.external(id(i))
   }
 
   object Vecs {
@@ -91,7 +81,7 @@ private[graft] object VectorGate {
       if (rows.exists(_.isNullAt(0))) None
       else {
         val id = rows.map(_.get(0, idType))
-        if (id.toSet.size < id.length) None else Some(new Vecs(rows, id))
+        if (id.toSet.size < id.length) None else Some(new Vecs(rows, id, idType))
       }
   }
 

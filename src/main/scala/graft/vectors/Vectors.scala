@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import scala.jdk.CollectionConverters._
-
 import graft.util.{DriverGate, Jobs}
 
 /** Embedding similarity search (BASELINE.json north star; operates on
@@ -782,7 +780,7 @@ object Vectors {
       case Some(rows) =>
         DriverGate.free(c)
         // the distributed plan's schema, nullability included
-        spark.createDataFrame(rows.asJava,
+        DriverGate.frame(spark, rows,
           out(topk(c.select($"id".as("src"), $"id".as("dst")))).schema)
       case None =>
         // ONE projection computes every LSH table's bucket key (the r13
@@ -1013,7 +1011,7 @@ object Vectors {
       case Some(rows) =>
         DriverGate.free(c)
         // the distributed plan's schema, nullability included
-        spark.createDataFrame(rows.asJava, beamTopK(rankBeam(c, qf,
+        DriverGate.frame(spark, rows, beamTopK(rankBeam(c, qf,
           qf.select($"query_id").crossJoin(c.select($"id".as("cand"))), beam), k).schema)
       case None =>
         // scored against every beam round — persisted

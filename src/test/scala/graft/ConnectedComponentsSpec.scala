@@ -141,16 +141,10 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("the gate counts distinct directed edges: a self-loop is one, any other edge two") {
-    // the driver result is a frame over collected rows, so its lineage
-    // starts at a parallelized collection; the distributed result's is
-    // a checkpoint
-    def local(e: org.apache.spark.sql.DataFrame, lim: Long): Boolean = {
-      def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
-        r +: r.dependencies.flatMap(d => lineage(d.rdd))
-      ConnectedComponents.labels(e, "a", "b", localEdgeLimit = lim).queryExecution.analyzed
-        .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
-        .flatMap(lineage).exists(_.getClass.getSimpleName == "ParallelCollectionRDD")
-    }
+    // the driver result is a frame over collected rows; the
+    // distributed result's plan reads checkpoints and joins
+    def local(e: org.apache.spark.sql.DataFrame, lim: Long): Boolean =
+      GatePaths.isLocal(ConnectedComponents.labels(e, "a", "b", localEdgeLimit = lim))
     // 2 edges + 1 self-loop: 3 canonical rows, 5 directed edges
     val e = edges(1L -> 2L, 2L -> 1L, 3L -> 4L, 5L -> 5L)
     assert(local(e, 5))

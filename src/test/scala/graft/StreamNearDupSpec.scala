@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.graph.ConnectedComponents
 import graft.streaming.StreamNearDup
 import graft.textops.NearDup
+import graft.util.DriverGate
 
 /** Streaming MinHash near-dup admission: single-batch equality with
   * the batch composition (q17 ∘ q35), cross-batch first-arrival-wins,
@@ -21,6 +22,20 @@ class StreamNearDupSpec extends SparkSpec {
   private val R = 4
   private val Tau = 0.5
 
+  /** Fates as `id -> (status, partner)`. */
+  private def fates(rows: Seq[Row]): Map[Long, (String, Option[Long])] =
+    rows.map(r => r.getLong(0) -> ((r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]))))
+      .toMap
+
+  /** One batch through the admission step behind a gate of `limit` rows. */
+  private def batchAt(b: DataFrame, ledger: StreamNearDup.Ledger, threshold: Double = Tau)(
+      limit: Long): (DataFrame, StreamNearDup.Ledger) =
+    StreamNearDup.nearDupBatchGated(b, ledger, "doc_id", "text", N, B, R, threshold, limit)
+
+  /** The batches through a streaming session (the driver path at these
+    * sizes) and, batch by batch, through the distributed steps (gate at
+    * 0): asserts equal fates and schemas per batch and returns them.
+    */
   private def runBatches(batches: Seq[Seq[(Long, String)]],
       threshold: Double = Tau)
       : (Seq[Map[Long, (String, Option[Long])]], StreamNearDup.NearDupSession) = {
@@ -28,14 +43,19 @@ class StreamNearDupSpec extends SparkSpec {
     val stream = MemoryStream[(Long, String)]
     val session = new StreamNearDup.NearDupSession(
       spark, "doc_id", "text", N, B, R, threshold)
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Map[Long, (String, Option[Long])]]
+    val outs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val q = session.start(stream.toDS().toDF("doc_id", "text")) { (out, _) =>
-      val rows = out.as[(Long, String, Option[Long])].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      if (rows.nonEmpty) emitted += rows
+      if (!out.isEmpty) outs += out
     }
     batches.foreach { b => stream.addData(b: _*); q.processAllAvailable() }
     q.stop()
+    assert(outs.size == batches.size)
+    var forced = StreamNearDup.emptyLedger(spark)
+    val emitted = outs.zip(batches).map { case (out, b) =>
+      val (f, next) = batchAt(b.toDF("doc_id", "text"), forced, threshold)(0L)
+      forced = next
+      fates(GatePaths.agree(out, f))
+    }
     (emitted.toSeq, session)
   }
 
@@ -115,5 +135,57 @@ class StreamNearDupSpec extends SparkSpec {
       .count() == 0L, "admitted set must contain no verified near-dup pair")
     // and every doc got exactly one verdict across the batches
     assert(byThree.map(_.size).sum == docs.size)
+  }
+
+  private def text(cluster: Int, changed: Int = 0) =
+    (1 to 60).map(i => if (i == changed) s"c${cluster}x$i" else s"c${cluster}w$i").mkString(" ")
+
+  test("NULL and empty texts are kept and add no ledger rows on both paths") {
+    val b = Seq((1L, Some(text(0))), (2L, None), (3L, Some("")), (4L, Some(text(0, 30))))
+      .toDF("doc_id", "text")
+    val empty = StreamNearDup.emptyLedger(spark)
+    val (g, ledger) = batchAt(b, empty)(DriverGate.DefaultRowLimit)
+    val got = fates(GatePaths.agree(g, batchAt(b, empty)(0L)._1))
+    assert(got == Map(1L -> ("kept", None), 2L -> ("kept", None), 3L -> ("kept", None),
+      4L -> ("dup_batch", Some(1L))))
+    assert(ledger.bands.select("id").distinct().as[Long].collect().toSeq == Seq(1L))
+    assert(ledger.shingles.count() == 58L)
+  }
+
+  test("a NULL batch id sends the batch to the distributed steps") {
+    val b = Seq((Some(1L), text(0)), (None, text(1)), (Some(2L), text(0, 10)))
+      .toDF("doc_id", "text")
+    val empty = StreamNearDup.emptyLedger(spark)
+    val rows = GatePaths.agree(batchAt(b, empty)(DriverGate.DefaultRowLimit)._1,
+      batchAt(b, empty)(0L)._1, local = false)
+    assert(rows.filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "kept"), (2L, "dup_batch")))
+  }
+
+  test("a ledger that outgrows the gate hands off mid-stream; the end state is " +
+      "dedupClusters ∘ minhashLshPairs") {
+    // clusters a..e, three members each differing in one word (pairwise
+    // Jaccard ≥ 0.81); ids ascend in arrival order, so the first
+    // arrival is each cluster's minimum. 58 shingle rows per doc and 16
+    // band rows per admitted doc: at a gate of 400 rows the first two
+    // batches fit (0 + 174, 148 + 232) and the third does not (222 + 290)
+    val docs = Seq((0, 0), (0, 15), (1, 0), (1, 15), (2, 0), (2, 15), (0, 45),
+      (3, 0), (3, 15), (2, 45), (1, 45), (3, 45), (4, 0), (4, 15))
+      .zipWithIndex.map { case ((c, w), i) => (i + 1L, text(c, w)) }
+    val batches = Seq(docs.take(3), docs.slice(3, 7), docs.slice(7, 12), docs.drop(12))
+    var gated = StreamNearDup.emptyLedger(spark)
+    var forced = gated
+    val got = batches.zip(Seq(true, true, false, false)).flatMap { case (b, local) =>
+      val df = b.toDF("doc_id", "text")
+      val (g, gl) = batchAt(df, gated)(400L)
+      val (f, fl) = batchAt(df, forced)(0L)
+      gated = gl
+      forced = fl
+      fates(GatePaths.agree(g, f, local))
+    }.toMap
+    assert(got.size == docs.size)
+    val dropped = got.collect { case (id, (s, _)) if s.startsWith("dup") => id -> s }
+    assert(dropped.values.toSet == Set("dup_batch", "dup_ledger"))
+    assert(dropped.keySet == batchClusters(docs.toDF("doc_id", "text")).keySet)
   }
 }

@@ -1,8 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.textops.{NearDup, TextAnalysis}
+import graft.textops.{NearDup, NearDupGate, TextAnalysis}
+import graft.util.DriverGate
 
 class ShinglesSpec extends SparkSpec {
   test("wordShingles: n-grams, short-text fallback, empty") {
@@ -27,6 +34,22 @@ class ShinglesSpec extends SparkSpec {
 class NearDupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `minhashLshPairs` (q17's parameters) behind a gate of `limit`
+    * shingle rows and `pairLimit` pair work.
+    */
+  private def lshAt(df: DataFrame, pairLimit: Long = NearDupGate.PairWorkLimit)(
+      limit: Long): DataFrame =
+    NearDup.minhashLshPairsGated(df, "doc_id", "text", 3, 16, 4, 0.5, limit, pairLimit)
+
+  /** The pairs, asserted equal on the driver path (the default gate)
+    * and the distributed one (gate at 0).
+    */
+  private def lshBoth(df: DataFrame, local: Boolean = true): Seq[Row] =
+    GatePaths.agree(lshAt(df)(DriverGate.DefaultRowLimit), lshAt(df)(0L), local)
+
+  private def pairSet(rows: Seq[Row]): Set[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+
   // Synthetic corpus: exact dup pair, near-dup pair, distinct docs.
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog every single day"),
@@ -47,8 +70,7 @@ class NearDupSpec extends SparkSpec {
   test("minhashLsh output ⊆ exact output and catches all exact pairs here") {
     val exact = NearDup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = NearDup.minhashLshPairs(docs, "doc_id", "text", 3, 16, 4, 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val lsh = pairSet(lshBoth(docs))
     assert(lsh.subsetOf(exact), s"LSH emitted non-pairs: ${lsh.diff(exact)}")
     assert(lsh == exact, s"LSH missed: ${exact.diff(lsh)}") // high-prob params
   }
@@ -166,8 +188,7 @@ class NearDupSpec extends SparkSpec {
     val real = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val exact = NearDup.jaccardPairs(real, "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val lsh = NearDup.minhashLshPairs(real, "doc_id", "text", 3, 16, 4, 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val lsh = pairSet(lshBoth(real))
     assert(lsh.subsetOf(exact))
     if (exact.nonEmpty) {
       val recall = lsh.size.toDouble / exact.size
@@ -185,14 +206,88 @@ class NearDupSpec extends SparkSpec {
     assert(cross.forall { case (x, y) => x % 3 != 0 && y % 3 == 0 })
     // signatures are per-doc, so the union self-join's cross-corpus
     // pairs (reoriented to a→b) must agree exactly
-    val whole = NearDup.minhashLshPairs(real, "doc_id", "text", 3, 16, 4, 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val whole = pairSet(lshBoth(real))
     val expected = whole.collect {
       case (x, y) if x % 3 != 0 && y % 3 == 0 => (x, y)
       case (x, y) if x % 3 == 0 && y % 3 != 0 => (y, x)
     }
     assert(cross === expected)
     assert(cross.nonEmpty, "fixture must contain cross-corpus near-dups")
+  }
+
+  private val base = (1 to 40).map(i => s"w$i").mkString(" ")
+  private def variant(at: Int) = base.replace(s"w$at ", s"x$at ")
+
+  test("minhashLsh: string ids pair in UTF-8 byte order on both paths") {
+    // U+FFFD sorts below U+10000 in UTF-8 (and above it in UTF-16)
+    val s = Seq("𐀀" -> base, "�" -> base, "b" -> variant(20), "a" -> "unrelated words here")
+      .toDF("doc_id", "text")
+    val rows = lshBoth(s).map(r => (r.getString(0), r.getString(1))).toSet
+    assert(rows === Set(("�", "𐀀"), ("b", "�"), ("b", "𐀀")))
+  }
+
+  test("minhashLsh: duplicate ids merge their shingle sets on both paths") {
+    // id 1's two halves together are doc 2's text
+    val words = base.split(" ")
+    val d = Seq(1L -> words.take(20).mkString(" "), 1L -> words.drop(18).mkString(" "),
+      2L -> base).toDF("doc_id", "text")
+    val rows = lshBoth(d)
+    assert(rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))) == Seq((1L, 2L, 1.0)))
+  }
+
+  test("minhashLsh: NULL and empty texts carry no pairs; a NULL id goes distributed") {
+    val d = Seq((Some(1L), Some(base)), (Some(2L), Some(variant(10))), (Some(3L), None),
+      (Some(4L), Some("")), (Some(5L), Some(base))).toDF("doc_id", "text")
+    assert(pairSet(lshBoth(d)) === Set((1L, 2L), (1L, 5L), (2L, 5L)))
+    val withNull = d.union(Seq((Option.empty[Long], Some(base))).toDF("doc_id", "text"))
+    assert(pairSet(lshBoth(withNull, local = false)) === Set((1L, 2L), (1L, 5L), (2L, 5L)))
+  }
+
+  test("minhashLsh: the row gate and the pair-work bound pick the path") {
+    // 10 identical docs: 38 shingle rows each, one bucket of 10 per band
+    val same = (1L to 10L).map(_ -> base).toDF("doc_id", "text")
+    val work = 16L * 10 * 10
+    def local(limit: Long, pairLimit: Long) = GatePaths.isLocal(lshAt(same, pairLimit)(limit))
+    assert(local(380L, work) && !local(379L, work) && !local(380L, work - 1))
+    val forced = lshAt(same)(0L)
+    val bound = GatePaths.agree(lshAt(same, work - 1)(DriverGate.DefaultRowLimit), forced,
+      local = false)
+    assert(bound.size == 45)
+    assert(GatePaths.agree(lshAt(same, work)(DriverGate.DefaultRowLimit), forced) == bound)
+  }
+
+  test("minhashLsh: the gate reads its bound off the cut — one collect below it, no job above") {
+    val same = (1L to 10L).map(_ -> base).toDF("doc_id", "text")
+    def gateJobs(limit: Long): Int = {
+      val seen = new ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .foreach(seen.add)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        lshAt(same)(limit)
+        // events arrive in order: once this job is seen, so are the gate's
+        spark.sparkContext.setJobDescription("sentinel")
+        spark.sparkContext.parallelize(Seq(1)).count()
+        val deadline = System.currentTimeMillis() + 10000
+        while (!seen.contains("sentinel") && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert(seen.contains("sentinel"))
+        seen.asScala.count(_ == "near dup: gate")
+      } finally {
+        spark.sparkContext.setJobDescription(null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    assert(gateJobs(380L) == 1)
+    assert(gateJobs(379L) == 0)
+    assert(gateJobs(0L) == 0)
+    // the bound is the shingle rows before the (id, h) dedup: 13 here,
+    // 6 after it, so a gate of 12 rows already goes distributed
+    val looped = Seq(1L -> "a b c a b c a b c", 2L -> "a b c a b c a b").toDF("doc_id", "text")
+    assert(GatePaths.isLocal(lshAt(looped)(13L)) && !GatePaths.isLocal(lshAt(looped)(12L)))
   }
 }
 
