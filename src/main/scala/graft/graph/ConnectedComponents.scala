@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -39,10 +40,13 @@ object ConnectedComponents {
     * [[NullEndpointMsg]].
     *
     * Graphs with at most `localEdgeLimit` (distinct, directed) edges
-    * are solved by driver-side union-find instead of iterating, behind
-    * the gate [[PageRank]] and [[Hits]] share ([[SmallGraph]]: one
-    * bounded collect of the canonical edge checkpoint is both the size
-    * probe and the data); pass 0 to force the distributed path.
+    * and ids of an integral or string type are solved by driver-side
+    * union-find instead of iterating, behind the gate [[PageRank]] and
+    * [[Hits]] share ([[graft.util.DriverGate.gate]] over the canonical
+    * edge checkpoint: a bound on its rows — the input's own rows when
+    * they are local, or the rows its distinct's shuffle wrote — sizes
+    * it, so a small graph costs one job that fills and collects it and
+    * a large one none); pass 0 to force the distributed path.
     *
     * Mixed src/dst column types are fine: the canonicalizing
     * least/greatest projection widens both endpoints to their common
@@ -51,7 +55,7 @@ object ConnectedComponents {
     */
   def labels(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 30, localEdgeLimit: Long = SmallGraph.DefaultLimit,
+      maxIter: Int = 30, localEdgeLimit: Long = DriverGate.DefaultRowLimit,
       algorithm: String = "min-label"): DataFrame = {
     require(algorithm == "min-label" || algorithm == "star",
       s"unknown algorithm '$algorithm' (expected min-label | star)")
@@ -85,72 +89,57 @@ object ConnectedComponents {
     //
     // The size gate counts DISTINCT DIRECTED edges (the old sym frame):
     // each non-loop canonical row stands for 2, each self-loop for 1.
-    // Every canonical row is at least one directed edge, so the shared
-    // gate's row count decides every graph it rejects, and the directed
-    // count of the rows it returns decides the rest — the same decision
-    // as a full directed count, with no probe job beyond the
-    // checkpoint's own (localEdgeLimit = 0 runs none at all).
-    val (cu, canonRows) = DriverGate.checkpointUpTo(
-      e.select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst")).distinct(),
-      localEdgeLimit)
-    val small = canonRows.filter(rows =>
-      rows.iterator.map(r => if (r.get(0) == r.get(1)) 1L else 2L).sum <= localEdgeLimit)
-    if (small.isDefined) labelsLocal(cu, small.get)
-    else if (algorithm == "star") labelsStar(cu, maxIter)
-    else labelsDistributed(
-      // min-label propagation needs BOTH directions; rebuild them from
-      // the checkpointed canonical frame (a projection, not a shuffle —
-      // non-loop rows swap, loops appear once so no distinct needed)
-      cu.union(cu.filter(col("src") =!= col("dst"))
-        .select(col("dst").as("src"), col("src").as("dst"))),
-      maxIter)
+    // Every canonical row is at least one directed edge, so the gate
+    // sizes the canonical rows against the same limit, and the directed
+    // count of the rows it collects decides the rest. Its size is a
+    // bound (e.g. the rows the distinct's shuffle wrote, a per-partition
+    // distinct), so a graph near the limit can go distributed unprobed.
+    val canon = e.select(least(col("src"), col("dst")).as("src"),
+      greatest(col("src"), col("dst")).as("dst")).distinct()
+    val t = canon.schema.head.dataType
+    DriverGate.gate(canon, if (DriverGate.LocalIdTypes.contains(t)) localEdgeLimit else 0L,
+        "connected components: gate") { rows =>
+      if (rows.iterator.map(r => if (r.get(0, t) == r.get(1, t)) 1L else 2L).sum > localEdgeLimit) None
+      else Some(labelsLocal(canon, rows))
+    }.fold(cu =>
+      if (algorithm == "star") labelsStar(cu, maxIter)
+      else labelsDistributed(
+        // min-label propagation needs BOTH directions; rebuild them from
+        // the checkpointed canonical frame (a projection, not a shuffle —
+        // non-loop rows swap, loops appear once so no distinct needed)
+        cu.union(cu.filter(col("src") =!= col("dst"))
+          .select(col("dst").as("src"), col("src").as("dst"))),
+        maxIter), identity)
   }
 
-  /** Driver-side union-find with path halving; min element becomes the
+  /** Driver-side union-find with path halving over the collected
+    * canonical edges of `canon`; the minimum id in Spark's order
+    * ([[graft.util.DriverGate.idOrdering]]: numeric, or UTF-8 byte
+    * order, which is code-point order, for strings) becomes the
     * component label. Exact and deterministic — the distributed path
     * must agree with it (spec'd both ways).
     */
-  private def labelsLocal(cu: DataFrame, edges: Array[Row]): DataFrame = {
+  private def labelsLocal(canon: DataFrame, edges: Array[InternalRow]): DataFrame = {
+    val nodeType = canon.schema.head.dataType
+    val cmp = DriverGate.idOrdering(nodeType)
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    // Strings must sort by CODE POINT (= UTF-8 byte order), matching
-    // Spark's UTF8String / DuckDB collation on the distributed path;
-    // Java String.compareTo is UTF-16 code-unit order, which ranks
-    // supplementary characters (surrogate pairs) below U+E000..U+FFFF.
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: String, y: String) => compareCodePoints(x, y)
-      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
-    }
     def find(x: Any): Any = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
     edges.foreach { row =>
-      val (a, b) = (row.get(0), row.get(1))
+      val (a, b) = (row.get(0, nodeType), row.get(1, nodeType))
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
       // union by label order so the root IS the minimum element
-      if (cmp(ra, rb) < 0) parent(rb) = ra
-      else if (cmp(rb, ra) < 0) parent(ra) = rb
+      if (cmp.lt(ra, rb)) parent(rb) = ra
+      else if (cmp.lt(rb, ra)) parent(ra) = rb
     }
-    val nodeType = cu.schema.head.dataType
-    DriverGate.frame(cu.sparkSession, parent.keys.toSeq.map(n => Row(n, find(n))),
+    DriverGate.frame(canon.sparkSession,
+      parent.keys.toSeq.map(n => Row(DriverGate.external(n), DriverGate.external(find(n)))),
       StructType(Seq(StructField("node", nodeType), StructField("label", nodeType))))
-  }
-
-  private def compareCodePoints(x: String, y: String): Int = {
-    var i = 0
-    var j = 0
-    while (i < x.length && j < y.length) {
-      val cx = x.codePointAt(i)
-      val cy = y.codePointAt(j)
-      if (cx != cy) return Integer.compare(cx, cy)
-      i += Character.charCount(cx)
-      j += Character.charCount(cy)
-    }
-    Integer.compare(x.length - i, y.length - j)
   }
 
   private def labelsDistributed(sym: DataFrame, maxIter: Int): DataFrame = {
@@ -294,7 +283,7 @@ object ConnectedComponents {
     */
   def dedupClusters(pairs: DataFrame, idACol: String, idBCol: String,
       algorithm: String = "min-label",
-      localEdgeLimit: Long = SmallGraph.DefaultLimit): DataFrame =
+      localEdgeLimit: Long = DriverGate.DefaultRowLimit): DataFrame =
     labels(pairs, idACol, idBCol,
         algorithm = algorithm, localEdgeLimit = localEdgeLimit)
       .select(

@@ -66,7 +66,7 @@ object Hits {
       iters: Int,
       scale: Long = 100000L): DataFrame =
     scoresGated(nodes, nodeCol, edges, srcCol, dstCol, wCol, iters, scale,
-      SmallGraph.DefaultLimit)
+      DriverGate.DefaultRowLimit)
 
   /** [[scores]] behind a gate of `localEdgeLimit` rows; 0 forces the
     * distributed path (the specs run every case on both paths).
@@ -78,12 +78,10 @@ object Hits {
     require(iters >= 1, s"iters must be at least 1: $iters")
     require(scale > 0, s"scale must be positive: $scale")
     val n = nodes.select(col(nodeCol).as("node"))
-    SmallGraph.graphUpTo(edges.select(
+    SmallGraph.gate(edges.select(
         col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w")),
-        n, localEdgeLimit) match {
-      case (_, Some((edgeRows, nodeRows))) => scoresLocal(n, nodeRows, edgeRows, iters, scale)
-      case (ew, None) => scoresDistributed(n, ew, iters, scale)
-    }
+        n, localEdgeLimit, "hits: gate")(scoresLocal(n, _, iters, scale))
+      .fold(scoresDistributed(n, _, iters, scale), identity)
   }
 
   private val CoverageMsg = "nodes must cover every edge endpoint (src and dst)"
@@ -149,19 +147,17 @@ object Hits {
       .select(col("node"), col("hub"), col("auth"))
   }
 
-  /** The driver twin of [[scoresDistributed]] over the collected node
-    * and edge rows, exact to the value: the same three preconditions
+  /** The driver twin of [[scoresDistributed]] over the collected
+    * graph, exact to the value: the same three preconditions
     * and messages, `Long` arithmetic that raises on overflow as ANSI
     * arithmetic does in Spark, and the final inner node join's output —
     * a node listed k times yields k² rows, a NULL node none.
     */
-  private def scoresLocal(n: DataFrame, nodeRows: Array[Row], edgeRows: Array[Row],
+  private def scoresLocal(n: DataFrame, g: SmallGraph.Local,
       iters: Int, scale: Long): DataFrame = {
-    val ws = edgeRows.filter(!_.isNullAt(2)).map(_.getLong(2))
-    requireWeights(edgeRows.length, ws.length, if (ws.isEmpty) 0L else ws.min,
-      ws.foldLeft(0L)(addExact), scale)
-    val g = new SmallGraph.Local(nodeRows, edgeRows)
     import g.{m, mult, src, dst, w}
+    // a NULL weight reads as 0 (`SmallGraph.Local`), so the least weight catches it
+    requireWeights(w.length, w.length, if (w.isEmpty) 0L else w.min, w.foldLeft(0L)(addExact), scale)
     def covered(i: Int) = i < m && mult(i) > 0
     require(src.forall(covered) && dst.forall(covered), CoverageMsg)
     // raw(to) = Σ w·s(from) over each edge's mult(from) score rows,

@@ -67,8 +67,8 @@ object PageRank {
     * weights must be positive integers.
     *
     * A graph whose edge frame and node frame each fit under 2^17 rows
-    * is ranked on the driver ([[SmallGraph]], the gate
-    * [[ConnectedComponents]] uses) in the same exact `Long`
+    * is ranked on the driver ([[SmallGraph]], behind the gate
+    * [[ConnectedComponents]] shares) in the same exact `Long`
     * arithmetic, with the distributed plan's semantics row for row: a
     * node listed k times holds k rank rows, so it sends k contributions
     * and yields k output rows; a NULL node gets a rank but never joins
@@ -86,7 +86,7 @@ object PageRank {
       redistributeDangling: Boolean = false,
       checkpointInterval: Int = 8): DataFrame =
     ranksGated(nodes, nodeCol, edges, srcCol, dstCol, wCol, iters, scale, dampNum, dampDen,
-      redistributeDangling, checkpointInterval, SmallGraph.DefaultLimit)
+      redistributeDangling, checkpointInterval, DriverGate.DefaultRowLimit)
 
   /** [[ranks]] behind a gate of `localEdgeLimit` rows; 0 forces the
     * distributed path (the specs run every case on both paths).
@@ -100,22 +100,18 @@ object PageRank {
     require(iters >= 0, s"iters must be non-negative: $iters")
     require(dampNum > 0 && dampNum < dampDen, s"damping $dampNum/$dampDen not in (0,1)")
     require(checkpointInterval > 0, s"checkpointInterval must be positive: $checkpointInterval")
-    // the edge leaf, materialized once by the gate: the caller's edge
-    // derivation (q57: a 4-table join) runs once, and everything after
-    // reads blocks — the weight check, the total-weight aggregate and
-    // the weighted-edge join
+    // the edge leaf, cut once by the gate (filled by its first reader):
+    // the caller's edge derivation (q57: a 4-table join) runs once, and
+    // everything after reads blocks — the weight check, the
+    // total-weight aggregate and the weighted-edge join
     val n = nodes.select(col(nodeCol).as("node"))
     val base = (scale * (dampDen - dampNum)) / dampDen
-    SmallGraph.graphUpTo(edges.select(
+    SmallGraph.gate(edges.select(
         col(srcCol).as("src"), col(dstCol).as("dst"), col(wCol).cast("long").as("w")),
-        n, localEdgeLimit) match {
-      case (_, Some((edgeRows, nodeRows))) =>
-        ranksLocal(n, nodeRows, edgeRows, iters, scale, base, dampNum, dampDen,
-          redistributeDangling)
-      case (e, None) =>
-        ranksDistributed(n, e, iters, scale, base, dampNum, dampDen,
-          redistributeDangling, checkpointInterval)
-    }
+        n, localEdgeLimit, "pagerank: gate")(
+        ranksLocal(n, _, iters, scale, base, dampNum, dampDen, redistributeDangling))
+      .fold(ranksDistributed(n, _, iters, scale, base, dampNum, dampDen,
+        redistributeDangling, checkpointInterval), identity)
   }
 
   private val WeightMsg = "edge weights must be positive integers"
@@ -194,19 +190,18 @@ object PageRank {
     r
   }
 
-  /** The driver twin of [[ranksDistributed]] over the collected node
-    * and edge rows, exact to the value.
+  /** The driver twin of [[ranksDistributed]] over the collected
+    * graph, exact to the value.
     */
-  private def ranksLocal(n: DataFrame, nodeRows: Array[Row], edgeRows: Array[Row],
+  private def ranksLocal(n: DataFrame, g: SmallGraph.Local,
       iters: Int, scale: Long, base: Long, dampNum: Long, dampDen: Long,
       redistributeDangling: Boolean): DataFrame = {
-    require(edgeRows.forall(r => !r.isNullAt(2) && r.getLong(2) > 0), WeightMsg)
-    val g = new SmallGraph.Local(nodeRows, edgeRows)
     import g.{m, mult, src, dst, w}
+    require(w.forall(_ > 0), WeightMsg)
     val tw = new Array[Long](m + 1)
     val isSrc = new Array[Boolean](m + 1)
     for (j <- w.indices) { tw(src(j)) = addExact(tw(src(j)), w(j)); isSrc(src(j)) = true }
-    val nNodes = math.max(1L, nodeRows.length.toLong)
+    val nNodes = math.max(1L, g.node.length.toLong)
     val rank = Array.fill(m + 1)(scale)
     for (_ <- 1 to iters) {
       // a non-NULL src that is a node joins its mult(u) rank rows

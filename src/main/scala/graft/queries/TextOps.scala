@@ -577,7 +577,7 @@ object TextOps {
       graft.textops.NearDup.minhashLshPairsGated(
         docsParallel(s, dir), "doc_id", "text",
         n = 3, bands = 16, rowsPerBand = 4, threshold = 0.5,
-        limit = 0L, pairLimit = graft.textops.NearDupGate.PairWorkLimit)
+        limit = 0L, pairLimit = graft.util.DriverGate.PairWorkLimit)
         .orderBy($"id_a", $"id_b")
     },
 

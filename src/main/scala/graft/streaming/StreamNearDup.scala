@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.graph.ConnectedComponents
 import graft.textops.{NearDup, NearDupGate}
-import graft.util.{DriverGate, Jobs}
+import graft.util.DriverGate
 
 /** Streaming twin of the MinHash+LSH near-dup pipeline (q17's
   * [[NearDup.minhashLshPairs]] composed with q35's
@@ -125,8 +125,7 @@ object StreamNearDup {
       n: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       limit: Long): (DataFrame, Ledger) = {
     val spark = batch.sparkSession
-    val (shB, bound) = DriverGate.checkpointRowBound(
-      NearDup.hashedShingleIds(batch, idCol, textCol, n))
+    val shf = NearDup.hashedShingleIds(batch, idCol, textCol, n)
     val ids = batch.select(col(idCol).cast("long"))
     val held = for {
       b <- DriverGate.localRows(ledger.bands)
@@ -135,32 +134,29 @@ object StreamNearDup {
       if ledger.shingles.schema.map(_.dataType) == Seq(LongType, LongType)
       if !(b ++ s).exists(_.anyNull)
     } yield (b, s)
-    val budget = held.fold(0L) { case (b, s) => limit - b.length - s.length }
-    val idType = shB.schema("id").dataType
-    val local =
-      if (!DriverGate.LocalIdTypes.contains(idType) || idType == StringType) None
-      else Jobs.labeled(spark.sparkContext, "near dup admission: gate") {
-        for {
-          rows <- DriverGate.checkpointRowsUpTo(shB, bound, budget)
-          idRows <- DriverGate.internalRowsUpTo(ids, budget - rows.length)
-          if !idRows.exists(_.isNullAt(0))
-          sets <- NearDupGate.Sets.of(rows, r => r.get(0, idType).asInstanceOf[Number].longValue,
-            DriverGate.idOrdering(LongType))
-          (b, s) <- held
-          a <- NearDupGate.admit(idRows.map(_.getLong(0)).distinct.toSeq, sets, b, s,
-            bands, rowsPerBand, threshold, NearDupGate.PairWorkLimit)
-        } yield a
-      }
-    local match {
-      case Some(a) =>
-        DriverGate.free(shB)
+    val idType = shf.schema("id").dataType
+    val budget =
+      if (!DriverGate.LocalIdTypes.contains(idType) || idType == StringType) 0L
+      else held.fold(0L) { case (b, s) => limit - b.length - s.length }
+    DriverGate.gate(shf, budget, "near dup admission: gate") { rows =>
+      for {
+        idRows <- DriverGate.internalRowsUpTo(ids, budget - rows.length)
+        if !idRows.exists(_.isNullAt(0))
+        sets <- NearDupGate.Sets.of(rows, r => r.get(0, idType).asInstanceOf[Number].longValue,
+          DriverGate.idOrdering(LongType))
+        (b, s) <- held
+        a <- NearDupGate.admit(idRows.map(_.getLong(0)).distinct.toSeq, sets, b, s,
+          bands, rowsPerBand, threshold, DriverGate.PairWorkLimit)
+      } yield a
+    } match {
+      case Right(a) =>
         val outSchema = StructType(Seq(ids.schema.head.copy(name = idCol),
           StructField("status", StringType, nullable = false),
           StructField("partner", LongType, nullable = true)))
         (spark.createDataFrame(a.out.asJava, outSchema),
           Ledger(spark.createDataFrame(a.bands.asJava, ledger.bands.schema),
             spark.createDataFrame(a.shingles.asJava, ledger.shingles.schema)))
-      case None =>
+      case Left(shB) =>
         distributed(shB, ids, ledger, idCol, bands, rowsPerBand, threshold)
     }
   }

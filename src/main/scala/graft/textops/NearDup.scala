@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.util.{DriverGate, Jobs}
+import graft.util.DriverGate
 
 /** Near-duplicate detection suite for training-data curation at 100 TB
   * (BASELINE.json north star; beyond the reference's own surface — the
@@ -232,14 +232,14 @@ object NearDup {
     * the driver instead ([[NearDupGate]], behind the bounded-collect gate
     * the graph and vector operators share). Every path reads the
     * `(id, h)` checkpoint, whose cut runs the repartition shuffle; the
-    * rows that shuffle wrote bound the deduplicated rows, so the gate
-    * probes no rows. When the bound is at most
+    * rows that shuffle wrote bound the deduplicated rows
+    * ([[graft.util.DriverGate.gate]]), so the gate probes no rows. When the bound is at most
     * [[graft.util.DriverGate.DefaultRowLimit]] and the ids are of an
     * integral or string type, one job fills and collects the
     * checkpoint, and when the ids are non-NULL the signatures, buckets
     * and verify run on the driver — unless the
     * pair work Σ_bands Σ_buckets |b|² exceeds
-    * [[NearDupGate.PairWorkLimit]]. The result is then a one-partition
+    * [[graft.util.DriverGate.PairWorkLimit]]. The result is then a one-partition
     * frame over local rows with the plan's schema. The distributed plan
     * launches a job per shuffle stage (signature aggregate, bucket join,
     * candidate distinct, verify joins), which at gate scale is all
@@ -253,7 +253,7 @@ object NearDup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, bands: Int, rowsPerBand: Int, threshold: Double): DataFrame =
     minhashLshPairsGated(df, idCol, textCol, n, bands, rowsPerBand, threshold,
-      DriverGate.DefaultRowLimit, NearDupGate.PairWorkLimit)
+      DriverGate.DefaultRowLimit, DriverGate.PairWorkLimit)
 
   /** [[minhashLshPairs]] behind a driver gate of `limit` shingle rows
     * and a pair-work bound of `pairLimit`; `limit = 0` forces the
@@ -265,21 +265,18 @@ object NearDup {
       limit: Long, pairLimit: Long): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (sh, bound) = DriverGate.checkpointRowBound(hashedShingleIds(df, idCol, textCol, n))
-    val idType = sh.schema("id").dataType
-    val local =
-      if (!DriverGate.LocalIdTypes.contains(idType)) None
-      else Jobs.labeled(spark.sparkContext, "near dup: gate") {
-        DriverGate.checkpointRowsUpTo(sh, bound, limit)
-      }.flatMap(NearDupGate.Sets.of(_, _.get(0, idType), DriverGate.idOrdering(idType)))
+    val shf = hashedShingleIds(df, idCol, textCol, n)
+    val idType = shf.schema("id").dataType
+    DriverGate.gate(shf, if (DriverGate.LocalIdTypes.contains(idType)) limit else 0L,
+        "near dup: gate") { rows =>
+      NearDupGate.Sets.of(rows, _.get(0, idType), DriverGate.idOrdering(idType))
         .flatMap(NearDupGate.pairs(_, bands, rowsPerBand, threshold, pairLimit))
-    local match {
-      case Some(rows) =>
-        DriverGate.free(sh)
+    } match {
+      case Right(rows) =>
         // the distributed plan's schema, nullability included
         DriverGate.frame(spark, rows,
-          verifyJaccard(sh.select($"id".as("id_a"), $"id".as("id_b")), sh).schema)
-      case None =>
+          verifyJaccard(shf.select($"id".as("id_a"), $"id".as("id_b")), shf).schema)
+      case Left(sh) =>
         val banded = bandedKeys(sh, bands, rowsPerBand)
         val candidates = banded.as("x").join(banded.as("y"),
             $"x.band" === $"y.band" && $"x.band_key" === $"y.band_key" && $"x.id" < $"y.id")
@@ -338,8 +335,7 @@ object NearDup {
     * identically on both sides. Null texts carry no shingles, like
     * jaccardPairs. Callers cut it with a local checkpoint — it feeds
     * the signatures and the verify; the driver gates read the rows its
-    * repartition wrote off that cut
-    * ([[graft.util.DriverGate.checkpointRowBound]]).
+    * repartition wrote off that cut ([[graft.util.DriverGate.gate]]).
     * ONE exchange hash-partitioned by id serves the whole query:
     * HashPartitioning(id) satisfies the clustering needs of the
     * (id, h) dedup, the signature groupBy(id), the sizes groupBy(id),

@@ -28,14 +28,6 @@ import graft.util.DriverGate
   */
 private[graft] object NearDupGate {
 
-  /** The bound on the candidate pair work Σ_bands Σ_buckets |b|² (self
-    * pairs included), computed from the bucket sizes before any
-    * verify. A corpus within the row gate can still collide in huge
-    * buckets (thousands of identical documents share every band), and
-    * that quadratic work belongs to the distributed plan.
-    */
-  val PairWorkLimit: Long = 1L << 22
-
   /** Collected `(id, h)` rows as shingle sets: slot `i` holds `id(i)`
     * and its distinct hashes `hs(i)`, sorted; slots follow Spark's
     * ascending id order, so slot order is id order.

@@ -6,8 +6,9 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, LogicalRDD, ProjectExec, SortExec, UnionExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, ResultQueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.graftbridge.BlockBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,23 +25,101 @@ import org.apache.spark.unsafe.types.UTF8String
   * latency, which dwarfs a sub-second exact solve of a small input (the
   * same bounded-driver-work trade as the IVF centroid sample).
   *
-  * The size probe rides the materialization the distributed path needs
-  * anyway: one job fills a lazy local checkpoint's blocks and sums the
-  * rows' weights, and only a small frame pays a second job that
-  * collects its rows from the blocks. A large frame thus costs exactly
-  * an eager checkpoint, and none of its rows reach the driver (a
-  * bounded `limit(limit + 1).collect()` probe ships up to `limit + 1`
-  * of them). A limit `<= 0` checkpoints eagerly and probes nothing.
-  * The near-dup gates probe nothing at all: their cut's own shuffle
-  * bounds the rows ([[checkpointRowBound]]), so a large frame costs
-  * exactly its lazy checkpoint and a small one one collecting job.
+  * Every caller but hnswTopK goes through one entry, [[gate]], which
+  * cuts the input, sizes it, collects it when it fits, runs the
+  * caller's solver and frees the cut when the solver answers; otherwise
+  * the cut, filled or not, is the distributed path's input. hnswTopK
+  * sizes its corpus in the fold that also counts its layers
+  * ([[checkpointAggregate]]).
   */
 object DriverGate {
 
-  /** The row gate of the graph operators. The cap keeps the transient
-    * driver footprint at tens of MB even under a default 1g heap.
+  /** The row gate of the graph and near-dup operators. The cap keeps
+    * the transient driver footprint at tens of MB even under a default
+    * 1g heap.
     */
   val DefaultRowLimit: Long = 1L << 17
+
+  /** The bound on a driver solve's candidate pair work (knnGraph's
+    * seeds, MinHash's buckets: Σ_buckets |b|², self pairs included),
+    * computed from the bucket sizes before any scoring. A corpus
+    * within the row or double budget can still collide in huge
+    * buckets, and that quadratic work belongs to the distributed plan.
+    */
+  val PairWorkLimit: Long = 1L << 22
+
+  /** `solve` over `df`'s rows when their summed `weight` (rows when
+    * `None`; every row weighs at least one) is at most `limit`, and
+    * otherwise `df`'s lazy local checkpoint for the distributed path.
+    *
+    * The cut runs the shuffle stages below `df`'s final stage (under
+    * AQE); then, in jobs labeled `label`:
+    *  - `limit <= 0`, or a row bound over `limit`, runs none;
+    *  - a row bound within `limit` runs one, which fills and collects
+    *    the checkpoint, for a frame weighed in rows;
+    *  - otherwise one job fills the checkpoint and weighs it, and a
+    *    second collects it when it fits.
+    * The row bound ([[rowBound]]) is not a count, so a frame that
+    * shrinks below `limit` in its final stage (a dedup) can go
+    * distributed without a job. When `solve` answers, the checkpoint's
+    * blocks are freed; when it declines, the filled checkpoint goes
+    * distributed.
+    */
+  def gate[A](df: DataFrame, limit: Long, label: String,
+      weight: Option[InternalRow => Long] = None)(
+      solve: Array[InternalRow] => Option[A]): Either[DataFrame, A] = {
+    val ck = df.localCheckpoint(eager = false)
+    val bound = if (limit > 0) rowBound(df) else None
+    val w = weight.getOrElse((_: InternalRow) => 1L)
+    Jobs.labeled(df.sparkSession.sparkContext, label) {
+      val rows =
+        if (limit <= 0 || bound.exists(_ > limit)) None
+        else if ((weight.isDefined || bound.isEmpty) &&
+          ck.queryExecution.toRdd.aggregate(0L)((a, r) => a + w(r), _ + _) > limit) None
+        else Some(ck.queryExecution.executedPlan.executeCollect())
+          .filter(_.iterator.map(w).sum <= limit)
+      rows.flatMap(solve)
+    } match {
+      case Some(a) => free(ck); Right(a)
+      case None => Left(ck)
+    }
+  }
+
+  /** A bound on the rows of `df`, whose AQE plan has run its shuffle
+    * stages: the smaller of Spark's own logical bound (`maxRows`, e.g.
+    * a frame over local rows through operators that cannot add rows)
+    * and the rows those shuffle stages wrote, when the final stage
+    * reads nothing else and holds only operators that emit at most the
+    * rows they read (projections, filters, aggregates, sorts, unions,
+    * shuffle reads and codegen wrappers; a join, generate, expand or
+    * map-partitions can multiply rows). The second needs AQE, which a
+    * streaming query's micro-batches run without. A global aggregate
+    * over no rows emits one: the gate's collect re-checks the rows it
+    * gets.
+    */
+  private def rowBound(df: DataFrame): Option[Long] = {
+    val written = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec =>
+        val finalStage = a.executedPlan match {
+          case r: ResultQueryStageExec => r.plan
+          case p => p
+        }
+        val sound = finalStage.find {
+          case _: ProjectExec | _: FilterExec | _: BaseAggregateExec | _: SortExec |
+               _: UnionExec | _: AQEShuffleReadExec | _: WholeStageCodegenExec |
+               _: InputAdapter => false
+          case s: ShuffleQueryStageExec => !s.isMaterialized
+          case _ => true
+        }.isEmpty
+        val rows = finalStage.collectLeaves().map {
+          case s: ShuffleQueryStageExec => s.getRuntimeStatistics.rowCount
+          case _ => None
+        }
+        if (sound && rows.forall(_.isDefined)) Some(rows.map(_.get.toLong).sum) else None
+      case _ => None
+    }
+    (df.queryExecution.optimizedPlan.maxRows ++ written).minOption
+  }
 
   /** `df`'s lazy local checkpoint, and its rows folded into `zero` by
     * `seqOp` (per partition) and `combOp` (across them), in the one job
@@ -53,85 +132,13 @@ object DriverGate {
     (ck, ck.queryExecution.toRdd.aggregate(zero)(seqOp, combOp))
   }
 
-  /** `df`'s local checkpoint, and whether its rows' summed `weight` is
-    * at most `limit` (one job; none beyond the eager checkpoint when
-    * `limit <= 0`, which never fits).
+  /** `df`'s rows as `InternalRow`s when it has at most `limit` of
+    * them: one bounded `limit(limit + 1)` collect, for a frame that is
+    * not checkpointed (a side input of a gated solve).
     */
-  def checkpointFits(df: DataFrame, limit: Long,
-      weight: InternalRow => Long): (DataFrame, Boolean) =
-    if (limit <= 0) (df.localCheckpoint(), false)
-    else {
-      val (ck, w) = checkpointAggregate(df, 0L)((a, r) => a + weight(r), _ + _)
-      (ck, w <= limit)
-    }
-
-  /** `df`'s local checkpoint, with its rows when it has at most `limit`
-    * of them ([[checkpointFits]] counting rows).
-    */
-  def checkpointUpTo(df: DataFrame, limit: Long): (DataFrame, Option[Array[Row]]) = {
-    val (ck, fits) = checkpointFits(df, limit, _ => 1L)
-    (ck, if (fits) Some(ck.collect()) else None)
-  }
-
-  /** `df`'s lazy local checkpoint, and a bound on its rows read off the
-    * cut itself. Under AQE, cutting a plan runs the shuffle stages below
-    * its final stage; when that stage reads nothing but them, the rows
-    * they wrote bound the rows of a final stage that does not multiply
-    * rows (a dedup, filter or projection: the caller's to know). `None`
-    * when there is no such bound (AQE off, as in a streaming query's
-    * micro-batches, or the final stage also scans or broadcasts). No
-    * job beyond the cut's own shuffle stages.
-    */
-  def checkpointRowBound(df: DataFrame): (DataFrame, Option[Long]) = {
-    val ck = df.localCheckpoint(eager = false)
-    val bound = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec =>
-        val finalStage = a.executedPlan match {
-          case r: ResultQueryStageExec => r.plan
-          case p => p
-        }
-        val rows = finalStage.collectLeaves().map {
-          case s: ShuffleQueryStageExec if s.isMaterialized => s.getRuntimeStatistics.rowCount
-          case _ => None
-        }
-        if (rows.forall(_.isDefined)) Some(rows.map(_.get.toLong).sum) else None
-      case _ => None
-    }
-    (ck, bound)
-  }
-
-  /** The rows of `ck`, a lazy local checkpoint with row bound `bound`
-    * ([[checkpointRowBound]]), when it has at most `limit` of them. A
-    * bound within `limit` costs one job, which fills and collects the
-    * checkpoint; a bound over it costs none (the rows are not probed,
-    * so a frame whose final stage shrinks it below `limit` counts as
-    * over). Without a bound, a counting job fills the checkpoint first.
-    * `limit <= 0` reads nothing.
-    */
-  def checkpointRowsUpTo(ck: DataFrame, bound: Option[Long],
-      limit: Long): Option[Array[InternalRow]] =
-    if (limit <= 0 || bound.exists(_ > limit)) None
-    else if (bound.isEmpty && ck.queryExecution.toRdd.count() > limit) None
-    else Some(internalRows(ck))
-
-  /** `df`'s rows, collected as `InternalRow`s (one job; a checkpoint is
-    * read from its blocks).
-    */
-  def internalRows(df: DataFrame): Array[InternalRow] =
-    df.queryExecution.executedPlan.executeCollect()
-
-  /** `df`'s rows when it has at most `limit` of them: one bounded
-    * `limit(limit + 1).collect()`, for a frame that is not
-    * checkpointed.
-    */
-  def rowsUpTo(df: DataFrame, limit: Long): Option[Array[Row]] = {
-    val rows = df.limit(bounded(limit)).collect()
-    if (rows.length <= limit) Some(rows) else None
-  }
-
-  /** [[rowsUpTo]] as `InternalRow`s. */
   def internalRowsUpTo(df: DataFrame, limit: Long): Option[Array[InternalRow]] = {
-    val rows = internalRows(df.limit(bounded(limit)))
+    val rows = df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
+      .queryExecution.executedPlan.executeCollect()
     if (rows.length <= limit) Some(rows) else None
   }
 
@@ -157,8 +164,6 @@ object DriverGate {
     */
   def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema).coalesce(1)
-
-  private def bounded(limit: Long): Int = math.min(limit, Int.MaxValue - 1L).toInt + 1
 
   /** The id types a driver solve may intern: integral or
     * (binary-collated) string, where Scala equality is Spark's join

@@ -34,14 +34,6 @@ private[graft] object VectorGate {
     */
   val Budget: Long = 1L << 22
 
-  /** knnGraph's bound on the seed pair work, Σ_tables Σ_buckets |b|²
-    * (self pairs included), computed from the bucket sizes before any
-    * scoring. With fixed planes it grows quadratically in the corpus,
-    * so a corpus within [[Budget]] can still need more candidate
-    * scoring than a driver solve should take on.
-    */
-  val PairWorkLimit: Long = 1L << 22
-
   /** The doubles an `(id, v, …)` row holds on the driver. */
   val weight: InternalRow => Long = r =>
     if (r.isNullAt(1)) 1L else math.max(1L, r.getArray(1).numElements().toLong)

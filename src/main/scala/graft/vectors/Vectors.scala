@@ -717,23 +717,25 @@ object Vectors {
     * round's two score joins (multi-consumer convention, like NearDup's
     * shingles).
     *
-    * Small corpora are solved on the driver ([[VectorGate]], behind the
-    * bounded-collect gate the graph operators share): when the vectors
-    * fit 2^22 doubles, the ids are non-NULL, distinct and integral or
-    * string, and the seed pair work Σ_tables Σ_buckets |b|² (from the
-    * bucket sizes, before any scoring) is at most 2^22, the relation is
+    * Small corpora are solved on the driver ([[VectorGate]], behind
+    * [[graft.util.DriverGate.gate]]): when the vectors fit 2^22
+    * doubles, the ids are non-NULL, distinct and integral or string,
+    * and the seed pair work Σ_tables Σ_buckets |b|² (from the bucket
+    * sizes, before any scoring) is at most 2^22, the relation is
     * collected once and the same seeding and rounds run there, with the
-    * same constants and tie-breaks. That costs two jobs (fill and
-    * measure the relation; collect it), where the distributed rounds
-    * launch a few per round, and the result is a frame over local rows.
-    * Above the gate the probe is the job that fills the relation, which
-    * the distributed path reads anyway.
+    * same constants and tie-breaks. The gate weighs the relation in
+    * doubles, so that costs two jobs (fill and weigh it; collect it),
+    * where the distributed rounds launch a few per round, and the
+    * result is a frame over local rows. Above the gate the weighing
+    * job fills the relation the distributed path reads anyway (none
+    * runs when a bound on the corpus' rows already exceeds the
+    * budget).
     */
   def knnGraph(corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, planes: Int, dim: Int,
       rounds: Int, tables: Int = 2, seed: Int = 42): DataFrame =
     knnGraphGated(corpus, idCol, vecCol, k, planes, dim, rounds, tables, seed,
-      VectorGate.Budget, VectorGate.PairWorkLimit)
+      VectorGate.Budget, DriverGate.PairWorkLimit)
 
   /** [[knnGraph]] behind a driver budget of `limit` doubles and a seed
     * pair-work bound of `pairLimit`; `limit = 0` forces the distributed
@@ -750,17 +752,15 @@ object Vectors {
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .withColumn("n", normCol($"v"))
     val idType = frame.schema("id").dataType
-    // the vector relation, filled and measured by the gate's one job;
-    // the distributed rounds read its blocks (each round's two score
-    // joins — the multi-consumer convention, like NearDup's shingles)
-    val (c, local) = Jobs.labeled(sc, "knn graph: gate") {
-      val (ck, fits) = DriverGate.checkpointFits(frame,
-        if (VectorGate.localIds(idType)) limit else 0L, VectorGate.weight)
-      (ck, if (!fits) None else VectorGate.Vecs.of(DriverGate.internalRows(ck), idType)
-        .flatMap(VectorGate.knnGraph(_, k,
-          (0 until tables).map(t => hyperplanes(planes, dim, seed + t)), rounds, pairLimit)))
+    // the vector relation, cut by the gate; the distributed rounds read
+    // its blocks (each round's two score joins — the multi-consumer
+    // convention, like NearDup's shingles)
+    val gated = DriverGate.gate(frame, if (VectorGate.localIds(idType)) limit else 0L,
+        "knn graph: gate", Some(VectorGate.weight)) { rows =>
+      VectorGate.Vecs.of(rows, idType).flatMap(VectorGate.knnGraph(_, k,
+        (0 until tables).map(t => hyperplanes(planes, dim, seed + t)), rounds, pairLimit))
     }
-    def topk(pairs: DataFrame): DataFrame = {
+    def topk(c: DataFrame, pairs: DataFrame): DataFrame = {
       // dst join first, src join last: the rank window partitions by
       // src — ending the join chain on src lets the window reuse the
       // join's partitioning when the joins shuffle (the layerEdges
@@ -776,13 +776,12 @@ object Vectors {
     }
     def out(g: DataFrame): DataFrame =
       g.select($"src".as("query_id"), $"rank", $"dst".as("neighbor_id"), $"cosine")
-    local match {
-      case Some(rows) =>
-        DriverGate.free(c)
+    gated match {
+      case Right(rows) =>
         // the distributed plan's schema, nullability included
         DriverGate.frame(spark, rows,
-          out(topk(c.select($"id".as("src"), $"id".as("dst")))).schema)
-      case None =>
+          out(topk(frame, frame.select($"id".as("src"), $"id".as("dst")))).schema)
+      case Left(c) =>
         // ONE projection computes every LSH table's bucket key (the r13
         // hnswTopK layerEdges shape): the hyperplane dot products are the
         // per-row cost, so computing all tables in one pass — lazily
@@ -802,7 +801,7 @@ object Vectors {
         // branches + the incumbent union) — without cutting lineage every
         // round, recomputation nests EXPONENTIALLY in `rounds`; same
         // per-round localCheckpoint as the ConnectedComponents loop
-        var g = Jobs.labeled(sc, "knn graph: seed")(topk(seedPairs.distinct()).localCheckpoint())
+        var g = Jobs.labeled(sc, "knn graph: seed")(topk(c, seedPairs.distinct()).localCheckpoint())
         for (r <- 1 to rounds) {
           val edges = g.select($"src", $"dst")
           val undirected = edges
@@ -812,7 +811,7 @@ object Vectors {
             .select(col("a.dst").as("src"), col("b.dst").as("dst"))
             .filter($"src" =!= $"dst")
           g = Jobs.labeled(sc, s"knn graph: round $r")(
-            topk(proposals.union(edges).distinct()).localCheckpoint())
+            topk(c, proposals.union(edges).distinct()).localCheckpoint())
         }
         // every reader of the vector relation ran inside the loop (the
         // final localCheckpoint above is eager), so free its blocks
@@ -875,10 +874,13 @@ object Vectors {
     *
     * A corpus and query set that together fit 2^22 doubles, with
     * non-NULL distinct ids of one integral or string type, are searched
-    * on the driver ([[VectorGate]], the gate [[knnGraph]] and the graph
-    * operators share): the layer-count aggregate also measures the
-    * corpus, one job collects it and a bounded `limit` collect reads
-    * the queries, and the same layers, edges and beam rounds run there.
+    * on the driver ([[VectorGate]]): the layer-count aggregate, which
+    * the distributed search needs anyway, also weighs the corpus
+    * ([[graft.util.DriverGate.checkpointAggregate]] instead of the
+    * shared [[graft.util.DriverGate.gate]], whose sizing job could not
+    * count the layers), one job collects it and a bounded `limit`
+    * collect reads the queries, and the same layers, edges and beam
+    * rounds run there.
     * The distributed search runs about nine shuffle rounds (entry +
     * per-layer edges/hops) of fixed job latency, which only AMORTIZE at
     * scale, where per-round data work dwarfs round latency.
@@ -1000,7 +1002,7 @@ object Vectors {
         qf.schema("query_id").dataType != idType) None
       else Jobs.labeled(sc, "hnsw: gate") {
         for {
-          vs <- VectorGate.Vecs.of(DriverGate.internalRows(c), idType)
+          vs <- VectorGate.Vecs.of(c.queryExecution.executedPlan.executeCollect(), idType)
           qrows <- DriverGate.internalRowsUpTo(qf, budget)
           if qrows.iterator.map(VectorGate.weight).sum <= budget
           qs <- VectorGate.Vecs.of(qrows, idType)

@@ -92,6 +92,23 @@ class ConnectedComponentsSpec extends SparkSpec {
       }
   }
 
+  test("binary ids agree across paths (the driver gate declines them)") {
+    // binary is no driver id type: the default gate must go distributed
+    // instead of casting the ids to Comparable
+    val e = Seq((Array[Byte](1), Array[Byte](2)), (Array[Byte](2), Array[Byte](3)),
+      (Array[Byte](9), Array[Byte](8))).toDF("a", "b")
+    val outs = Seq(
+      ConnectedComponents.labels(e, "a", "b"),
+      ConnectedComponents.labels(e, "a", "b", localEdgeLimit = 0),
+      ConnectedComponents.labels(e, "a", "b", localEdgeLimit = 0, algorithm = "star"))
+      .map(_.collect().map(r =>
+        r.getAs[Array[Byte]](0).toSeq -> r.getAs[Array[Byte]](1).toSeq).toMap)
+    val (one, two, three, eight, nine) =
+      (Seq[Byte](1), Seq[Byte](2), Seq[Byte](3), Seq[Byte](8), Seq[Byte](9))
+    outs.foreach(out => assert(out === Map(one -> one, two -> one, three -> one,
+      eight -> eight, nine -> eight)))
+  }
+
   test("star path agrees with union-find on random graphs") {
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 3) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.GatePaths.{agree, bothFail, isLocal}
+import graft.util.DriverGate
 import graft.vectors.{VectorGate, Vectors}
 
 /** `knnGraph` edge cases, each on BOTH paths — the driver solve (the
@@ -16,7 +17,7 @@ class KnnGraphSpec extends SparkSpec {
 
   /** `knnGraph` behind a gate of `lim` doubles and `pairLimit` seed pairs. */
   private def knnAt(corpus: DataFrame, k: Int, planes: Int, dim: Int, rounds: Int,
-      tables: Int = 2, pairLimit: Long = VectorGate.PairWorkLimit)(lim: Long): DataFrame =
+      tables: Int = 2, pairLimit: Long = DriverGate.PairWorkLimit)(lim: Long): DataFrame =
     Vectors.knnGraphGated(corpus, "vec_id", "embedding", k, planes, dim, rounds, tables, 42,
       lim, pairLimit)
 

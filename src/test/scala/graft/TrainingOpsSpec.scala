@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.textops.{NearDup, NearDupGate, TextAnalysis}
+import graft.textops.{NearDup, TextAnalysis}
 import graft.util.DriverGate
 
 class ShinglesSpec extends SparkSpec {
@@ -37,7 +37,7 @@ class NearDupSpec extends SparkSpec {
   /** `minhashLshPairs` (q17's parameters) behind a gate of `limit`
     * shingle rows and `pairLimit` pair work.
     */
-  private def lshAt(df: DataFrame, pairLimit: Long = NearDupGate.PairWorkLimit)(
+  private def lshAt(df: DataFrame, pairLimit: Long = DriverGate.PairWorkLimit)(
       limit: Long): DataFrame =
     NearDup.minhashLshPairsGated(df, "doc_id", "text", 3, 16, 4, 0.5, limit, pairLimit)
 
@@ -508,7 +508,7 @@ class VectorsSpec extends SparkSpec {
           Vectors.knnGraph(emb, "vec_id", "embedding",
             k = 3, planes = 3, dim = 64, rounds = rounds, tables = 3),
           Vectors.knnGraphGated(emb, "vec_id", "embedding", k = 3, planes = 3, dim = 64,
-            rounds = rounds, tables = 3, seed = 42, 0L, VectorGate.PairWorkLimit))
+            rounds = rounds, tables = 3, seed = 42, 0L, DriverGate.PairWorkLimit))
         .map(r => (r.getLong(0), r.getLong(2))).toSet
       g.intersect(brute).size.toDouble / brute.size
     }
@@ -866,7 +866,7 @@ class VectorsSpec extends SparkSpec {
     val g = GatePaths.agree(
         Vectors.knnGraph(emb, "vec_id", "embedding", k = 3, planes = 2, dim = 64, rounds = 1),
         Vectors.knnGraphGated(emb, "vec_id", "embedding", k = 3, planes = 2, dim = 64,
-          rounds = 1, tables = 2, seed = 42, 0L, VectorGate.PairWorkLimit))
+          rounds = 1, tables = 2, seed = 42, 0L, DriverGate.PairWorkLimit))
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     g.foreach { case (q, _, n) => assert(q != n) }
     g.groupBy(_._1).values.foreach { rs =>
@@ -1625,7 +1625,7 @@ class MultimodalSpec extends SparkSpec {
           k = 2, planes = 2, dim = 64, rounds = 1, tables = 2),
         graft.vectors.Vectors.knnGraphGated(emb, "media_id", "embedding",
           k = 2, planes = 2, dim = 64, rounds = 1, tables = 2, seed = 42,
-          0L, graft.vectors.VectorGate.PairWorkLimit))
+          0L, graft.util.DriverGate.PairWorkLimit))
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     val top = g.filter(r => r._1 == 9999L && r._2 == 1).head
     assert(top._3 == media.head.media_id && top._4 == 1.0, s"got $top")
