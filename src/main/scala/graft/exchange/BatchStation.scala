@@ -87,8 +87,6 @@ object BatchStation {
     val Cancelled = "cancelled"
     val All: Seq[String] = Seq(Validating, Failed, InProgress, Finalizing,
       Completed, Expired, Cancelling, Cancelled)
-    /** `is_processed_by_openai` — the API is done with the batch. */
-    val ApiTerminal: Set[String] = Set(Completed, Failed, Expired)
     /** Station failure family → unpair + 30-min cooldown
       * (`batch_file_station.py:365-377`).
       */

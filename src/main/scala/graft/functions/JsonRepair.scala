@@ -2,9 +2,6 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** LLM-response JSON repair (reference `core/src/core/utils/str_util.py:8-133`,
   * behavior pinned by `core/tests/test_str_util.py`).
   *
@@ -94,9 +91,4 @@ object JsonRepair {
     val fixed = out.toString
     if (parses(fixed)) fixed else cleaned
   }
-
-  /** Column form for response-parse pipelines. */
-  val repairUdf = udf((s: String) => repair(s))
-
-  def repairCol(c: Column): Column = repairUdf(c)
 }

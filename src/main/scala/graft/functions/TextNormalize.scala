@@ -33,8 +33,6 @@ object TextNormalize {
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC)
 
   private val nfcUdf = udf(nfc _)
-  private val nfkcUdf = udf(nfkc _)
 
   def nfcCol(c: Column): Column = nfcUdf(c)
-  def nfkcCol(c: Column): Column = nfkcUdf(c)
 }

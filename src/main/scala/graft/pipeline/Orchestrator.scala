@@ -22,8 +22,9 @@ import graft.vocab.{BruteSearch, Concept}
   *     locally (T16) — all companies;
   *  2. GATE: the ground-truth-overlaid `is_manufacturer` decision
   *     (human answer wins — `new_extract_queue_bot.py:439-455`); only
-  *     passing companies get content extraction (products keywords +
-  *     concept fields with brute/search/mapping).
+  *     passing companies get content extraction: each `conceptFields`
+  *     strategy runs brute/search/mapping. No products-keyword (T25)
+  *     path runs here.
   *
   * NB the reference's deferred binary reconcile gates on `mfg.addresses`
   * instead of the binary field (`binary_reconcile_node.py:46`, flagged

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** S6 — JSONL batch-file packing under three simultaneous limits
@@ -69,11 +69,4 @@ object Packer {
       }
     }(Encoders.row(outSchema))
   }
-
-  /** Smallest-work-first ordering used by the reference's batch planner
-    * (T30): saturates files with many small documents and keeps
-    * stragglers at the tail.
-    */
-  def smallFirst(df: DataFrame, tokensCol: Column): DataFrame =
-    df.sortWithinPartitions(tokensCol.asc)
 }

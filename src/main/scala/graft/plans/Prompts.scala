@@ -33,7 +33,7 @@ object PromptRegistry {
     "mapping_process_caps", "mapping_material_caps",
     "email_extraction", "unknown_to_known_mapping")
 
-  /** Deterministic fixture registry for tests/examples. */
+  /** Deterministic fixture registry for tests. */
   def fixture(versionId: String = "v1"): PromptRegistry =
     new PromptRegistry(ReferenceNames.map(n => Prompt(n, s"<$n prompt>", versionId)))
 }

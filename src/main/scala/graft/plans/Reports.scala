@@ -3,8 +3,9 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** S10 — CSV report sinks (reference orphan-request reports,
-  * `data_etl_app/src/data_etl_app/services/batch_file_generator.py:73-109,203-208`).
+/** S10 — the reference's CSV orphan-request reports
+  * (`data_etl_app/src/data_etl_app/services/batch_file_generator.py:73-109,203-208`)
+  * as frames; writing one out is the caller's `write.csv`.
   */
 object Reports {
 
@@ -14,10 +15,4 @@ object Reports {
     */
   def orphanRequests(ledger: DataFrame, expected: DataFrame): DataFrame =
     ledger.join(expected.select(col("custom_id")), Seq("custom_id"), "left_anti")
-
-  /** Write a report DataFrame as a single CSV with header (reports are
-    * human-scale; the coalesce is intentional).
-    */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 }

@@ -1,8 +1,5 @@
 package graft.reconcile
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** A postal address (reference `core/src/core/models/db/manufacturer.py:18-37`).
   * `baseHash` (city-state-country) is the merge key.
   */
@@ -83,25 +80,5 @@ object AddressMerge {
       }
     }
     buf.toVector
-  }
-
-  /** The one genuine custom UDAF in the engine (SURVEY.md §7.4): an
-    * order-sensitive merge. Partial buffers accumulate (seq, address)
-    * pairs — commutative and associative — and `finish` sorts by seq and
-    * runs the sequential dedupe, so distributed aggregation cannot
-    * reorder the fold. Per-company groups are tiny (a handful of
-    * addresses), so the buffered list is bounded.
-    */
-  final class DedupeAggregator(lineUnionQuirk: Boolean = true)
-      extends Aggregator[(Int, Address), Seq[(Int, Address)], Seq[Address]] {
-    override def zero: Seq[(Int, Address)] = Nil
-    override def reduce(b: Seq[(Int, Address)], a: (Int, Address)): Seq[(Int, Address)] = b :+ a
-    override def merge(x: Seq[(Int, Address)], y: Seq[(Int, Address)]): Seq[(Int, Address)] = x ++ y
-    override def finish(r: Seq[(Int, Address)]): Seq[Address] =
-      dedupe(r.sortBy(_._1).map(_._2), lineUnionQuirk)
-    override def bufferEncoder: Encoder[Seq[(Int, Address)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Int, Address)]]()
-    override def outputEncoder: Encoder[Seq[Address]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Address]]()
   }
 }

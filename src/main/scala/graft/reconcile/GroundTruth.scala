@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *    `(results − remove) ∪ keys(add)`;
   *  - '''keywords''': ALL logs fold in order —
   *    `((results − remove₁) ∪ add₁) − remove₂ ∪ add₂ …`;
-  *  - '''binary''': the human answer, when present, wins.
+  *  - '''binary''': the human answer, when present, wins (applied
+  *    inline at `Orchestrator.process`'s gate as `coalesce(human, machine)`).
   */
 object GroundTruth {
 
@@ -36,8 +37,4 @@ object GroundTruth {
       .otherwise(array_union(
         array_except(coalesce(results, array()), coalesce(remove, array())),
         coalesce(add, array())))
-
-  /** Binary decision precedence: human overrides machine. */
-  def binaryDecision(machineAnswer: Column, humanAnswer: Column): Column =
-    coalesce(humanAnswer, machineAnswer)
 }

@@ -114,13 +114,4 @@ object Reconcile {
     */
   def reconcileKeywords(chunkResponses: Seq[String]): Seq[String] =
     chunkResponses.flatMap(Parsers.parseSearchResponse).distinct.sorted
-
-  def reconcileKeywordsDs(
-      responses: Dataset[(String, String)]): Dataset[(String, Seq[String])] = {
-    val spark = responses.sparkSession
-    import spark.implicits._
-    responses.groupByKey(_._1).mapGroups { (etld1, rows) =>
-      (etld1, reconcileKeywords(rows.map(_._2).toSeq))
-    }
-  }
 }

@@ -206,12 +206,6 @@ object TextAnalysis {
     hashes.sliding(w).map(_.min).toVector.distinct
   }
 
-  /** Fingerprint sketch as a column (UDF: the rolling scan is inherently
-    * sequential per document; documents parallelize).
-    */
-  def fingerprintUdf(window: Int, winnowWidth: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String) => winnow(rollingHashes(s, window), winnowWidth))
-
   // ---- PII redaction -----------------------------------------------------
 
   /** Email addresses (case-insensitive, the practical subset: no quoted

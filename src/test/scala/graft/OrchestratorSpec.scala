@@ -191,6 +191,70 @@ class OrchestratorSpec extends SparkSpec {
     assert(rs("unknowns.example").getAs[scala.collection.Seq[String]]("certificates").toSeq ==
       Seq("ISO 9001"))
   }
+
+  test("end-to-end slice: shred, dedup, chunk, search, frontier, pack, exchange, reconcile, triples") {
+    import org.apache.spark.sql.functions._
+    import graft.chunk.Chunker
+    import graft.emit.{MfgOut, Triples}
+    import graft.ingest.{Blocks, CorpusDoc, Dedup}
+    import graft.plans.{Ledger, Packer, RequestBlob}
+    import graft.reconcile.{ChunkEvidence, Reconcile}
+    import graft.vocab.BruteSearch
+    // SURVEY §7.3: one manufacturer's pages to its certificates triples,
+    // with a mock exchange standing in for the LLM
+    val certs = Seq(
+      Concept("certificate", "ISO 9001", "urn:c/iso9001", Seq("ISO9001"), Nil),
+      Concept("certificate", "AS9100", "urn:c/as9100", Nil, Nil))
+    val pages = Seq(
+      "We are ISO 9001 certified since 1999.\nPrecision parts.",
+      "Our AS9100 aerospace program.\nQuality first.",
+      "Contact us for quotes.\nFamily owned and iso9001 certified shop.")
+    val combined = pages.zipWithIndex.map { case (b, i) =>
+      Blocks.format(s"https://acme.example/p$i", b)
+    }.mkString
+    val deduped = Dedup.dedupCorpus(
+      Blocks.shred(Seq(CorpusDoc("acme.example", "v1", combined)).toDS()))
+    val docs = deduped.groupByKey(p => (p.etld1, p.version_id))
+      .mapGroups((k, it) => (k._1, k._2, it.toSeq.sortBy(_.page_seq).map(_.body).mkString("\n")))
+    // a tiny token budget forces more than one chunk
+    val chunks = Chunker.chunkDocs(docs, ChunkingStrat("certificates", 10, 0.0, 25), WhitespaceTokenizer)
+    val withBrute = BruteSearch.searchColumn(chunks.toDF(), "text", certs, "brute")
+    val searchId = concat_ws(">", $"etld1", lit("certificates"), lit("llm_search"), lit("chunk"),
+      concat($"chunk_start", lit(":"), $"chunk_end"))
+    val searchReqs = withBrute.select(searchId.as("custom_id"), $"text", $"tokens")
+      .withColumn("body_json", RequestBlob.bodyJson($"custom_id", "gpt-4o-mini",
+        lit("<search prompt>"), $"text", 7500))
+      .withColumn("input_tokens", $"tokens")
+    val frontier = Ledger.missingRequests(searchReqs,
+      Seq.empty[(String, String, String)].toDF("custom_id", "batch_id", "response_json"))
+    val nChunks = withBrute.count()
+    assert(nChunks > 1 && frontier.count() == nChunks)
+    val packed = Packer.pack(frontier.select("custom_id", "body_json", "input_tokens")
+      .coalesce(1), Packer.PackLimits(2, 1000000, 1000000))
+      .groupBy("file_id").count().as[(String, Long)].collect()
+    assert(packed.map(_._2).sum == nChunks && packed.forall(_._2 <= 2))
+    val responses = new MockExchange((id, body) =>
+      if (!id.contains("llm_search")) null
+      else if (body.contains("AS9100")) """["AS9100"]"""
+      else if (body.contains("iso9001")) """["iso9001 certified", "family owned"]"""
+      else """["ISO 9001"]""").execute(frontier)
+    val evidence = withBrute.select($"etld1", lit("certificates").as("field_type"),
+        $"chunk_start", $"chunk_end", $"brute", searchId.as("custom_id"))
+      .join(responses, "custom_id")
+      .select($"etld1", $"field_type", $"chunk_start", $"chunk_end", $"brute",
+        Ledger.responseContent($"response_json").as("search_response"))
+      .as[ChunkEvidence]
+    val mapping = Seq(("acme.example", "certificates",
+      """{"iso9001 certified": "ISO 9001", "family owned": null}""")).toDS()
+    val reconciled = Reconcile.reconcileConceptsDs(certs, evidence, mapping).collect()
+    assert(reconciled.length == 1)
+    val found = reconciled.head.result.results
+    assert(found.toSet == Set("ISO 9001", "AS9100"))
+    val mfg = MfgOut("acme.example", "Acme", "https://acme.example",
+      None, None, Nil, null, Nil, found, Nil, Nil, Nil, Nil)
+    val (valid, _, issues) = Triples.validate(Triples.emit(Seq(mfg).toDS(), certs).collect().toSeq)
+    assert(valid, issues.mkString("; "))
+  }
 }
 
 object OrchestratorSpec {

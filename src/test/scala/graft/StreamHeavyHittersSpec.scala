@@ -127,10 +127,8 @@ class StreamHeavyHittersSpec extends SparkSpec {
   test("grouped session: per-group guarantees, candidates superset per-group heavy hitters") {
     val rows = groupedRows(17)
     val session = new StreamHeavyHitters.GroupedHhSession("grp", "item", Capacity)
-    val rnd = new scala.util.Random(5)
-    rnd.shuffle(rows).grouped(700).foreach { b =>
-      session.ingest(b.toDF("grp", "item"))
-    }
+    val batches = new scala.util.Random(5).shuffle(rows).grouped(700).toSeq
+    batches.foreach(b => session.ingest(b.toDF("grp", "item")))
     val exactByGroup = rows.groupBy(_._1).map { case (g, rs) => g -> exactCounts(rs.map(_._2)) }
     // never overcount, per group
     session.residuals.foreach { case (g, s) =>
@@ -138,6 +136,27 @@ class StreamHeavyHittersSpec extends SparkSpec {
       assert(s.size <= Capacity)
     }
     assert(session.groupTotals === Map("g1" -> 3000L, "g2" -> 400L, "g3" -> 30L))
+    // the stated Misra-Gries bound, per group: true count − errorBound ≤
+    // residual, an absent item's true count ≤ errorBound, and
+    // errorBound ≤ total/(capacity+1). g1's 40 items fit Capacity, so a
+    // capacity-8 session over the same batches makes the prunes run.
+    val pruned = new StreamHeavyHitters.GroupedHhSession("grp", "item", 8)
+    batches.foreach(b => pruned.ingest(b.toDF("grp", "item")))
+    assert(pruned.errorBounds("g1") > 0)
+    Seq(session -> Capacity, pruned -> 8).foreach { case (s, cap) =>
+      assert(s.errorBounds.keySet === exactByGroup.keySet)
+      exactByGroup.foreach { case (g, exact) =>
+        val err = s.errorBounds(g)
+        val res = s.residuals.getOrElse(g, Map.empty)
+        exact.foreach { case (k, c) =>
+          res.get(k) match {
+            case Some(r) => assert(c - err <= r, s"$cap: $g/$k undercounts past the bound")
+            case None => assert(c <= err, s"$cap: $g/$k dropped above the bound")
+          }
+        }
+        assert(err * (cap + 1) <= s.groupTotals(g), s"$cap: $g bound above total/(capacity+1)")
+      }
+    }
     // candidates superset the true per-group heavy hitters (g3's 100%
     // item included)
     val cand = session.candidates(SupportPpm)
